@@ -1242,18 +1242,6 @@ def lcc_inverse(x, y, lat_0: float, lat_1: float, lat_2: float | None = None,
     return wrap_longitude(lon), lat
 
 
-def lcc_sql(lon: str, lat: str, lat_0: float, lat_1: float,
-            lat_2: float | None = None, lon_0: float = 0.0,
-            radius: float = R_EARTH) -> tuple:
-    n, rf, rho0 = lcc_constants(lat_0, lat_1, lat_2, radius)
-    rho = f"({rf!r} / pow(tan(pi() / 4 + radians({lat}) / 2), {n!r}))"
-    th = f"({n!r} * radians({lon} - {lon_0!r}))"
-    return (
-        f"({rho} * sin({th}))",
-        f"({rho0!r} - {rho} * cos({th}))",
-    )
-
-
 def lcc_inv_sql(x: str, y: str, lat_0: float, lat_1: float,
                 lat_2: float | None = None, lon_0: float = 0.0,
                 radius: float = R_EARTH) -> tuple:
@@ -1467,26 +1455,6 @@ def geos_inverse(x, y, h: float, lon_0: float = 0.0, sweep: str = "y",
     return (
         F.when(det >= 0.0, wrap_longitude(lon)).otherwise(null),
         F.when(det >= 0.0, lat).otherwise(null),
-    )
-
-
-def geos_sql(lon: str, lat: str, h: float, lon_0: float = 0.0,
-             sweep: str = "y", radius: float = R_EARTH) -> tuple:
-    rg = 1.0 + h / radius
-    vx = f"(cos(radians({lat})) * cos(radians({lon} - {lon_0!r})))"
-    vy = f"(cos(radians({lat})) * sin(radians({lon} - {lon_0!r})))"
-    vz = f"(sin(radians({lat})))"
-    vis = f"(({rg!r} - {vx}) * {vx} - {vy} * {vy} - {vz} * {vz} >= 0.0)"
-    tmp = f"({rg!r} - {vx})"
-    if sweep == "x":
-        xx = f"({h!r} * atan({vy} / sqrt({vz} * {vz} + {tmp} * {tmp})))"
-        yy = f"({h!r} * atan({vz} / {tmp}))"
-    else:
-        xx = f"({h!r} * atan({vy} / {tmp}))"
-        yy = f"({h!r} * atan({vz} / sqrt({vy} * {vy} + {tmp} * {tmp})))"
-    return (
-        f"(CASE WHEN {vis} THEN {xx} END)",
-        f"(CASE WHEN {vis} THEN {yy} END)",
     )
 
 

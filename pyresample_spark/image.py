@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyresample_spark.geometry import AreaDefinition
+from pyresample_spark.operators.crs import grid_lonlat
 from pyresample_spark.operators.ids import with_compact_id
 from pyresample_spark.plans.planner import create_resampler, register_resampler
 
@@ -109,23 +110,6 @@ def choose_method(img: GeoImage, target: AreaDefinition) -> str:
     )
 
 
-def _tgt_points(spark, target: AreaDefinition) -> DataFrame:
-    """Target pixel centers as (tgt_id, lon, lat) — the probe side of
-    every kNN-family resampler. grid() yields PROJECTED cx/cy; they are
-    inverted to lon/lat through the analytic CRS registry (identity for
-    longlat). A non-analytic target CRS raises NotImplementedError
-    (operators/crs.py) rather than silently treating meters as
-    degrees."""
-    from pyresample_spark.operators.crs import inverse
-
-    lon, lat = inverse(target.crs)("cx", "cy")
-    return target.grid(spark).select(
-        F.col("cell_id").alias("tgt_id"),
-        lon.alias("lon"),
-        lat.alias("lat"),
-    )
-
-
 def _src_keyed(img: GeoImage, key_col: str | None = None) -> DataFrame:
     """Source frame with a unique BIGINT ``src_id`` — WITHOUT
     materialization when a natural key exists (VERDICT r3 item 6):
@@ -197,8 +181,9 @@ def _nearest(
     from pyresample_spark.operators.knn import knn_join
 
     src = _src_keyed(img, key_col)
+    tgt = grid_lonlat(target, img.df.sparkSession, "tgt_id")
     nn = knn_join(
-        src, _tgt_points(img.df.sparkSession, target), radius_m, k=1,
+        src, tgt, radius_m, k=1,
         neighbor_scheme="shift2" if approx else "c27",
     )
     joined = nn.join(src.select("src_id", value_col), "src_id")
@@ -237,9 +222,9 @@ def _gauss(
     # the struct-sort top-k has no packed-id range precondition, so any
     # caller-supplied natural key works unchanged
     src = _src_keyed(img, key_col)
+    tgt = grid_lonlat(target, img.df.sparkSession, "tgt_id")
     sums = knn_gauss_fold(
-        src, _tgt_points(img.df.sparkSession, target), radius_m,
-        k=k, sigma=sigma, value_col=value_col,
+        src, tgt, radius_m, k=k, sigma=sigma, value_col=value_col,
         neighbor_scheme="shift2" if approx else "c27",
     )
     return sums.select(
@@ -278,7 +263,7 @@ def _bilinear(
     src = _src_keyed(img, key_col)
     out = bilinear_irregular(
         src.select("src_id", "lon", "lat", F.col(value_col).alias("value")),
-        _tgt_points(img.df.sparkSession, target),
+        grid_lonlat(target, img.df.sparkSession, "tgt_id"),
         radius_m,
         neighbor_scheme="shift2" if approx else "c27",
     )

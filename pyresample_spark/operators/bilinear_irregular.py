@@ -8,16 +8,22 @@ with the x1 → x2 → −c/b fallback chain, _solve_another_fractional_
 distance :452-470), interpolation (_resample :634-642:
 p1(1−s)(1−t) + p2·s(1−t) + p3(1−s)t + p4·s·t, corners UL,UR,LL,LR).
 
-Spark-first (round 6 plan): candidates come from the cell-bucketed
-join core (operators/knn.py _radius_pairs) with the source lon/lat/
-value riding the build side; the top-k set is a sorted collect_list
-slice; the per-quadrant corner pick is a ``filter()`` over that
-in-row array; and the closed-form (t, s) solve — the reference's full
-irregular → uprights-parallel → parallelogram fallback chain — is ONE
-let-bound column expression (``_ts_chain_expr``). No Python anywhere
-in the production plan; the original reference-shaped Arrow kernel is
-kept as :func:`bilinear_irregular_pandas` and row-for-row equality is
-pytest-enforced. The DuckDB oracle replays candidates → quadrants →
+Spark-first: candidates come from the cell-bucketed join core
+(operators/knn.py _radius_pairs) with the source lon/lat/value riding
+the build side and the target lon/lat riding the probe explode. The
+exact neighbor schemes pick corners with a narrow sort (a packed
+(dist_mm, src_id) key, a row_number top-k cut, one min/min_by
+aggregate per quadrant); the approximate shift2 scheme keeps a sorted
+collect_set slice and a per-quadrant ``filter()`` over it. The
+closed-form (t, s) solve — the reference's full irregular →
+uprights-parallel → parallelogram fallback chain — runs as staged
+codegen'd projects behind Generate barriers (``_ts_chain_staged``).
+No Python anywhere in the production plan; the original
+reference-shaped Arrow kernel is kept as
+:func:`bilinear_irregular_pandas` and row-for-row equality is
+pytest-enforced. ``_ts_chain_expr`` is the same chain as one
+let-bound expression, used only by tools/probe_bilinear_stages.py.
+The DuckDB oracle replays candidates → quadrants →
 corners → quadratic → interpolation from the same formula texts.
 Determinism: corner pick tie-breaks by (dist_mm, src_id); divisions
 are try_divide on Spark (NULL on zero) and bare ``/`` on DuckDB
@@ -40,6 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyresample_spark.functions.exprs import generate_barrier
 from pyresample_spark.operators.knn import chord_length, knn_join
 
 OUT_SCHEMA = (
@@ -413,25 +420,18 @@ def _qualify(expr: str, mapping: dict) -> str:
 
 def _barrier_stage(df: DataFrame, keep: list, named_exprs: list,
                    alias: str, mapping: dict | None = None) -> DataFrame:
-    """One solve stage materialized behind a Generate barrier:
-    ``explode(array(named_struct(...)))`` of a one-element array is
-    row-preserving, keeps every stage a plain codegen'd Project
-    (no higher-order functions), and — because generator output cannot
-    be substituted below its Generate — stops both CollapseProject's
-    exponential alias expansion (the reason the chain was previously
-    one let-bound interpreted expression; see SNIPPETS 'let_expr') and
-    predicate-pushdown re-evaluation.
+    """One solve stage behind a Generate barrier
+    (functions/exprs.py :func:`generate_barrier`): every stage stays a
+    plain codegen'd Project, CollapseProject cannot inline one stage's
+    aliases into the next, and pushed filters cannot re-run the chain.
 
-    r18: ONE selectExpr per stage — prior-stage fields are consumed
-    through ``mapping``-qualified struct references instead of a
-    second flatten select (every transformation call eagerly
-    re-analyzes the whole accumulated plan, so the 7 flatten selects
-    were ~0.3 s of driver build time per query build)."""
-    struct_items = ", ".join(
-        f"'{n}', {_qualify(e, mapping or {})}" for n, e in named_exprs
-    )
-    return df.selectExpr(
-        *keep, f"explode(array(named_struct({struct_items}))) AS {alias}"
+    ONE selectExpr per stage: prior-stage fields are consumed through
+    ``mapping``-qualified struct references instead of a second
+    flatten select (every transformation call eagerly re-analyzes the
+    whole accumulated plan)."""
+    return generate_barrier(
+        df, keep,
+        [(n, _qualify(e, mapping or {})) for n, e in named_exprs], alias,
     )
 
 
@@ -544,14 +544,11 @@ def _ts_chain_staged(wide: DataFrame) -> DataFrame:
         " WHEN s_up IS NOT NULL AND t_up IS NOT NULL THEN s_up"
         " ELSE s_par END", m_ps,
     )
-    s7 = s6.selectExpr(
-        *ids,
-        f"explode(array(named_struct("
-        f"'t', {tf}, 's', {sf}, 'v',"
-        f" v1 * (1.0 - {sf}) * (1.0 - {tf}) + v2 * {sf} * (1.0 - {tf})"
-        f" + v3 * (1.0 - {sf}) * {tf} + v4 * {sf} * {tf}))) AS r",
-    )
-    return s7
+    return generate_barrier(s6, ids, [
+        ("t", tf), ("s", sf),
+        ("v", f"v1 * (1.0 - {sf}) * (1.0 - {tf}) + v2 * {sf} * (1.0 - {tf})"
+              f" + v3 * (1.0 - {sf}) * {tf} + v4 * {sf} * {tf}"),
+    ], "r")
 
 
 def bilinear_irregular(
@@ -564,25 +561,25 @@ def bilinear_irregular(
     """src: (src_id, lon, lat, value); tgt: (tgt_id, lon, lat) →
     (tgt_id, 4 corner ids, t, s, bilinear_value).
 
-    FUSED plan (round 6; replaces the per-target ``applyInPandas``
-    kernel, kept as :func:`bilinear_irregular_pandas`): the value and
-    lon/lat columns ride the cell-join candidates, the top-k set is
-    one sorted collect_list slice (the knn_join k>1 idiom — an
-    ObjectHashAggregate, no window sort), the per-quadrant corner pick
-    is ``filter(ks, quadrant)[1]`` over the already-sorted in-row
-    array, and the closed-form (t, s) chain runs as ONE let-bound
-    column expression (:func:`_ts_chain_expr`). One shuffle (the cell
-    equi-join) + one aggregation exchange; no Python anywhere in the
-    plan — row-for-row equal to the pandas kernel (tested) and the
-    DuckDB oracle (parity suite).
+    FUSED plan, no Python (the per-target ``applyInPandas`` kernel is
+    kept as :func:`bilinear_irregular_pandas`, row-for-row equal in
+    the tests; the DuckDB oracle matches in the parity suite):
 
-    The target's own lon/lat are needed only POST-aggregation (the
-    quadrant filter and the (t, s) solve run on the per-target row),
-    so they hash-join back from the 1×-sized target table instead of
-    riding every 27×-exploded probe row and candidate pair — 16 fewer
-    bytes on the widest exchanges for one cheap equi-join of rows the
-    agg is already partitioned by. Measured at sf0.1: 1.81 → 1.63 s
-    median, identical rows (round 8 A/B).
+    1. candidates: the shared cell join, with the source lon/lat/value
+       on the build side and the target lon/lat (``xx``/``yy``) on the
+       probe explode in both topologies (broadcast source: the target
+       is pre-partitioned by tgt_id, so no pair-level exchange
+       follows; shuffle: one cell-join exchange);
+    2. exact schemes: the strict-sign quadrant is computed per pair,
+       the pairs are cut to the top-k by one packed (dist_mm, src_id)
+       key, and one min/min_by hash aggregate picks the nearest
+       candidate per quadrant and pivots the four corners; the
+       target's xx/yy re-attach afterwards by joining the ≤|tgt|-row
+       corner table to the target table. shift2: a sorted
+       ``collect_set`` slice per target and a per-quadrant ``filter()``
+       over it, behind a Generate barrier;
+    3. the (t, s) solve and the interpolation run as staged codegen'd
+       projects behind Generate barriers (:func:`_ts_chain_staged`).
 
     ``neighbor_scheme`` passes through to the shared cell join
     (:func:`~pyresample_spark.operators.knn._radius_pairs`):
@@ -662,14 +659,10 @@ def bilinear_irregular(
         )
         # picks materialized as GENERATOR OUTPUT — see the barrier
         # rationale below
-        pick_struct = ", ".join(
-            f"'{name}', try_element_at(filter(ks, x -> {cond}), 1)"
+        corners = generate_barrier(g, ["tgt_id", "xx", "yy"], [
+            (name, f"try_element_at(filter(ks, x -> {cond}), 1)")
             for name, cond in QUAD_CONDS
-        )
-        corners = g.selectExpr(
-            "tgt_id", "xx", "yy",
-            f"explode(array(named_struct({pick_struct}))) AS pk",
-        ).filter(
+        ], "pk").filter(
             "pk.p1 IS NOT NULL AND pk.p2 IS NOT NULL "
             "AND pk.p3 IS NOT NULL AND pk.p4 IS NOT NULL"
         )

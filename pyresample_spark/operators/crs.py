@@ -52,6 +52,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pyresample_spark.functions.exprs import generate_barrier
 from pyresample_spark.functions.geo import (
     R_EARTH,
     aeqd_inverse,
@@ -1228,6 +1229,27 @@ def datum_shift_between(src_crs: str, dst_crs: str):
     return lambda lon, lat: _dat.datum_shift(lon, lat, *specs)
 
 
+def grid_lonlat(area, spark, id_col: str = "cell_id"):
+    """(id_col, lon, lat) of ``area``'s pixel centers — the probe side
+    of every kNN-family resampler and the start of the grid-shift
+    regrid: the projected grid() cx/cy inverted through the analytic
+    registry (a non-analytic CRS raises NotImplementedError rather
+    than silently treating meters as degrees). A non-identity inverse
+    is materialized behind a Generate barrier, so filters and join
+    keys downstream read the lon/lat columns instead of re-running
+    the inverse per pixel; longlat areas (the inverse hands back
+    cx/cy themselves) keep a plain projection."""
+    cx, cy = F.col("cx"), F.col("cy")
+    lon, lat = inverse(area.crs)(cx, cy)
+    pid = F.col("cell_id").alias(id_col)
+    grid = area.grid(spark)
+    if lon is cx and lat is cy:
+        return grid.select(pid, lon.alias("lon"), lat.alias("lat"))
+    return generate_barrier(
+        grid, [pid], [("lon", lon), ("lat", lat)], "ll"
+    ).select(id_col, "ll.lon", "ll.lat")
+
+
 def regrid_nearest(tgt_area, src_area, src_img, value_col: str = "value"):
     """Nearest-neighbor regrid between ANY two analytic-CRS areas:
     generate the target grid, invert its (x, y) to lon/lat, forward
@@ -1237,17 +1259,16 @@ def regrid_nearest(tgt_area, src_area, src_img, value_col: str = "value"):
     Returns (cell_id, src_row, src_col, src_value); one broadcast/hash
     join, no UDF, whole plan codegen'd.
     """
-    inv = inverse(tgt_area.crs)
-    tgt = tgt_area.grid(src_img.sparkSession)
-    lon, lat = inv("cx", "cy")
-    t = tgt.select("cell_id", lon.alias("lon"), lat.alias("lat"))
+    spark = src_img.sparkSession
     gs = gridshift_pipeline(tgt_area.crs, src_area.crs)
     if gs is not None:
         # NTv2 grid-shift datum path (NAD27 & friends): bilinear
         # broadcast-join shifts, then the Column forward — shifted
         # lon/lat come out of a join so the forward's let chain reads
-        # plain attributes (no CollapseProject re-inlining)
-        t = _apply_gridshift_pipeline(t, gs)
+        # plain attributes (no CollapseProject re-inlining). The grid
+        # legs' bbox filters and lookup keys read the target lon/lat,
+        # so the inverse sits behind its own barrier.
+        t = _apply_gridshift_pipeline(grid_lonlat(tgt_area, spark), gs)
         fwd = forward(src_area.crs)
         sx, sy = fwd("lon", "lat")
         src_row = F.floor(F.round(
@@ -1256,6 +1277,9 @@ def regrid_nearest(tgt_area, src_area, src_img, value_col: str = "value"):
             (sx - F.lit(src_area.area_extent[0])) / src_area.pixel_size_x, 9))
         return _regrid_gather(t, src_row, src_col, src_area, src_img,
                               value_col)
+    lon, lat = inverse(tgt_area.crs)("cx", "cy")
+    t = tgt_area.grid(spark).select(
+        "cell_id", lon.alias("lon"), lat.alias("lat"))
     specs = datum_specs_between(tgt_area.crs, src_area.crs)
     fsql = forward_sql(src_area.crs) if specs is not None else None
     if specs is not None and fsql is not None:
@@ -1301,12 +1325,13 @@ def regrid_nearest(tgt_area, src_area, src_img, value_col: str = "value"):
 def _regrid_gather(t, src_row, src_col, src_area, src_img,
                    value_col: str = "value"):
     """Shared regrid tail: project (cell_id, src_row, src_col), bound
-    to the source raster, gather values by equi-join."""
-    t = t.select(
-        "cell_id",
-        src_row.alias("src_row"),
-        src_col.alias("src_col"),
-    ).filter(
+    to the source raster, gather values by equi-join. The pixel index
+    is materialized behind a Generate barrier, so the bounds filter
+    and the join's inferred filters read it instead of re-running the
+    CRS math (functions/exprs.py generate_barrier)."""
+    t = generate_barrier(
+        t, ["cell_id"], [("src_row", src_row), ("src_col", src_col)], "px"
+    ).select("cell_id", "px.src_row", "px.src_col").filter(
         (F.col("src_row") >= 0)
         & (F.col("src_row") <= src_area.height - 1)
         & (F.col("src_col") >= 0)
@@ -1442,8 +1467,11 @@ def _apply_gridshift_pipeline(t, gs):
     if gs["tgt_subs"] is not None:
         t = grid_leg(t, gs["tgt_subs"], "forward")
     elif gs["tgt_helmert"] is not None:
+        # barrier: leg 2's bbox filter and lookup keys read lon/lat
         lon2, lat2 = datum_shift("lon", "lat", gs["tgt_helmert"], wgs84)
-        t = t.select("cell_id", lon2.alias("lon"), lat2.alias("lat"))
+        t = generate_barrier(
+            t, ["cell_id"], [("lon", lon2), ("lat", lat2)], "hs"
+        ).select("cell_id", "hs.lon", "hs.lat")
     # leg 2: WGS84 -> src datum
     if gs["src_subs"] is not None:
         t = grid_leg(t, gs["src_subs"], "inverse")

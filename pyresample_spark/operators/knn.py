@@ -237,6 +237,14 @@ def _radius_pairs(
     """
     if neighbor_scheme not in ("c27", "2c8", "shift2"):
         raise ValueError(f"unknown neighbor_scheme {neighbor_scheme!r}")
+    # the extras are spliced into selectExpr text by name: a Column
+    # would render as "Column<'x'>" there
+    for col in (*extra_src_cols, *extra_tgt_cols):
+        if not isinstance(col, str):
+            raise TypeError(
+                "extra_src_cols/extra_tgt_cols take column names (str), "
+                f"got {type(col).__name__}"
+            )
     # cells sized by c_eff (= c + the mm-quantization slack), NOT c:
     # see cell_side() — the exact filter admits d up to c_eff, and the
     # explode geometry must cover everything the filter accepts.
@@ -350,8 +358,7 @@ def _radius_pairs(
         keep = [
             "tgt_id", "t_gx", "t_gy", "t_gz",
             *[k for k in cell_keys if k not in ("cx3", "cy3", "cz3")],
-            *[str(c) if not isinstance(c, str) else c
-              for c in extra_tgt_cols],
+            *extra_tgt_cols,
         ]
         # one selectExpr instead of 3 withColumn + drop: every
         # transformation re-analyzes the whole plan (see _xyz_sql)
@@ -436,12 +443,9 @@ def _radius_pairs(
     # not the six geocentric doubles used only for the distance.
     # One selectExpr + filter instead of withColumn/filter/select —
     # the analyzed plan here is the query's biggest (see _xyz_sql).
-    extras = [
-        str(c) if not isinstance(c, str) else c
-        for c in (*extra_src_cols, *extra_tgt_cols)
-    ]
     return pairs.selectExpr(
-        "tgt_id", "src_id", f"{dist_sql} AS dist_mm", *extras
+        "tgt_id", "src_id", f"{dist_sql} AS dist_mm",
+        *extra_src_cols, *extra_tgt_cols,
     ).filter(f"dist_mm <= {round(c * 1000.0)}L")
 
 

@@ -154,8 +154,10 @@ _IVF_COL_CACHE: dict = {}
 
 
 def _centroid_rows(cen: DataFrame):
-    """Collected (centroid_id, cv, cvn) rows when the centroid set is
-    provably small (≤ IVF_LITERAL_MAX) and packable, else None.
+    """``(rows, memo_key)``: the collected (centroid_id, cv, cvn) rows
+    when the centroid set is provably small (≤ IVF_LITERAL_MAX),
+    complete (no NULL id or vector) and packable, else None; and the
+    memo key, None when the input has no stable identity.
 
     cvn is computed BY SPARK (with_norm ran before the collect), so
     the literal tier divides by bit-identical norms. Memoized per
@@ -180,26 +182,34 @@ def _centroid_rows(cen: DataFrame):
     except Exception:
         key = None
     if key is not None and key in _IVF_CEN_CACHE:
-        return _IVF_CEN_CACHE[key]
+        return _IVF_CEN_CACHE[key], key
     rows = cen.limit(IVF_LITERAL_MAX + 1).collect()
-    out = sorted(rows, key=lambda r: r.centroid_id)
     if (
-        len(out) > IVF_LITERAL_MAX
-        or len(out) == 0
-        or len({len(r.cv) for r in out}) != 1
-        or not all(0 <= r.centroid_id < _COS_PACK for r in out)
+        len(rows) > IVF_LITERAL_MAX
+        or len(rows) == 0
+        # a NULL id, vector or norm (a NULL element) fails validation
+        # (join tier) instead of crashing the checks and literals
+        or any(r.centroid_id is None or r.cv is None or r.cvn is None
+               for r in rows)
+        or len({len(r.cv) for r in rows}) != 1
+        or not all(0 <= r.centroid_id < _COS_PACK for r in rows)
     ):
         out = None
+    else:
+        out = sorted(rows, key=lambda r: r.centroid_id)
     if key is not None:
         _IVF_CEN_CACHE[key] = out
-    return out
+    return out, key
 
 
-def _ivf_literal_cols(rows, vec_col: str):
+def _ivf_literal_cols(rows, vec_col: str, memo: bool = True):
     """(centroid literal column ``_cen``, packed-argmin SQL text) for
     the literal-centroid argmax — the Column is memoized per
     collected-rows object (the _cb_cols rationale: the py4j literal
     round trips should be paid once per process, not per plan).
+    ``memo=False`` (rows collected afresh, not held by the centroid
+    memo) skips the insert: an entry pins its rows, so keying fresh
+    lists would grow the memo with every call.
 
     Shape: ONE array<struct<cid, cvn, cv>> literal column + one
     ``array_min(transform(_cen, …aggregate fold…))`` expression — the
@@ -253,7 +263,8 @@ def _ivf_literal_cols(rows, vec_col: str):
         f"named_struct('bk', array_min(transform(_cen, s -> {key})),"
         f" 'vn', w.vn)",
     )
-    _IVF_COL_CACHE[(id(rows), vec_col)] = (rows, cen, expr)
+    if memo:
+        _IVF_COL_CACHE[(id(rows), vec_col)] = (rows, cen, expr)
     return cen, expr
 
 
@@ -296,9 +307,10 @@ def ivf_assign(
         F.col(vec_col).alias("cv"),
         F.col("vnorm").alias("cvn"),
     )
-    rows = _centroid_rows(cen)
+    rows, memo_key = _centroid_rows(cen)
     if rows is not None:
-        cen_col, expr = _ivf_literal_cols(rows, vec_col)
+        cen_col, expr = _ivf_literal_cols(
+            rows, vec_col, memo=memo_key is not None)
         # vec_col must survive into the barrier stage in BOTH modes —
         # the argmin expression reads it; it is dropped from the
         # output when carry_vec=False.

@@ -769,6 +769,25 @@ def q_proj_stere_ell(spark, sf_dir):
     )
 
 
+def _geos_disc(pts, gx, gy):
+    """(event_id, gx, gy) of the on-disc points inside the 5400 km limb
+    cap. The projected x/y sit behind a Generate barrier: the NULL and
+    radius filters would otherwise carry inlined copies of the whole
+    geostationary forward (functions/exprs.py generate_barrier)."""
+    from pyresample_spark.functions.exprs import generate_barrier
+
+    xy = generate_barrier(pts, ["event_id"], [("x", gx), ("y", gy)], "g")
+    return xy.filter(
+        F.col("g.x").isNotNull()
+        & (F.sqrt(F.col("g.x") * F.col("g.x")
+                  + F.col("g.y") * F.col("g.y")) < 5400000.0)
+    ).select(
+        "event_id",
+        rnd(F.col("g.x"), 3).alias("gx"),
+        rnd(F.col("g.y"), 3).alias("gy"),
+    )
+
+
 @register(
     "q_proj_geos_ell",
     oracle=(lambda xy: f"""
@@ -796,20 +815,7 @@ def q_proj_geos_ell(spark, sf_dir):
     gx, gy = geos_ell_xy(
         "lon", "lat", h=35785831.0, a=6378169.0, b=6356584.0, lon_0=0.0
     )
-    return (
-        _pts(spark, sf_dir)
-        .select("event_id", gx.alias("_gx"), gy.alias("_gy"))
-        .filter(
-            F.col("_gx").isNotNull()
-            & (F.sqrt(F.col("_gx") * F.col("_gx")
-                      + F.col("_gy") * F.col("_gy")) < 5400000.0)
-        )
-        .select(
-            "event_id",
-            rnd(F.col("_gx"), 3).alias("gx"),
-            rnd(F.col("_gy"), 3).alias("gy"),
-        )
-    )
+    return _geos_disc(_pts(spark, sf_dir), gx, gy)
 
 
 @register(
@@ -838,20 +844,7 @@ def q_proj_abi(spark, sf_dir):
         "lon", "lat", h=35786023.0, a=6378137.0, b=6356752.31414,
         lon_0=-75.0, sweep="x",
     )
-    return (
-        _pts(spark, sf_dir)
-        .select("event_id", gx.alias("_gx"), gy.alias("_gy"))
-        .filter(
-            F.col("_gx").isNotNull()
-            & (F.sqrt(F.col("_gx") * F.col("_gx")
-                      + F.col("_gy") * F.col("_gy")) < 5400000.0)
-        )
-        .select(
-            "event_id",
-            rnd(F.col("_gx"), 3).alias("gx"),
-            rnd(F.col("_gy"), 3).alias("gy"),
-        )
-    )
+    return _geos_disc(_pts(spark, sf_dir), gx, gy)
 
 
 @register(

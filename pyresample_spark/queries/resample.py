@@ -582,34 +582,25 @@ def q_regrid_stere(spark, sf_dir):
     trig-fed floor boundaries snap via FLOOR(ROUND(·,9)) so both
     engines pick identical source pixels."""
     from pyresample_spark.functions.geo import (
-        R_EARTH,
         eqc_x,
         eqc_y,
         stere_polar_inverse,
     )
+    from pyresample_spark.operators.crs import _regrid_gather
     from pyresample_spark.operators.resample_grid import synth_image
 
     tgt = _STERE_AREA.grid(spark)
     lon, lat = stere_polar_inverse("cx", "cy", lat_ts=-70.0, north=False)
     t = tgt.select("cell_id", lon.alias("lon"), lat.alias("lat"))
     xe, ye = eqc_x("lon"), eqc_y("lat")
-    t = t.select(
-        "cell_id",
-        F.floor(
-            F.round((F.lit(EQC_AREA.area_extent[3]) - ye) / EQC_AREA.pixel_size_y, 9)
-        ).alias("src_row"),
-        F.floor(
-            F.round((xe - F.lit(EQC_AREA.area_extent[0])) / EQC_AREA.pixel_size_x, 9)
-        ).alias("src_col"),
-    ).filter(
-        (F.col("src_row") >= 0) & (F.col("src_row") <= EQC_AREA.height - 1)
-        & (F.col("src_col") >= 0) & (F.col("src_col") <= EQC_AREA.width - 1)
+    src_row = F.floor(
+        F.round((F.lit(EQC_AREA.area_extent[3]) - ye) / EQC_AREA.pixel_size_y, 9)
     )
-    src = synth_image(spark, EQC_AREA)
-    return t.join(
-        src.select("row", "col", "value"),
-        (t.src_row == src.row) & (t.src_col == src.col),
-    ).select("cell_id", "src_row", "src_col", F.col("value").alias("src_value"))
+    src_col = F.floor(
+        F.round((xe - F.lit(EQC_AREA.area_extent[0])) / EQC_AREA.pixel_size_x, 9)
+    )
+    return _regrid_gather(t, src_row, src_col, EQC_AREA,
+                          synth_image(spark, EQC_AREA))
 
 
 def _laea_s_area():

@@ -62,27 +62,3 @@ def get_spark(app_name: str = "pyresample_spark", ui_port: int | None = None) ->
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load the driver-provided parquet tables and register temp views."""
-    names = [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    out = {}
-    for n in names:
-        path = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(n)
-            out[n] = df
-    return out

@@ -2785,6 +2785,84 @@ def test_knn_neighbor_schemes_identical_pairs(spark):
         _radius_pairs(src, tgt, c, neighbor_scheme="c9")
 
 
+def test_radius_pairs_extra_cols_take_names_only(spark):
+    """The extras are spliced into selectExpr text by name; a Column
+    must raise TypeError, not render as "Column<'x'>" SQL."""
+    from pyspark.sql import functions as F
+
+    from pyresample_spark.operators.knn import _radius_pairs, chord_length
+
+    src = spark.range(3).select(
+        F.col("id").alias("src_id"), F.lit(0.0).alias("lon"),
+        F.lit(0.0).alias("lat"),
+    )
+    tgt = src.withColumnRenamed("src_id", "tgt_id")
+    c = chord_length(1000.0)
+    for kw in ("extra_src_cols", "extra_tgt_cols"):
+        with pytest.raises(TypeError, match="column names"):
+            _radius_pairs(src, tgt, c, **{kw: (F.col("lon"),)})
+
+
+_IVF_SCHEMA = "vec_id long, embedding array<double>"
+_IVF_CENTROIDS = [(100, [1.0, 0.0, 0.0]), (101, [0.0, 1.0, 0.0]),
+                  (102, [0.0, 0.0, 1.0])]
+
+
+def _ivf_corpus(spark):
+    return spark.createDataFrame(
+        [(i, [float(i % 3), 1.0 + (i % 2), float(i % 5)])
+         for i in range(30)], _IVF_SCHEMA)
+
+
+def test_ivf_null_centroid_rows_fall_back_to_join_tier(spark):
+    """A NULL centroid id, vector or element fails the literal tier's
+    validation (no TypeError at plan time); the join tier ignores the
+    row, so assignments equal those of the clean centroid set."""
+    from pyspark.sql import functions as F
+
+    from pyresample_spark.operators.similarity import (
+        _centroid_rows,
+        ivf_assign,
+        with_norm,
+    )
+
+    corpus = _ivf_corpus(spark)
+    clean = spark.createDataFrame(_IVF_CENTROIDS, _IVF_SCHEMA)
+    want = sorted(map(tuple, ivf_assign(corpus, clean).collect()))
+    bad_rows = ((None, [1.0, 1.0, 1.0]), (103, None), (104, [1.0, None, 0.0]))
+    for bad in bad_rows:
+        cents = clean.union(spark.createDataFrame([bad], _IVF_SCHEMA))
+        cen = with_norm(cents).select(
+            F.col("vec_id").alias("centroid_id"),
+            F.col("embedding").alias("cv"),
+            F.col("vnorm").alias("cvn"),
+        )
+        assert _centroid_rows(cen)[0] is None
+        got = sorted(map(tuple, ivf_assign(corpus, cents).collect()))
+        assert got == want
+
+
+def test_ivf_literal_memo_skips_unkeyed_centroids(spark, monkeypatch):
+    """Centroids with no stable identity (memo key None) are collected
+    afresh on every call; their literal columns must not be memoized,
+    or the memo grows by one pinned entry per call."""
+    from pyresample_spark.operators import similarity as S
+
+    corpus = _ivf_corpus(spark)
+    clean = spark.createDataFrame(_IVF_CENTROIDS, _IVF_SCHEMA)
+    want = sorted(map(tuple, S.ivf_assign(corpus, clean).collect()))
+
+    def no_identity(self):
+        raise RuntimeError("no stable identity")
+
+    monkeypatch.setattr(type(clean), "semanticHash", no_identity)
+    before = len(S._IVF_COL_CACHE)
+    for _ in range(2):
+        got = sorted(map(tuple, S.ivf_assign(corpus, clean).collect()))
+        assert got == want
+    assert len(S._IVF_COL_CACHE) == before
+
+
 # --- gradient-search walk (operators/gradient_walk.py) ---
 
 

@@ -6,6 +6,8 @@ queries and grep them for the scale-critical properties (SURVEY.md §4):
 - WholeStageCodegen coverage (expressions stay JVM-side)
 - broadcast vs shuffle join choices
 - partial (map-side) aggregation before every exchange
+- no more transcendental calls in the optimized plan than in the
+  analyzed plan (pushdown re-inlining projection math into filters)
 
 Writes EXPLAINS.md at the repo root. Run: python tools/explain_audit.py
 """
@@ -125,6 +127,43 @@ HEADLINE = [
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Transcendental calls as Catalyst prints them (Sin -> SIN(...),
+# Pow -> POWER(...)); case-insensitive because a function alias may
+# print in lower case.
+TRANSCENDENTAL = re.compile(
+    r"\b(?:A?SINH?|A?COSH?|A?TANH?|ATAN2|COT|SEC|CSC|SQRT|CBRT|EXPM1|EXP"
+    r"|LN|LOG10|LOG2|LOG1P|LOG|POWER|POW|HYPOT)\(",
+    re.IGNORECASE,
+)
+
+
+def transcendental_counts(df) -> tuple[int, int]:
+    """(analyzed, optimized) number of transcendental calls in ``df``'s
+    logical plans; builds the plans without executing them. Catalyst's
+    filter pushdown copies projected expressions into pushed and
+    inferred filters with no cost guard, so optimized > analyzed means
+    per-row math now runs more than once per row."""
+    qe = df._jdf.queryExecution()
+
+    def count(plan):
+        # verbose tree with no field cap: toString() elides operator
+        # field lists past spark.sql.debug.maxToStringFields
+        text = plan.treeString(True, False, 2**31 - 1, False, False)
+        return len(TRANSCENDENTAL.findall(text))
+
+    return count(qe.analyzed()), count(qe.optimizedPlan())
+
+
+def growth_notes(df) -> list[str]:
+    analyzed, optimized = transcendental_counts(df)
+    if optimized > analyzed:
+        return [
+            f"!! {optimized} transcendental calls in the optimized plan "
+            f"vs {analyzed} analyzed (filter pushdown re-inlined "
+            "projection math; see functions/exprs.py generate_barrier)"
+        ]
+    return []
+
 
 def audit_plan(name: str, plan: str) -> list[str]:
     notes = []
@@ -194,7 +233,7 @@ def main():
         )
         out.append(f"## {name}")
         out.append("")
-        for n in audit_plan(name, plan):
+        for n in audit_plan(name, plan) + growth_notes(df):
             out.append(f"- {n}")
         out.append("")
         out.append("<details><summary>formatted plan</summary>")
@@ -240,7 +279,7 @@ def main():
         f"- `choose_salt_factor` picked salt={salt} for a 200k-row "
         "one-cell source (hot_cell_rows=50k for the audit fixture)"
     )
-    for n in audit_plan("salted_knn", plan):
+    for n in audit_plan("salted_knn", plan) + growth_notes(salted):
         out.append(f"- {n}")
     out.append("")
     out.append("<details><summary>formatted plan</summary>")
@@ -269,7 +308,8 @@ def main():
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        flags = [n for n in audit_plan(name, plan) if n.startswith("!!")]
+        flags = [n for n in audit_plan(name, plan) + growth_notes(df)
+                 if n.startswith("!!")]
         if flags:
             flagged.append((name, flags))
         else:
