@@ -18,13 +18,15 @@ collect_set slice and a per-quadrant ``filter()`` over it. The
 closed-form (t, s) solve — the reference's full irregular →
 uprights-parallel → parallelogram fallback chain — runs as staged
 codegen'd projects behind Generate barriers (``_ts_chain_staged``).
-No Python anywhere in the production plan; the original
-reference-shaped Arrow kernel is kept as
-:func:`bilinear_irregular_pandas` and row-for-row equality is
-pytest-enforced. ``_ts_chain_expr`` is the same chain as one
-let-bound expression, used only by tools/probe_bilinear_stages.py.
-The DuckDB oracle replays candidates → quadrants →
-corners → quadratic → interpolation from the same formula texts.
+No Python anywhere in the plan.
+
+Every solve formula is written once, in the SQL-text builders below
+(``ABC_SQL``, ``quad_disc``, ``quad_roots``, ``quad_root_gate``,
+``lin_other_case``, ``par_t0_case``, ``par_ts_case``, ``fin_case``,
+``interp_sql``). They take their operand names as arguments: the
+Spark stages pass struct fields of earlier stages (``qs.qa1``,
+``fs.t_irr``) and divide with try_divide, the DuckDB oracle
+(queries/resample.py) passes bare CTE columns and divides with ``/``.
 Determinism: corner pick tie-breaks by (dist_mm, src_id); divisions
 are try_divide on Spark (NULL on zero) and bare ``/`` on DuckDB
 (inf/NaN) — the shared [0, 1] gates exclude both identically.
@@ -38,151 +40,11 @@ per-group Python invocation cost exists at any target count.
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyresample_spark.functions.exprs import generate_barrier
-from pyresample_spark.operators.knn import chord_length, knn_join
-
-OUT_SCHEMA = (
-    "tgt_id long, c00 long, c01 long, c10 long, c11 long, "
-    "t double, s double, bilinear_value double"
-)
-
-
-def _quad_root(p1, p2, p3, p4, X, Y):
-    """Valid root in [0,1] of the bilinear quadratic — _calc_abc
-    (bilinear/_base.py:423-443) + _solve_quadratic (:382-413) with the
-    reference's x1 → x2 → −c/b fallback chain. Divisions are guarded
-    (the reference relies on inf/NaN falling out of [0,1])."""
-    (x1, y1), (x2, y2), (x3, y3), (x4, y4) = p1, p2, p3, p4
-    x21, x31, x42 = x2 - x1, x3 - x1, x4 - x2
-    y21, y31, y42 = y2 - y1, y3 - y1, y4 - y2
-    a = x31 * y42 - y31 * x42
-    b = (
-        Y * (x42 - x31) - X * (y42 - y31)
-        + x31 * y2 - y31 * x2 + y42 * x1 - x42 * y1
-    )
-    c = Y * x21 - X * y21 + x1 * y2 - x2 * y1
-    d = b * b - 4.0 * a * c
-    if a != 0.0 and d >= 0.0:
-        sq = math.sqrt(d)
-        for cand in ((-b + sq) / (2.0 * a), (-b - sq) / (2.0 * a)):
-            if 0.0 <= cand <= 1.0:
-                return cand
-    if b != 0.0:
-        cand = -c / b
-        if 0.0 <= cand <= 1.0:
-            return cand
-    return None
-
-
-def _lin_other(f, ya, yb, yc, yd, Y):
-    """_solve_another_fractional_distance (bilinear/_base.py:452-470):
-    g = (Y − ya − (yb−ya)f) / (yc + (yd−yc)f − ya − (yb−ya)f),
-    valid in [0,1]."""
-    den = yc + (yd - yc) * f - ya - (yb - ya) * f
-    if den == 0.0:
-        return None
-    g = (Y - ya - (yb - ya) * f) / den
-    return g if 0.0 <= g <= 1.0 else None
-
-
-def _solve_ts_quadratic(corners_xy, X, Y):
-    """Closed-form (t, s) with the reference's full fallback chain
-    (_get_fractional_distances, bilinear/_base.py:336-521):
-    irregular → uprights-parallel → parallelogram. corners_xy rows:
-    p1=UL, p2=UR, p3=LL, p4=LR (the reference corner order)."""
-    p1, p2, p3, p4 = [tuple(c) for c in corners_xy]
-    # 1. irregular quadrilateral: t from the quadratic, s linear from t
-    t = _quad_root(p1, p2, p3, p4, X, Y)
-    if t is not None:
-        s = _lin_other(t, p1[1], p3[1], p2[1], p4[1], Y)
-        if s is not None:
-            return t, s
-    # 2. uprights parallel: s from the quadratic on reordered corners,
-    #    t linear from s (axis-aligned grids land here: the irregular
-    #    s-denominator degenerates to 0)
-    s = _quad_root(p1, p3, p2, p4, X, Y)
-    if s is not None:
-        t = _lin_other(s, p1[1], p2[1], p3[1], p4[1], Y)
-        if t is not None:
-            return t, s
-    # 3. parallelogram (reference formula verbatim, incl. its
-    #    '+ x31·t' term, for parity)
-    x21, y21 = p2[0] - p1[0], p2[1] - p1[1]
-    x31, y31 = p3[0] - p1[0], p3[1] - p1[1]
-    den = x21 * y31 - y21 * x31
-    if den == 0.0 or x21 == 0.0:
-        return None
-    t = (x21 * (Y - p1[1]) - y21 * (X - p1[0])) / den
-    if not (0.0 <= t <= 1.0):
-        return None
-    s = (X - p1[0] + x31 * t) / x21
-    if not (0.0 <= s <= 1.0):
-        return None
-    return t, s
-
-
-def _per_target(pdf: pd.DataFrame) -> pd.DataFrame:
-    tgt_id = pdf["tgt_id"].iloc[0]
-    tx, ty = pdf["t_lon"].iloc[0], pdf["t_lat"].iloc[0]
-    dlon = pdf["s_lon"].to_numpy() - tx
-    dlat = pdf["s_lat"].to_numpy() - ty
-    dist = pdf["dist_m"].to_numpy()
-    sid = pdf["src_id"].to_numpy()
-    # strict-sign quadrants, reference order (x_diff = out − in):
-    # p1 UL: in left (dlon<0), in above (dlat>0); p2 UR; p3 LL; p4 LR
-    quads = {
-        "p1": (dlon < 0) & (dlat > 0),
-        "p2": (dlon > 0) & (dlat > 0),
-        "p3": (dlon < 0) & (dlat < 0),
-        "p4": (dlon > 0) & (dlat < 0),
-    }
-    idx = {}
-    for name, mask in quads.items():
-        if not mask.any():
-            return pd.DataFrame(columns=pdf.columns[:0])
-        cand = np.flatnonzero(mask)
-        # nearest valid, ties by src_id — deterministic across engines
-        best = cand[np.lexsort((sid[cand], dist[cand]))[0]]
-        idx[name] = best
-    corners_xy = [
-        (pdf["s_lon"].iloc[idx[n]], pdf["s_lat"].iloc[idx[n]])
-        for n in ("p1", "p2", "p3", "p4")
-    ]
-    ts = _solve_ts_quadratic(corners_xy, tx, ty)
-    if ts is None:
-        return pd.DataFrame(columns=pdf.columns[:0])
-    t, s = ts
-    v1, v2, v3, v4 = (
-        pdf["value"].iloc[idx[n]] for n in ("p1", "p2", "p3", "p4")
-    )
-    v = (
-        v1 * (1.0 - s) * (1.0 - t)
-        + v2 * s * (1.0 - t)
-        + v3 * (1.0 - s) * t
-        + v4 * s * t
-    )
-    # output columns keep the grid naming: c00=LL(p3), c01=LR(p4),
-    # c10=UL(p1), c11=UR(p2)
-    return pd.DataFrame(
-        {
-            "tgt_id": [tgt_id],
-            "c00": [sid[idx["p3"]]],
-            "c01": [sid[idx["p4"]]],
-            "c10": [sid[idx["p1"]]],
-            "c11": [sid[idx["p2"]]],
-            "t": [t],
-            "s": [s],
-            "bilinear_value": [v],
-        }
-    )
+from pyresample_spark.operators.knn import chord_length
 
 
 def _plain_div(a: str, b: str) -> str:
@@ -200,16 +62,44 @@ def _try_div(a: str, b: str) -> str:
     return f"try_divide({a}, {b})"
 
 
-def quad_root_case(qa: str, qb: str, qc: str, qd: str, div=_plain_div) -> str:
-    """Valid-root CASE for the bilinear quadratic — the SQL text twin
-    of :func:`_quad_root` (x1 → x2 → −c/b fallback chain). SHARED
-    between the Spark fused plan (div=_try_div) and the DuckDB oracle
-    (div=_plain_div) so both engines take the same branch at every
-    gate; the ``<> 0`` guards in front of each division make the two
-    division semantics coincide."""
-    r1 = div(f"-({qb}) + sqrt(GREATEST({qd}, 0.0))", f"2.0 * {qa}")
-    r2 = div(f"-({qb}) - sqrt(GREATEST({qd}, 0.0))", f"2.0 * {qa}")
-    r3 = div(f"-({qc})", qb)
+# the abc coefficients of both quadratics (_calc_abc), over the wide
+# corner columns x1..y4 and the target xx/yy — bare names in both engines
+ABC_SQL = (
+    ("qa1", "(x3 - x1) * (y4 - y2) - (y3 - y1) * (x4 - x2)"),
+    ("qb1", "yy * ((x4 - x2) - (x3 - x1)) - xx * ((y4 - y2) - (y3 - y1))"
+            " + (x3 - x1) * y2 - (y3 - y1) * x2"
+            " + (y4 - y2) * x1 - (x4 - x2) * y1"),
+    ("qc1", "yy * (x2 - x1) - xx * (y2 - y1) + x1 * y2 - x2 * y1"),
+    ("qa2", "(x2 - x1) * (y4 - y3) - (y2 - y1) * (x4 - x3)"),
+    ("qb2", "yy * ((x4 - x3) - (x2 - x1)) - xx * ((y4 - y3) - (y2 - y1))"
+            " + (x2 - x1) * y3 - (y2 - y1) * x3"
+            " + (y4 - y3) * x1 - (x4 - x3) * y1"),
+    ("qc2", "yy * (x3 - x1) - xx * (y3 - y1) + x1 * y3 - x3 * y1"),
+)
+
+
+def quad_disc(qa: str, qb: str, qc: str) -> str:
+    """Discriminant b² − 4ac of the bilinear quadratic."""
+    return f"{qb} * {qb} - 4.0 * {qa} * {qc}"
+
+
+def quad_roots(qa: str, qb: str, qc: str, qd: str,
+               div=_plain_div) -> tuple:
+    """The three root candidates of _solve_quadratic, in fallback
+    order: x1 = (−b + √d)/2a, x2 = (−b − √d)/2a, −c/b."""
+    return (
+        div(f"-({qb}) + sqrt(GREATEST({qd}, 0.0))", f"2.0 * {qa}"),
+        div(f"-({qb}) - sqrt(GREATEST({qd}, 0.0))", f"2.0 * {qa}"),
+        div(f"-({qc})", qb),
+    )
+
+
+def quad_root_gate(qa: str, qb: str, qd: str,
+                   r1: str, r2: str, r3: str) -> str:
+    """The first root of :func:`quad_roots` that lands in [0, 1] (the
+    x1 → x2 → −c/b fallback chain). The ``<> 0`` guards in front of
+    each root make the two engines' division semantics coincide, so
+    both take the same branch at every gate."""
     return f"""
       CASE WHEN {qa} <> 0.0 AND {qd} >= 0.0
                 AND {r1} >= 0.0 AND {r1} <= 1.0
@@ -224,8 +114,9 @@ def quad_root_case(qa: str, qb: str, qc: str, qd: str, div=_plain_div) -> str:
 
 def lin_other_case(f: str, ya: str, yb: str, yc: str, yd: str,
                    div=_plain_div) -> str:
-    """SQL twin of :func:`_lin_other` (the other fractional distance,
-    linear in the first); references the in-scope target ``yy``."""
+    """The other fractional distance, linear in the first ``f``
+    (_solve_another_fractional_distance), valid in [0, 1]; references
+    the in-scope target ``yy``."""
     den = f"{yc} + ({yd} - {yc}) * {f} - {ya} - ({yb} - {ya}) * {f}"
     g = div(f"yy - {ya} - ({yb} - {ya}) * {f}", den)
     return f"""
@@ -234,22 +125,6 @@ def lin_other_case(f: str, ya: str, yb: str, yc: str, yd: str,
                 AND {g} >= 0.0 AND {g} <= 1.0
            THEN {g}
       END"""
-
-
-# stage texts for the abc coefficients (shared Spark/DuckDB; operate on
-# the wide corner columns x1..y4, v1..v4 and the target xx/yy)
-ABC_SQL = (
-    ("qa1", "(x3 - x1) * (y4 - y2) - (y3 - y1) * (x4 - x2)"),
-    ("qb1", "yy * ((x4 - x2) - (x3 - x1)) - xx * ((y4 - y2) - (y3 - y1))"
-            " + (x3 - x1) * y2 - (y3 - y1) * x2"
-            " + (y4 - y2) * x1 - (x4 - x2) * y1"),
-    ("qc1", "yy * (x2 - x1) - xx * (y2 - y1) + x1 * y2 - x2 * y1"),
-    ("qa2", "(x2 - x1) * (y4 - y3) - (y2 - y1) * (x4 - x3)"),
-    ("qb2", "yy * ((x4 - x3) - (x2 - x1)) - xx * ((y4 - y3) - (y2 - y1))"
-            " + (x2 - x1) * y3 - (y2 - y1) * x3"
-            " + (y4 - y3) * x1 - (x4 - x3) * y1"),
-    ("qc2", "yy * (x3 - x1) - xx * (y3 - y1) + x1 * y3 - x3 * y1"),
-)
 
 
 def par_t0_case(div=_plain_div) -> str:
@@ -265,26 +140,36 @@ def par_t0_case(div=_plain_div) -> str:
       END"""
 
 
-def par_ts_case(which: str, div=_plain_div) -> str:
-    """Parallelogram (t, s) gate: s = (xx − x1 + (x3 − x1)·t)/(x2 − x1)
-    must land in [0, 1]; ``which`` selects the emitted column."""
-    sq = div("xx - x1 + (x3 - x1) * t_par0", "x2 - x1")
-    out = "t_par0" if which == "t" else sq
+def par_ts_case(which: str, t0: str, div=_plain_div) -> str:
+    """Parallelogram (t, s) gate over the t candidate ``t0``:
+    s = (xx − x1 + (x3 − x1)·t0)/(x2 − x1) (the reference's
+    '+ x31·t' term kept for parity) must land in [0, 1]; ``which``
+    selects the emitted coordinate."""
+    sq = div(f"xx - x1 + (x3 - x1) * {t0}", "x2 - x1")
+    out = t0 if which == "t" else sq
     return f"""
-      CASE WHEN t_par0 IS NOT NULL
+      CASE WHEN {t0} IS NOT NULL
                 AND {sq} >= 0.0 AND {sq} <= 1.0
            THEN {out} END"""
 
 
-FIN_T_SQL = """
-      CASE WHEN t_irr IS NOT NULL AND s_irr IS NOT NULL THEN t_irr
-           WHEN s_up IS NOT NULL AND t_up IS NOT NULL THEN t_up
-           ELSE t_par END"""
+def fin_case(which: str, irr: tuple, up: tuple, par: tuple) -> str:
+    """Fallback-chain resolution: the irregular pair when both of its
+    fractions solved, else the uprights-parallel pair, else the
+    parallelogram pair. ``irr``/``up``/``par`` are (t, s) operand
+    names; ``which`` ("t" or "s") selects the emitted coordinate."""
+    i = "ts".index(which)
+    return f"""
+      CASE WHEN {irr[0]} IS NOT NULL AND {irr[1]} IS NOT NULL THEN {irr[i]}
+           WHEN {up[1]} IS NOT NULL AND {up[0]} IS NOT NULL THEN {up[i]}
+           ELSE {par[i]} END"""
 
-FIN_S_SQL = """
-      CASE WHEN t_irr IS NOT NULL AND s_irr IS NOT NULL THEN s_irr
-           WHEN s_up IS NOT NULL AND t_up IS NOT NULL THEN s_up
-           ELSE s_par END"""
+
+def interp_sql(t: str, s: str) -> str:
+    """Bilinear interpolation of the corner values v1..v4 (p1 UL,
+    p2 UR, p3 LL, p4 LR) at fractional distances (t, s)."""
+    return (f"v1 * (1.0 - {s}) * (1.0 - {t}) + v2 * {s} * (1.0 - {t})"
+            f" + v3 * (1.0 - {s}) * {t} + v4 * {s} * {t}")
 
 
 # strict-sign quadrants in reference order (p1 UL, p2 UR, p3 LL, p4 LR)
@@ -296,259 +181,61 @@ QUAD_CONDS = (
 )
 
 
-# let-binding emulation shared with the PQ expressions; see the
-# docstring there for why lambda bindings beat staged Projects here
-from pyresample_spark.functions.exprs import let_expr as _let  # noqa: E402
-
-
-def _ts_chain_expr() -> str:
-    """The whole closed-form (t, s, value) chain as ONE let-bound
-    column expression over the wide corner columns (x1..y4, v1..v4,
-    xx, yy). Formula-for-formula the same arithmetic and gate
-    structure as the DuckDB oracle text (quad_root_case /
-    lin_other_case / par_* with div=plain) — cell-for-cell equality is
-    enforced by the oracle parity suite; divisions are try_divide
-    (NULL on zero) where DuckDB's plain ``/`` yields inf/NaN, and the
-    identical [0, 1] gates exclude both."""
-    dv = _try_div
-    root_case = lambda qa, qd, qb, r1, r2, r3: (  # noqa: E731
-        f"CASE WHEN {qa} <> 0.0 AND {qd} >= 0.0"
-        f" AND {r1} >= 0.0 AND {r1} <= 1.0 THEN {r1}"
-        f" WHEN {qa} <> 0.0 AND {qd} >= 0.0"
-        f" AND {r2} >= 0.0 AND {r2} <= 1.0 THEN {r2}"
-        f" WHEN {qb} <> 0.0 AND {r3} >= 0.0 AND {r3} <= 1.0 THEN {r3}"
-        f" END"
-    )
-    body = _let(
-        [("tf", "CASE WHEN d.t_irr IS NOT NULL AND g.s_irr IS NOT NULL"
-                " THEN d.t_irr"
-                " WHEN d.s_up IS NOT NULL AND g.t_up IS NOT NULL"
-                " THEN g.t_up ELSE k.t_par END"),
-         ("sf", "CASE WHEN d.t_irr IS NOT NULL AND g.s_irr IS NOT NULL"
-                " THEN g.s_irr"
-                " WHEN d.s_up IS NOT NULL AND g.t_up IS NOT NULL"
-                " THEN d.s_up ELSE k.s_par END")],
-        "l",
-        "named_struct('t', l.tf, 's', l.sf, 'v',"
-        " v1 * (1.0 - l.sf) * (1.0 - l.tf) + v2 * l.sf * (1.0 - l.tf)"
-        " + v3 * (1.0 - l.sf) * l.tf + v4 * l.sf * l.tf)",
-    )
-    body = _let(
-        [("t_par", "CASE WHEN i.t_par0 IS NOT NULL"
-                   " AND j.sq >= 0.0 AND j.sq <= 1.0 THEN i.t_par0 END"),
-         ("s_par", "CASE WHEN i.t_par0 IS NOT NULL"
-                   " AND j.sq >= 0.0 AND j.sq <= 1.0 THEN j.sq END")],
-        "k", body,
-    )
-    body = _let(
-        [("sq", dv("xx - x1 + (x3 - x1) * i.t_par0", "x2 - x1"))],
-        "j", body,
-    )
-    body = _let(
-        [("t_par0",
-          "CASE WHEN ((x2 - x1) * (y3 - y1) - (y2 - y1) * (x3 - x1)) <> 0.0"
-          " AND (x2 - x1) <> 0.0"
-          " AND h.pt0 >= 0.0 AND h.pt0 <= 1.0 THEN h.pt0 END")],
-        "i", body,
-    )
-    body = _let(
-        [("pt0", dv("(x2 - x1) * (yy - y1) - (y2 - y1) * (xx - x1)",
-                    "(x2 - x1) * (y3 - y1) - (y2 - y1) * (x3 - x1)"))],
-        "h", body,
-    )
-    body = _let(
-        [("s_irr", "CASE WHEN d.t_irr IS NOT NULL AND e.den_si <> 0.0"
-                   " AND f.g_si >= 0.0 AND f.g_si <= 1.0 THEN f.g_si END"),
-         ("t_up", "CASE WHEN d.s_up IS NOT NULL AND e.den_tu <> 0.0"
-                  " AND f.g_tu >= 0.0 AND f.g_tu <= 1.0 THEN f.g_tu END")],
-        "g", body,
-    )
-    body = _let(
-        [("g_si", dv("yy - y1 - (y3 - y1) * d.t_irr", "e.den_si")),
-         ("g_tu", dv("yy - y1 - (y2 - y1) * d.s_up", "e.den_tu"))],
-        "f", body,
-    )
-    # lin(t_irr; ya=y1, yb=y3, yc=y2, yd=y4) / lin(s_up; y1, y2, y3, y4)
-    body = _let(
-        [("den_si",
-          "y2 + (y4 - y2) * d.t_irr - y1 - (y3 - y1) * d.t_irr"),
-         ("den_tu",
-          "y3 + (y4 - y3) * d.s_up - y1 - (y2 - y1) * d.s_up")],
-        "e", body,
-    )
-    body = _let(
-        [("t_irr", root_case("a.qa1", "b.qd1", "a.qb1",
-                             "c.r1a", "c.r2a", "c.r3a")),
-         ("s_up", root_case("a.qa2", "b.qd2", "a.qb2",
-                            "c.r1b", "c.r2b", "c.r3b"))],
-        "d", body,
-    )
-    body = _let(
-        [("r1a", dv("-(a.qb1) + sqrt(GREATEST(b.qd1, 0.0))", "2.0 * a.qa1")),
-         ("r2a", dv("-(a.qb1) - sqrt(GREATEST(b.qd1, 0.0))", "2.0 * a.qa1")),
-         ("r3a", dv("-(a.qc1)", "a.qb1")),
-         ("r1b", dv("-(a.qb2) + sqrt(GREATEST(b.qd2, 0.0))", "2.0 * a.qa2")),
-         ("r2b", dv("-(a.qb2) - sqrt(GREATEST(b.qd2, 0.0))", "2.0 * a.qa2")),
-         ("r3b", dv("-(a.qc2)", "a.qb2"))],
-        "c", body,
-    )
-    body = _let(
-        [("qd1", "a.qb1 * a.qb1 - 4.0 * a.qa1 * a.qc1"),
-         ("qd2", "a.qb2 * a.qb2 - 4.0 * a.qa2 * a.qc2")],
-        "b", body,
-    )
-    body = _let(list(ABC_SQL), "a", body)
-    return body
-
-
-import re as _re
-
-
-def _qualify(expr: str, mapping: dict) -> str:
-    """Rewrite bare prior-stage output names in a stage text into
-    alias-qualified struct-field references (``qd1`` → ``ds.qd1``).
-    Token-boundary safe (the stage texts contain no string literals;
-    longest-name-first alternation keeps ``t_par`` from matching
-    inside ``t_par0``)."""
-    if not mapping:
-        return expr
-    pat = _re.compile(
-        r"\b(" + "|".join(sorted(mapping, key=len, reverse=True)) + r")\b"
-    )
-    return pat.sub(lambda m: mapping[m.group(1)], expr)
-
-
-def _barrier_stage(df: DataFrame, keep: list, named_exprs: list,
-                   alias: str, mapping: dict | None = None) -> DataFrame:
-    """One solve stage behind a Generate barrier
-    (functions/exprs.py :func:`generate_barrier`): every stage stays a
-    plain codegen'd Project, CollapseProject cannot inline one stage's
-    aliases into the next, and pushed filters cannot re-run the chain.
-
-    ONE selectExpr per stage: prior-stage fields are consumed through
-    ``mapping``-qualified struct references instead of a second
-    flatten select (every transformation call eagerly re-analyzes the
-    whole accumulated plan)."""
-    return generate_barrier(
-        df, keep,
-        [(n, _qualify(e, mapping or {})) for n, e in named_exprs], alias,
-    )
-
-
 def _ts_chain_staged(wide: DataFrame) -> DataFrame:
     """The closed-form (t, s, value) solve as STAGED codegen'd
-    projects over the wide corner columns (x1..y4, v1..v4, xx, yy) —
-    formula-for-formula the same arithmetic, gates and try_divide
-    semantics as :func:`_ts_chain_expr` (the single let-bound
-    expression it replaces), hence bit-identical output; the let form
-    is a higher-order ``transform`` lambda tree, which Spark evaluates
-    interpreted per row (CodegenFallback), measured at ~0.4 ms/row —
-    the staged form runs entirely inside WholeStageCodegen. Emits the
+    projects over the wide corner columns (x1..y4, v1..v4, xx, yy),
+    built from the same formula builders as the DuckDB oracle with
+    try_divide division. Each stage is one :func:`generate_barrier`
+    selectExpr: every stage stays a plain codegen'd Project,
+    CollapseProject cannot inline one stage's aliases into the next,
+    and pushed filters cannot re-run the chain. A stage reads earlier
+    outputs as struct fields (``qs.qa1``, ``fs.t_irr``). Emits the
     result struct column ``r`` (t, s, v) behind a final barrier so the
     caller's IS NOT NULL filter checks materialized fields."""
     dv = _try_div
     ids = ["tgt_id", "id1", "id2", "id3", "id4"]
-    geo = ["x1", "x2", "x3", "x4", "y1", "y2", "y3", "y4",
-           "v1", "v2", "v3", "v4", "xx", "yy"]
-    # Per-stage qualifier maps: a stage's texts reference prior-stage
-    # outputs by their bare names; _qualify rewrites them into the
-    # struct-field form (see _barrier_stage r18 note).
-    m_qs = {n: f"qs.{n}" for n, _ in ABC_SQL}
-    m_ds = {**m_qs, "qd1": "ds.qd1", "qd2": "ds.qd2"}
-    m_rs = {**m_ds, **{n: f"rs.{n}" for n in
-                       ("r1a", "r2a", "r3a", "r1b", "r2b", "r3b")}}
-    m_fs = {"t_irr": "fs.t_irr", "s_up": "fs.s_up"}
-    m_gs = {**m_fs, "s_irr": "gs.s_irr", "t_up": "gs.t_up",
-            "t_par0": "gs.t_par0"}
-    m_ps = {**m_gs, "t_par": "ps.t_par", "s_par": "ps.s_par"}
+    vals = ["v1", "v2", "v3", "v4"]
+    geo = ["x1", "x2", "x3", "x4", "y1", "y2", "y3", "y4", *vals, "xx", "yy"]
+    # quadratic 1 gives t on the irregular quadrilateral, quadratic 2
+    # gives s with the uprights parallel; their roots are r*a / r*b
+    quads = ((1, "a", "t_irr"), (2, "b", "s_up"))
+    abc = {i: (f"qs.qa{i}", f"qs.qb{i}", f"qs.qc{i}") for i, _, _ in quads}
     # S1: the six quadratic coefficients (oracle CTE g1)
-    s1 = _barrier_stage(wide, ids + geo, list(ABC_SQL), "qs")
+    s1 = generate_barrier(wide, ids + geo, list(ABC_SQL), "qs")
     # S2: discriminants (g2)
-    s2 = _barrier_stage(
-        s1, ids + geo + ["qs"],
-        [("qd1", "qb1 * qb1 - 4.0 * qa1 * qc1"),
-         ("qd2", "qb2 * qb2 - 4.0 * qa2 * qc2")],
-        "ds", m_qs,
-    )
-    # S3: the six root candidates
-    s3 = _barrier_stage(
-        s2, ids + geo + ["qs", "ds"],
-        [("r1a", dv("-(qb1) + sqrt(GREATEST(qd1, 0.0))", "2.0 * qa1")),
-         ("r2a", dv("-(qb1) - sqrt(GREATEST(qd1, 0.0))", "2.0 * qa1")),
-         ("r3a", dv("-(qc1)", "qb1")),
-         ("r1b", dv("-(qb2) + sqrt(GREATEST(qd2, 0.0))", "2.0 * qa2")),
-         ("r2b", dv("-(qb2) - sqrt(GREATEST(qd2, 0.0))", "2.0 * qa2")),
-         ("r3b", dv("-(qc2)", "qb2"))],
-        "rs", m_ds,
-    )
-
-    def _root(qa, qd, qb, r1, r2, r3):
-        return (
-            f"CASE WHEN {qa} <> 0.0 AND {qd} >= 0.0"
-            f" AND {r1} >= 0.0 AND {r1} <= 1.0 THEN {r1}"
-            f" WHEN {qa} <> 0.0 AND {qd} >= 0.0"
-            f" AND {r2} >= 0.0 AND {r2} <= 1.0 THEN {r2}"
-            f" WHEN {qb} <> 0.0 AND {r3} >= 0.0 AND {r3} <= 1.0 THEN {r3}"
-            f" END"
-        )
-
+    s2 = generate_barrier(s1, ids + geo + ["qs"], [
+        (f"qd{i}", quad_disc(*abc[i])) for i, _, _ in quads
+    ], "ds")
+    # S3: the six root candidates (inlined into g3's gates on DuckDB)
+    s3 = generate_barrier(s2, ids + geo + ["qs", "ds"], [
+        (f"r{j}{ab}", r)
+        for i, ab, _ in quads
+        for j, r in enumerate(quad_roots(*abc[i], f"ds.qd{i}", dv), 1)
+    ], "rs")
     # S4: first fractional distances (g3)
-    s4 = _barrier_stage(
-        s3, ids + geo,
-        [("t_irr", _root("qa1", "qd1", "qb1", "r1a", "r2a", "r3a")),
-         ("s_up", _root("qa2", "qd2", "qb2", "r1b", "r2b", "r3b"))],
-        "fs", m_rs,
-    )
+    s4 = generate_barrier(s3, ids + geo, [
+        (name, quad_root_gate(abc[i][0], abc[i][1], f"ds.qd{i}",
+                              *(f"rs.r{j}{ab}" for j in (1, 2, 3))))
+        for i, ab, name in quads
+    ], "fs")
     # S5: the other fractional distances + the parallelogram t0 (g4/g5)
-    den_si = "y2 + (y4 - y2) * t_irr - y1 - (y3 - y1) * t_irr"
-    den_tu = "y3 + (y4 - y3) * s_up - y1 - (y2 - y1) * s_up"
-    g_si = dv("yy - y1 - (y3 - y1) * t_irr", den_si)
-    g_tu = dv("yy - y1 - (y2 - y1) * s_up", den_tu)
-    par_den = "(x2 - x1) * (y3 - y1) - (y2 - y1) * (x3 - x1)"
-    pt0 = dv("(x2 - x1) * (yy - y1) - (y2 - y1) * (xx - x1)", par_den)
-    s5 = _barrier_stage(
-        s4, ids + geo + ["fs"],
-        [("s_irr",
-          f"CASE WHEN t_irr IS NOT NULL AND ({den_si}) <> 0.0"
-          f" AND {g_si} >= 0.0 AND {g_si} <= 1.0 THEN {g_si} END"),
-         ("t_up",
-          f"CASE WHEN s_up IS NOT NULL AND ({den_tu}) <> 0.0"
-          f" AND {g_tu} >= 0.0 AND {g_tu} <= 1.0 THEN {g_tu} END"),
-         ("t_par0",
-          f"CASE WHEN ({par_den}) <> 0.0 AND (x2 - x1) <> 0.0"
-          f" AND {pt0} >= 0.0 AND {pt0} <= 1.0 THEN {pt0} END")],
-        "gs", m_fs,
-    )
+    s5 = generate_barrier(s4, ids + geo + ["fs"], [
+        ("s_irr", lin_other_case("fs.t_irr", "y1", "y3", "y2", "y4", dv)),
+        ("t_up", lin_other_case("fs.s_up", "y1", "y2", "y3", "y4", dv)),
+        ("t_par0", par_t0_case(dv)),
+    ], "gs")
     # S6: parallelogram (t, s) gate (g6)
-    sq = dv("xx - x1 + (x3 - x1) * t_par0", "x2 - x1")
-    s6 = _barrier_stage(
-        s5,
-        ids + ["v1", "v2", "v3", "v4", "fs", "gs"],
-        [("t_par",
-          f"CASE WHEN t_par0 IS NOT NULL"
-          f" AND {sq} >= 0.0 AND {sq} <= 1.0 THEN t_par0 END"),
-         ("s_par",
-          f"CASE WHEN t_par0 IS NOT NULL"
-          f" AND {sq} >= 0.0 AND {sq} <= 1.0 THEN {sq} END")],
-        "ps", m_gs,
-    )
+    s6 = generate_barrier(s5, ids + vals + ["fs", "gs"], [
+        (f"{w}_par", par_ts_case(w, "gs.t_par0", dv)) for w in "ts"
+    ], "ps")
     # S7: fallback-chain resolution + interpolation (fin), emitted as
     # the final ``r`` struct behind its own barrier
-    tf = _qualify(
-        "CASE WHEN t_irr IS NOT NULL AND s_irr IS NOT NULL THEN t_irr"
-        " WHEN s_up IS NOT NULL AND t_up IS NOT NULL THEN t_up"
-        " ELSE t_par END", m_ps,
+    names = dict(irr=("fs.t_irr", "gs.s_irr"), up=("gs.t_up", "fs.s_up"),
+                 par=("ps.t_par", "ps.s_par"))
+    tf, sf = fin_case("t", **names), fin_case("s", **names)
+    return generate_barrier(
+        s6, ids, [("t", tf), ("s", sf), ("v", interp_sql(tf, sf))], "r"
     )
-    sf = _qualify(
-        "CASE WHEN t_irr IS NOT NULL AND s_irr IS NOT NULL THEN s_irr"
-        " WHEN s_up IS NOT NULL AND t_up IS NOT NULL THEN s_up"
-        " ELSE s_par END", m_ps,
-    )
-    return generate_barrier(s6, ids, [
-        ("t", tf), ("s", sf),
-        ("v", f"v1 * (1.0 - {sf}) * (1.0 - {tf}) + v2 * {sf} * (1.0 - {tf})"
-              f" + v3 * (1.0 - {sf}) * {tf} + v4 * {sf} * {tf}"),
-    ], "r")
 
 
 def bilinear_irregular(
@@ -561,9 +248,9 @@ def bilinear_irregular(
     """src: (src_id, lon, lat, value); tgt: (tgt_id, lon, lat) →
     (tgt_id, 4 corner ids, t, s, bilinear_value).
 
-    FUSED plan, no Python (the per-target ``applyInPandas`` kernel is
-    kept as :func:`bilinear_irregular_pandas`, row-for-row equal in
-    the tests; the DuckDB oracle matches in the parity suite):
+    FUSED plan, no Python (a reference-shaped per-target kernel in
+    tests/test_bilinear.py is row-for-row equal; the DuckDB oracle
+    matches in the parity suite):
 
     1. candidates: the shared cell join, with the source lon/lat/value
        on the build side and the target lon/lat (``xx``/``yy``) on the
@@ -579,7 +266,8 @@ def bilinear_irregular(
        ``collect_set`` slice per target and a per-quadrant ``filter()``
        over it, behind a Generate barrier;
     3. the (t, s) solve and the interpolation run as staged codegen'd
-       projects behind Generate barriers (:func:`_ts_chain_staged`).
+       projects behind Generate barriers (:func:`_ts_chain_staged`),
+       built from the formula builders the DuckDB oracle also uses.
 
     ``neighbor_scheme`` passes through to the shared cell join
     (:func:`~pyresample_spark.operators.knn._radius_pairs`):
@@ -776,8 +464,8 @@ def bilinear_irregular(
             ],
         )
     # The (t, s) chain is materialized behind Generate barriers
-    # (_ts_chain_staged / _barrier_stage). Why: Catalyst's predicate
-    # pushdown substitutes deterministic project aliases into pushed
+    # (_ts_chain_staged). Why: Catalyst's predicate pushdown
+    # substitutes deterministic project aliases into pushed
     # filters with no cost guard — profiled here (r17-opt), the
     # IS NOT NULL filters were merged into a join condition, where
     # every x1..v4 reference re-expanded and the chain ran twice more
@@ -803,39 +491,6 @@ def bilinear_irregular(
     )
 
 
-def bilinear_irregular_pandas(
-    src: DataFrame,
-    tgt: DataFrame,
-    radius_m: float,
-    k: int = 16,
-) -> DataFrame:
-    """The original per-target Arrow kernel (reference-shaped NumPy
-    code, bilinear/_base.py one-to-one). Kept as the independent
-    cross-check for the fused column plan — same output contract;
-    tests assert row-for-row equality."""
-    pairs = knn_join(src, tgt, radius_m, k=k)
-    enriched = (
-        pairs.join(
-            src.select(
-                F.col("src_id"),
-                F.col("lon").alias("s_lon"),
-                F.col("lat").alias("s_lat"),
-                "value",
-            ),
-            "src_id",
-        )
-        .join(
-            tgt.select(
-                F.col("tgt_id"),
-                F.col("lon").alias("t_lon"),
-                F.col("lat").alias("t_lat"),
-            ),
-            "tgt_id",
-        )
-    )
-    return enriched.groupBy("tgt_id").applyInPandas(_per_target, OUT_SCHEMA)
-
-
 def bilinear_lut(
     src: DataFrame,
     tgt: DataFrame,
@@ -855,7 +510,9 @@ def bilinear_lut(
     LUT scan + one value join + a weighted sum — no kNN join, no
     applyInPandas. With a ``cache`` the LUT round-trips through the
     bucketed-by-tgt_id external table, so the apply-side agg is also
-    shuffle-free.
+    shuffle-free. The cache key is built from ``src_hash`` and
+    ``tgt_hash``, so both are required with a ``cache``: two
+    geometries must never share a LUT by default.
     """
 
     def compute():
@@ -865,10 +522,16 @@ def bilinear_lut(
 
     if cache is None:
         return compute()
+    if not (src_hash and tgt_hash):
+        raise ValueError(
+            "bilinear_lut: a cache needs both src_hash and tgt_hash "
+            "(the LUT key); without them different geometries would "
+            "share one LUT"
+        )
     return cache.get_or_compute(
         src.sparkSession,
-        src_hash or "bilinear_src",
-        tgt_hash or "bilinear_tgt",
+        src_hash,
+        tgt_hash,
         radius_m,
         ("bilinear", k),
         compute,

@@ -153,8 +153,9 @@ def _bilinear_irregular_oracle(
     bilinear/_base.py:336-521) as nested CASE. All post-candidate
     arithmetic is +,−,*,/,sqrt on bitwise-identical inputs (derived
     lon/lat are trig-free), so both engines take the same branch at
-    every 0 ≤ · ≤ 1 gate; divisions are NULL-guarded (both engines
-    yield NULL on x/0, dropping the same rows).
+    every 0 ≤ · ≤ 1 gate; divisions are ``<> 0``-guarded (Spark's
+    try_divide yields NULL and DuckDB's ``/`` inf/NaN on x/0, and the
+    gates drop the same rows).
 
     ``value_expr`` substitutes the gathered channel (the LUT-reuse twin
     applies a derived second channel through the SAME corner/weight
@@ -176,22 +177,26 @@ def _bilinear_irregular_oracle(
              {r} * cos(radians({lat})) * sin(radians({lon})) AS {px}gy,
              {r} * sin(radians({lat})) AS {px}gz"""
     )
-    # the quadratic-root / linear-other CASE texts and every stage
-    # formula are SHARED with the Spark fused plan
-    # (operators/bilinear_irregular.py) — one source of truth, both
-    # engines execute the identical text
+    # every solve formula comes from the builders the Spark staged
+    # solve (operators/bilinear_irregular.py _ts_chain_staged) also
+    # calls; here with bare CTE column names and plain ``/`` division
     from pyresample_spark.operators.bilinear_irregular import (
         ABC_SQL,
-        FIN_S_SQL,
-        FIN_T_SQL,
+        fin_case,
+        interp_sql,
         lin_other_case as lin,
         par_t0_case,
         par_ts_case,
-        quad_root_case as root,
+        quad_disc,
+        quad_root_gate,
+        quad_roots,
     )
-    PAR_T0_SQL = par_t0_case()
-    PAR_T_SQL = par_ts_case("t")
-    PAR_S_SQL = par_ts_case("s")
+
+    def root(qa, qb, qc, qd):
+        return quad_root_gate(qa, qb, qd, *quad_roots(qa, qb, qc, qd))
+
+    fin = dict(irr=("t_irr", "s_irr"), up=("t_up", "s_up"),
+               par=("t_par", "s_par"))
     return f"""
     WITH s AS (
       SELECT event_id AS src_id, ({value_expr}) AS value,
@@ -272,8 +277,8 @@ def _bilinear_irregular_oracle(
       SELECT *, {", ".join(f"{t} AS {n}" for n, t in ABC_SQL)}
       FROM corners
     ),
-    g2 AS MATERIALIZED (SELECT *, qb1 * qb1 - 4.0 * qa1 * qc1 AS qd1,
-                  qb2 * qb2 - 4.0 * qa2 * qc2 AS qd2 FROM g1),
+    g2 AS MATERIALIZED (SELECT *, {quad_disc('qa1', 'qb1', 'qc1')} AS qd1,
+                  {quad_disc('qa2', 'qb2', 'qc2')} AS qd2 FROM g1),
     g3 AS MATERIALIZED (
       SELECT *, {root('qa1', 'qb1', 'qc1', 'qd1')} AS t_irr,
                 {root('qa2', 'qb2', 'qc2', 'qd2')} AS s_up
@@ -285,23 +290,23 @@ def _bilinear_irregular_oracle(
       FROM g3
     ),
     g5 AS MATERIALIZED (
-      SELECT *, {PAR_T0_SQL} AS t_par0
+      SELECT *, {par_t0_case()} AS t_par0
       FROM g4
     ),
     g6 AS MATERIALIZED (
-      SELECT *, {PAR_T_SQL} AS t_par, {PAR_S_SQL} AS s_par
+      SELECT *, {par_ts_case('t', 't_par0')} AS t_par,
+                {par_ts_case('s', 't_par0')} AS s_par
       FROM g5
     ),
     fin AS MATERIALIZED (
-      SELECT *, {FIN_T_SQL} AS tf, {FIN_S_SQL} AS sf
+      SELECT *, {fin_case('t', **fin)} AS tf, {fin_case('s', **fin)} AS sf
       FROM g6
     )
     SELECT tgt_id,{'' if slim else '''
            CAST(id3 AS BIGINT) AS c00, CAST(id4 AS BIGINT) AS c01,
            CAST(id1 AS BIGINT) AS c10, CAST(id2 AS BIGINT) AS c11,'''}
            ROUND(tf, 6) + 0.0 AS t, ROUND(sf, 6) + 0.0 AS s,
-           ROUND(v1 * (1.0 - sf) * (1.0 - tf) + v2 * sf * (1.0 - tf)
-               + v3 * (1.0 - sf) * tf + v4 * sf * tf, 6) + 0.0 AS bilinear_value
+           ROUND({interp_sql('tf', 'sf')}, 6) + 0.0 AS bilinear_value
     FROM fin WHERE tf IS NOT NULL AND sf IS NOT NULL
     """
 
@@ -311,12 +316,12 @@ def q_bilinear_irregular(spark, sf_dir):
     """Irregular-swath bilinear (bilinear/_base.py re-expressed): kNN
     candidates → strict-sign quadrant corner pick → the reference's
     closed-form quadratic (t, s) solve with its irregular →
-    uprights-parallel → parallelogram fallback chain, in an
-    applyInPandas kernel. Since round 2 the solve is closed-form
-    (no iteration), so the FULL pipeline is replayed as a DuckDB
-    oracle — upgrading the r1 rows-only weak row to a hash-checked
-    one. Golden-value parity with analytic regular-grid bilinear is
-    additionally pytest-verified (tests/test_bilinear.py)."""
+    uprights-parallel → parallelogram fallback chain, as staged
+    codegen'd projects (no Python in the plan). The solve is
+    closed-form (no iteration), so the FULL pipeline is replayed as a
+    DuckDB oracle built from the same formula builders. Golden-value
+    parity with analytic regular-grid bilinear is additionally
+    pytest-verified (tests/test_bilinear.py)."""
     from pyresample_spark.operators.bilinear_irregular import bilinear_irregular
     from pyresample_spark.queries.joins import _src
 
