@@ -32,19 +32,13 @@ build side and avoids the shuffle entirely.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from pyresample_spark.functions.geo import R_EARTH, lonlat2xyz
-
-# Neighbor-cell box-distance prune in _radius_pairs (VERDICT r15
-# item 4) — module flag ONLY so tools/ab_box_prune.py can interleave
-# A/B plans inside one session (removes the box-state time trend that
-# poisons run-to-run bench comparisons). Production value: True.
-BOX_PRUNE = True
+from pyresample_spark.plans.inputs import file_identity
 
 # Broadcast the BUILD side of the cell join when its parquet footprint
 # is small (guide §3.1: replace the shuffle of both sides with a
@@ -56,14 +50,12 @@ BOX_PRUNE = True
 # production scale (a multi-TB source) the estimate exceeds the bound
 # and the plan falls back to the shuffle join unchanged — the switch
 # is data-adaptive, not tuned to local mode.
-BROADCAST_SRC_BYTES = int(
-    os.environ.get("PYRESAMPLE_SPARK_KNN_BCAST_BYTES", str(32 << 20))
-)
+BROADCAST_SRC_BYTES = 32 << 20
 
 
 def broadcast_bound(spark) -> int:
     """Effective parquet-bytes bound for broadcasting the cell-join
-    build side (ADVICE r17): the env-tunable BROADCAST_SRC_BYTES,
+    build side (ADVICE r17): BROADCAST_SRC_BYTES,
     additionally capped by the session's own
     ``spark.sql.autoBroadcastJoinThreshold`` so an explicit broadcast
     never ignores the cluster operator's sizing/disable decision —
@@ -93,24 +85,8 @@ def broadcast_bound(spark) -> int:
 def _scan_bytes_hint(df: DataFrame) -> int | None:
     """Total on-disk bytes of the DataFrame's input files, or None when
     the inputs are not file scans (e.g. range-generated grids)."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
-    for uri in files:
-        path = uri
-        if path.startswith("file:"):
-            path = path[5:]
-            while path.startswith("//"):
-                path = path[1:]
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return None
-    return total
+    ident = file_identity(df)
+    return None if ident is None else sum(size for _, size, _ in ident)
 
 
 def chord_length(radius_m: float, r_earth: float = R_EARTH) -> float:
@@ -381,22 +357,18 @@ def _radius_pairs(
         # recomputing the cell walls (gx ~1e7 m ⇒ ~1e-9 m ulps), so
         # float noise can never prune an accepted pair. Pure column
         # predicate below the join — Catalyst pushes it under the
-        # shuffle; no new exchange. BOX_PRUNE is the A/B switch
-        # (tools/ab_box_prune.py) — leave True.
-        if BOX_PRUNE:
-            def _box_gap(g: str, cidx: str) -> str:
-                lo = f"{cidx} * {cell!r}D"
-                return (
-                    f"greatest({lo} - {g}, {g} - {lo} - {cell!r}D, 0.0D)"
-                )
+        # shuffle; no new exchange.
+        def _box_gap(g: str, cidx: str) -> str:
+            lo = f"{cidx} * {cell!r}D"
+            return f"greatest({lo} - {g}, {g} - {lo} - {cell!r}D, 0.0D)"
 
-            bx = _box_gap("t_gx", "cx3")
-            by = _box_gap("t_gy", "cy3")
-            bz = _box_gap("t_gz", "cz3")
-            t = t.filter(
-                f"{bx} * {bx} + {by} * {by} + {bz} * {bz}"
-                f" <= {((eff + 1e-6) ** 2)!r}D"
-            )
+        bx = _box_gap("t_gx", "cx3")
+        by = _box_gap("t_gy", "cy3")
+        bz = _box_gap("t_gz", "cz3")
+        t = t.filter(
+            f"{bx} * {bx} + {by} * {by} + {bz} * {bz}"
+            f" <= {((eff + 1e-6) ** 2)!r}D"
+        )
     join_keys = list(cell_keys)
     if salt_factor and salt_factor > 1:
         s = s.withColumn("salt", F.pmod(F.col("src_id"), F.lit(salt_factor)))

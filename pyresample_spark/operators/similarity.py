@@ -21,10 +21,10 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pyresample_spark.plans.inputs import file_identity, plan_memo
 
 
 def dot(a, b) -> Column:
@@ -146,43 +146,18 @@ def cosine_topk(
 # plans unchanged — data-adaptive, not local-mode tuning. 1024
 # centroids × 64 dims ≈ 0.5 MB of plan literals is the comfort bound;
 # real IVF models at 100 TB use far more centroids and take the join.
-IVF_LITERAL_MAX = int(
-    os.environ.get("PYRESAMPLE_SPARK_IVF_LITERAL_MAX", "1024")
-)
-_IVF_CEN_CACHE: dict = {}
-_IVF_COL_CACHE: dict = {}
+IVF_LITERAL_MAX = 1024
 
 
 def _centroid_rows(cen: DataFrame):
-    """``(rows, memo_key)``: the collected (centroid_id, cv, cvn) rows
-    when the centroid set is provably small (≤ IVF_LITERAL_MAX),
-    complete (no NULL id or vector) and packable, else None; and the
-    memo key, None when the input has no stable identity.
+    """The collected (centroid_id, cv, cvn) rows, sorted by id, when
+    the centroid set is provably small (≤ IVF_LITERAL_MAX), complete
+    (no NULL id or vector) and packable; else None (join tier).
 
     cvn is computed BY SPARK (with_norm ran before the collect), so
-    the literal tier divides by bit-identical norms. Memoized per
-    (plan semantic hash, input-file identity) exactly like
-    _pq_codebook: the collect is plan-time input consumed once per
-    process, not once per build (builders run inside the bench's
-    timed region)."""
-    stats = []
-    try:
-        for uri in sorted(cen.inputFiles()):
-            path = uri
-            if path.startswith("file:"):
-                path = path[5:]
-                while path.startswith("//"):
-                    path = path[1:]
-            try:
-                st = os.stat(path)
-                stats.append((path, st.st_size, st.st_mtime_ns))
-            except OSError:
-                stats.append((path, None, None))
-        key = (cen.semanticHash(), tuple(stats))
-    except Exception:
-        key = None
-    if key is not None and key in _IVF_CEN_CACHE:
-        return _IVF_CEN_CACHE[key], key
+    the literal tier divides by bit-identical norms. Not memoized
+    itself: ivf_assign keeps the literal tier built from these rows
+    in one ``plan_memo`` entry."""
     rows = cen.limit(IVF_LITERAL_MAX + 1).collect()
     if (
         len(rows) > IVF_LITERAL_MAX
@@ -194,22 +169,16 @@ def _centroid_rows(cen: DataFrame):
         or len({len(r.cv) for r in rows}) != 1
         or not all(0 <= r.centroid_id < _COS_PACK for r in rows)
     ):
-        out = None
-    else:
-        out = sorted(rows, key=lambda r: r.centroid_id)
-    if key is not None:
-        _IVF_CEN_CACHE[key] = out
-    return out, key
+        return None
+    return sorted(rows, key=lambda r: r.centroid_id)
 
 
-def _ivf_literal_cols(rows, vec_col: str, memo: bool = True):
+def _ivf_literal_cols(rows, vec_col: str):
     """(centroid literal column ``_cen``, packed-argmin SQL text) for
-    the literal-centroid argmax — the Column is memoized per
-    collected-rows object (the _cb_cols rationale: the py4j literal
-    round trips should be paid once per process, not per plan).
-    ``memo=False`` (rows collected afresh, not held by the centroid
-    memo) skips the insert: an entry pins its rows, so keying fresh
-    lists would grow the memo with every call.
+    the literal-centroid argmax. ivf_assign builds it inside the same
+    ``plan_memo`` entry as the collect (the _cb_cols rationale: the
+    py4j literal round trips should be paid once per process, not per
+    plan).
 
     Shape: ONE array<struct<cid, cvn, cv>> literal column + one
     ``array_min(transform(_cen, …aggregate fold…))`` expression — the
@@ -229,9 +198,6 @@ def _ivf_literal_cols(rows, vec_col: str, memo: bool = True):
     round/pack arithmetic is the same text."""
     from pyresample_spark.functions.exprs import let_expr as _let
 
-    ent = _IVF_COL_CACHE.get((id(rows), vec_col))
-    if ent is not None and ent[0] is rows:
-        return ent[1], ent[2]
     d = len(rows[0].cv)
     cen = F.array(*[
         F.struct(
@@ -263,8 +229,6 @@ def _ivf_literal_cols(rows, vec_col: str, memo: bool = True):
         f"named_struct('bk', array_min(transform(_cen, s -> {key})),"
         f" 'vn', w.vn)",
     )
-    if memo:
-        _IVF_COL_CACHE[(id(rows), vec_col)] = (rows, cen, expr)
     return cen, expr
 
 
@@ -307,10 +271,22 @@ def ivf_assign(
         F.col(vec_col).alias("cv"),
         F.col("vnorm").alias("cvn"),
     )
-    rows, memo_key = _centroid_rows(cen)
-    if rows is not None:
-        cen_col, expr = _ivf_literal_cols(
-            rows, vec_col, memo=memo_key is not None)
+
+    def literal_tier():
+        rows = _centroid_rows(cen)
+        return None if rows is None else _ivf_literal_cols(rows, vec_col)
+
+    # memoized per (input-file identity, plan semantic hash): the
+    # collect is plan-time input consumed once per process, not once
+    # per build (builders run inside the bench's timed region);
+    # in-memory centroid frames have no identity and are not memoized
+    ident = file_identity(cen)
+    lit = plan_memo(
+        ident and ("ivf-literal", ident, cen.semanticHash(), vec_col),
+        literal_tier,
+    )
+    if lit is not None:
+        cen_col, expr = lit
         # vec_col must survive into the barrier stage in BOTH modes —
         # the argmin expression reads it; it is dropped from the
         # output when carry_vec=False.

@@ -35,6 +35,7 @@ import json
 import os
 import shutil
 import socket
+import tempfile
 import threading
 import time
 
@@ -58,9 +59,16 @@ LOCK_HARD_STALE_S = 3600.0
 class LutCache:
     """Bucketed-table-backed cache of precomputed join LUTs."""
 
-    def __init__(self, base_dir: str, num_buckets: int = DEFAULT_BUCKETS,
+    def __init__(self, base_dir: str | None = None,
+                 num_buckets: int = DEFAULT_BUCKETS,
                  bucket_col: str = "tgt_id"):
-        self.base_dir = base_dir
+        # None: the deployment's PYRESAMPLE_SPARK_LUT_DIR, else a
+        # per-host temp dir
+        self.base_dir = (
+            base_dir
+            or os.environ.get("PYRESAMPLE_SPARK_LUT_DIR")
+            or os.path.join(tempfile.gettempdir(), "pyresample_spark_luts")
+        )
         self.num_buckets = num_buckets
         self.bucket_col = bucket_col
 

@@ -19,11 +19,14 @@ Hash-stability rules used by every query here:
 
 from __future__ import annotations
 
+import hashlib
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from pyresample_spark.plans.inputs import file_identity, plan_memo
 
 
 def rnd(col, n: int = 6):
@@ -67,19 +70,16 @@ def register(name: str, oracle: str | None = None, tags: tuple = ()):
 # projection math) serializes onto one core. When the file provably
 # cannot split to the session's parallelism, round-robin repartition
 # right after the read. The decision reads the parquet footer on the
-# driver (no Spark job, memoized by path+mtime+size) and is
+# driver (no Spark job, memoized per file version by plan_memo) and is
 # data-adaptive, NOT tuned to local mode: a production-scale input has
 # many row groups / files, the gate never fires, and the plan is
 # byte-identical to today's. Results are unaffected — the registry-wide
 # hash-stability rules above make every aggregate order-insensitive,
 # and round-robin repartition is deterministic (sort-before-repartition
 # is on by default).
-_SPREAD_ENABLED = os.environ.get("PYRESAMPLE_SPARK_SCAN_SPREAD", "1") != "0"
 # A task should own at least this many rows before a spread is worth
-# its scheduling overhead (env-overridable).
-_SPREAD_MIN_ROWS = int(
-    os.environ.get("PYRESAMPLE_SPARK_SCAN_SPREAD_MIN_ROWS", "64")
-)
+# its scheduling overhead.
+_SPREAD_MIN_ROWS = 64
 # Tables whose downstream per-row work is heavy enough to pay for the
 # repartition (text shingling/hashing, vector scoring). Measured at
 # sf0.1: spreading these cut q_pq_search wall 2.38→1.14 s and
@@ -88,34 +88,25 @@ _SPREAD_MIN_ROWS = int(
 # the round-robin exchange shipped 600k rows that map-side partial
 # aggregation would have reduced to 6) — so spread is opt-in by table,
 # not blanket.
-_SPREAD_TABLES = frozenset(
-    os.environ.get(
-        "PYRESAMPLE_SPARK_SCAN_SPREAD_TABLES", "documents,embeddings"
-    ).split(",")
-)
-_SPREAD_META: dict = {}
+_SPREAD_TABLES = frozenset({"documents", "embeddings"})
 
 
 def _spread_parts(path: str, cores: int) -> int:
     """Target partition count for an unsplittable small scan, or 0 to
     leave the scan alone (multi-row-group file, directory source,
     unreadable footer, or too few rows to be worth tasks)."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return 0
-    key = (path, st.st_mtime_ns, st.st_size)
-    meta = _SPREAD_META.get(key)
-    if meta is None:
+
+    def footer():
         try:
             import pyarrow.parquet as pq
 
             md = pq.ParquetFile(path).metadata
-            meta = (md.num_rows, md.num_row_groups)
+            return md.num_rows, md.num_row_groups
         except Exception:
-            meta = (0, 1 << 30)  # not a single parquet file: never spread
-        _SPREAD_META[key] = meta
-    rows, row_groups = meta
+            return 0, 1 << 30  # not a single parquet file: never spread
+
+    ident = file_identity(path)
+    rows, row_groups = plan_memo(ident and ("scan-spread", ident), footer)
     target = min(cores, rows // _SPREAD_MIN_ROWS)
     if target < 2 or row_groups >= target:
         return 0
@@ -131,11 +122,26 @@ def table(
     df = spark.read.parquet(path)
     if spread is None:
         spread = name in _SPREAD_TABLES
-    if spread and _SPREAD_ENABLED:
+    if spread:
         n = _spread_parts(path, spark.sparkContext.defaultParallelism)
         if n:
             df = df.repartition(n)
     return df
+
+
+def lut_src_hash(tag: str, sf_dir: str, name: str) -> str:
+    """LUT source hash of table ``name``: ``tag``, the sf dir and the
+    file's (size, mtime) fingerprint, so a table regenerated in place
+    is a cache miss, never a stale LUT. The digest text is fixed —
+    LUT caches on disk are keyed by it."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    ident = file_identity(path)
+    if ident is None:
+        raise FileNotFoundError(path)
+    ((_, size, mtime_ns),) = ident
+    return hashlib.sha1(
+        f"{tag}|{os.path.abspath(sf_dir)}|{size}|{mtime_ns}".encode()
+    ).hexdigest()[:16]
 
 
 # WINDOW (generated by tools/window_plan.py --through 16

@@ -11,7 +11,6 @@ distance, (dist, src_id) ranking).
 from __future__ import annotations
 
 import hashlib
-import os
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -21,7 +20,7 @@ from pyresample_spark.functions.geo import R_EARTH
 from pyresample_spark.geometry import AreaDefinition
 from pyresample_spark.operators.bucket import events_points
 from pyresample_spark.operators.knn import chord_length, gauss_weight, knn_join
-from pyresample_spark.queries import register, rnd
+from pyresample_spark.queries import lut_src_hash, register, rnd
 from pyresample_spark.queries.geo_scalar import PTS_SQL
 
 KNN_AREA = AreaDefinition(
@@ -521,26 +520,15 @@ def gauss_lut(spark, sf_dir, cache_dir: str | None = None):
     (docs/concepts/resampling.rst:98-101). At 100 TB the one expensive
     spatial join amortizes over every channel/dataset gather, which
     becomes a plain equi-join on src_id."""
-    import tempfile
-
     from pyresample_spark.plans.lut import LutCache
 
-    cache = LutCache(
-        cache_dir
-        or os.environ.get("PYRESAMPLE_SPARK_LUT_DIR")
-        or os.path.join(tempfile.gettempdir(), "pyresample_spark_luts")
-    )
+    cache = LutCache(cache_dir)
     # the source identity includes the parquet file's (size, mtime)
     # fingerprint: the driver has regenerated events.parquet in place
     # across rounds (e.g. the TIMESTAMP(NANOS)→MICROS flavor change),
     # and a path-only key would silently serve a stale LUT for the
     # new data
-    ev_path = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(ev_path)
-    src_hash = hashlib.sha1(
-        f"events-points|{os.path.abspath(sf_dir)}|{st.st_size}|"
-        f"{st.st_mtime_ns}".encode()
-    ).hexdigest()[:16]
+    src_hash = lut_src_hash("events-points", sf_dir, "events")
     tgt_hash = hashlib.sha1(repr(KNN_AREA).encode()).hexdigest()[:16]
     return cache.get_or_compute(
         spark, src_hash, tgt_hash, RADIUS_M, 8,

@@ -13,7 +13,7 @@ from pyresample_spark.operators.resample_grid import (
     synth_image,
     synth_image_sql,
 )
-from pyresample_spark.queries import register, rnd
+from pyresample_spark.queries import lut_src_hash, register, rnd
 from pyresample_spark.queries.core import TEST_AREA, WORLD_AREA
 
 EQC_AREA = eqc_area_world()
@@ -363,10 +363,6 @@ def q_bilinear_lut_reuse(spark, sf_dir):
     pipeline from scratch on the derived channel, proving the
     persisted LUT applies a new channel byte-identically to a fresh
     solve."""
-    import hashlib
-    import os
-    import tempfile
-
     from pyresample_spark.operators.bilinear_irregular import (
         bilinear_apply,
         bilinear_lut,
@@ -380,18 +376,10 @@ def q_bilinear_lut_reuse(spark, sf_dir):
         (F.col("lon") + 0.21).alias("lon"),
         (F.col("lat") + 0.13).alias("lat"),
     )
-    cache = LutCache(
-        os.environ.get("PYRESAMPLE_SPARK_LUT_DIR")
-        or os.path.join(tempfile.gettempdir(), "pyresample_spark_luts")
-    )
+    cache = LutCache()
     # fingerprint the source file (size+mtime) — same staleness guard
     # as gauss_lut (joins.py): the driver regenerates parquet in place
-    ev = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(ev)
-    src_hash = hashlib.sha1(
-        f"bilinear-src|{os.path.abspath(sf_dir)}|{st.st_size}|"
-        f"{st.st_mtime_ns}".encode()
-    ).hexdigest()[:16]
+    src_hash = lut_src_hash("bilinear-src", sf_dir, "events")
     lut = bilinear_lut(
         src, tgt, 150_000.0, k=32, cache=cache,
         src_hash=src_hash, tgt_hash="evt-offset-0.21-0.13",
@@ -3371,16 +3359,9 @@ def q_gradient_lut_reuse(spark, sf_dir):
     kNN and bilinear LUTs). The oracle re-runs the walk from scratch
     on the derived channel, proving the persisted LUT byte-equivalent
     to a fresh walk."""
-    import os
-    import tempfile
-
     from pyresample_spark.plans.lut import LutCache
 
-    cache = LutCache(
-        os.environ.get("PYRESAMPLE_SPARK_LUT_DIR")
-        or os.path.join(tempfile.gettempdir(), "pyresample_spark_luts"),
-        bucket_col="tgt_id",
-    )
+    cache = LutCache()
     import hashlib as _hl
 
     from pyresample_spark.operators import gradient_walk as _gw

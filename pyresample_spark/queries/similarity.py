@@ -3,6 +3,8 @@ embedding near-dup, IVF and sign-LSH approximate search."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from pyresample_spark.operators.similarity import (
@@ -14,7 +16,8 @@ from pyresample_spark.operators.similarity import (
     topk_by_cosine,
     with_norm,
 )
-from pyresample_spark.queries import register, rnd, table
+from pyresample_spark.plans.inputs import file_identity, plan_memo
+from pyresample_spark.queries import lut_src_hash, register, rnd, table
 
 # DuckDB: embeddings as double lists with norms.
 _VD_SQL = """
@@ -1080,24 +1083,11 @@ def q_ann_ivf_reuse(spark, sf_dir):
     cell-for-cell (embedding floats and precomputed norms round-trip
     parquet exactly). At 100 TB this is how ANN actually ships —
     index build is a batch job, searches are cheap scans."""
-    import hashlib
-    import os
-    import tempfile
-
     from pyresample_spark.plans.lut import LutCache
 
     emb = _emb(spark, sf_dir)
-    cache = LutCache(
-        os.environ.get("PYRESAMPLE_SPARK_LUT_DIR")
-        or os.path.join(tempfile.gettempdir(), "pyresample_spark_luts"),
-        bucket_col="centroid_id",
-    )
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(p)
-    src_hash = hashlib.sha1(
-        f"ivf-index|{os.path.abspath(sf_dir)}|{st.st_size}|"
-        f"{st.st_mtime_ns}".encode()
-    ).hexdigest()[:16]
+    cache = LutCache(bucket_col="centroid_id")
+    src_hash = lut_src_hash("ivf-index", sf_dir, "embeddings")
 
     def compute():
         centroids = emb.filter(F.col("vec_id") % 50 == 0)
@@ -1131,48 +1121,35 @@ def q_ann_ivf_reuse(spark, sf_dir):
     )
 
 
-_CB_CACHE: dict = {}
-
-
-def _pq_codebook(emb, sf_dir: str | None = None):
+def _pq_codebook(emb, sf_dir: str):
     """Deterministic PQ codebook rows: vec_id % 50 == 0 below 2500 —
     BOUNDED at ≤50 entries at every scale factor (a real PQ codebook
-    is fixed-size regardless of corpus).
+    is fixed-size regardless of corpus) — returned as their literal
+    columns (:func:`_cb_cols`).
 
-    Memoized per (embeddings-file identity, ``emb`` plan semantic
-    hash) when ``sf_dir`` is given: the codebook is plan-time input
-    consumed by every PQ builder, and without the memo each fresh
-    builder paid a full Spark collect job (~1 s at sf0.1) to re-read
-    the same ≤50 rows (VERDICT r7 item 3). The semantic hash keeps a
-    caller passing a filtered/derived frame from being served the
-    full-corpus codebook collected from a different frame."""
-    import os
+    Memoized by ``plan_memo`` per (embeddings-file identity, ``emb``
+    plan semantic hash), the columns built with the collect in one
+    entry: the codebook is plan-time input consumed by every PQ
+    builder, and without the memo each fresh builder paid a full
+    Spark collect job (~1 s at sf0.1) to re-read the same ≤50 rows
+    (VERDICT r7 item 3) plus the py4j literal round trips of its
+    columns. The semantic hash keeps a caller passing a
+    filtered/derived frame from being served the full-corpus codebook
+    collected from a different frame."""
 
-    key = None
-    if sf_dir is not None:
-        p = os.path.join(sf_dir, "embeddings.parquet")
-        st = os.stat(p)
-        key = (
-            os.path.abspath(p), st.st_size, st.st_mtime_ns,
-            emb.semanticHash(),
-        )
-        if key in _CB_CACHE:
-            return _CB_CACHE[key]
-    cb = sorted(
-        emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 2500))
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
+    def build():
+        rows = emb.filter(
+            (F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 2500)
+        ).select("vec_id", "embedding").collect()
+        return _cb_cols(sorted(rows, key=lambda r: r.vec_id))
+
+    ident = file_identity(os.path.join(sf_dir, "embeddings.parquet"))
+    return plan_memo(
+        ident and ("pq-codebook", ident, emb.semanticHash()), build
     )
-    if key is not None:
-        _CB_CACHE[key] = cb
-    return cb
 
 
-_CB_COL_CACHE: dict = {}
-
-
-def _cb_cols(cb):
+def _cb_cols(rows):
     """The codebook bound as ONE nested-array literal column per
     subspace (``_cb{j}`` : array<array<double>>), for expressions that
     reference ``transform(_cb{j}, ...)``. Replaces the former inline
@@ -1181,23 +1158,17 @@ def _cb_cols(cb):
     alone (VERDICT r7 item 3); values are the identical float64s, so
     every oracle is unchanged.
 
-    The Column list is memoized per codebook OBJECT (the codebook
-    itself is memoized per file identity, so ids are stable and kept
-    alive by the cache): ``F.lit`` on a nested list recurses into one
-    py4j call per element — ~3.2k round trips ≈ 1 s — which should be
-    paid once per process, not once per plan. Columns are immutable
-    expression wrappers, safe to reuse across DataFrames."""
-    ent = _CB_COL_CACHE.get(id(cb))
-    if ent is not None and ent[0] is cb:
-        return ent[1]
-    cols = [
+    ``F.lit`` on a nested list recurses into one py4j call per element
+    — ~3.2k round trips ≈ 1 s — so the columns are built inside
+    :func:`_pq_codebook`'s ``plan_memo`` entry: paid once per process
+    and codebook file version, not once per plan. Columns are
+    immutable expression wrappers, safe to reuse across DataFrames."""
+    return [
         F.lit(
-            [[float(x) for x in r.embedding[j * 8:(j + 1) * 8]] for r in cb]
+            [[float(x) for x in r.embedding[j * 8:(j + 1) * 8]] for r in rows]
         ).alias(f"_cb{j}")
         for j in range(8)
     ]
-    _CB_COL_CACHE[id(cb)] = (cb, cols)
-    return cols
 
 
 @register(
@@ -1284,7 +1255,7 @@ def q_pq_encode(spark, sf_dir):
             f"named_struct('code', {code}, 'mse_nano', {mse_nano})",
         ),
     )
-    return emb.select("vec_id", "embedding", *_cb_cols(cb)).selectExpr(
+    return emb.select("vec_id", "embedding", *cb).selectExpr(
         "vec_id", expr + " AS r"
     ).select(
         "vec_id",
@@ -1404,7 +1375,7 @@ def _pq_codes_df(emb, cb):
         "w",
         _let([(f"d{j}", ds_expr(j)) for j in range(8)], "q", f"({code})"),
     )
-    return emb.select("vec_id", "embedding", *_cb_cols(cb)).selectExpr(
+    return emb.select("vec_id", "embedding", *cb).selectExpr(
         "vec_id", enc_expr + " AS pq_code"
     )
 
@@ -1450,7 +1421,7 @@ def _pq_adc_topk(enc, emb, cb):
     probes = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("probe_id"),
         F.col("embedding").alias("pv"),
-        *_cb_cols(cb),
+        *cb,
     ).selectExpr("probe_id", *_adc_lut_exprs())
     pairs = enc.join(
         F.broadcast(probes), F.col("vec_id") != F.col("probe_id")
@@ -1499,25 +1470,12 @@ def q_pq_search_reuse(spark, sf_dir):
     finds the cache warm never reads an embedding for the corpus side
     — only the (tiny) probe set. The oracle is IDENTICAL to
     q_pq_search's: codes are integers, so persistence must be exact."""
-    import hashlib
-    import os
-    import tempfile
-
     from pyresample_spark.plans.lut import LutCache
 
     emb = _emb(spark, sf_dir)
     cb = _pq_codebook(emb, sf_dir)
-    cache = LutCache(
-        os.environ.get("PYRESAMPLE_SPARK_LUT_DIR")
-        or os.path.join(tempfile.gettempdir(), "pyresample_spark_luts"),
-        bucket_col="vec_id",
-    )
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(p)
-    src_hash = hashlib.sha1(
-        f"pq-codes|{os.path.abspath(sf_dir)}|{st.st_size}|"
-        f"{st.st_mtime_ns}".encode()
-    ).hexdigest()[:16]
+    cache = LutCache(bucket_col="vec_id")
+    src_hash = lut_src_hash("pq-codes", sf_dir, "embeddings")
     enc = cache.get_or_compute(
         spark, src_hash, "pq-mod50-codebook", 0.0, ("pq_codes", 1),
         lambda: _pq_codes_df(emb, cb),
@@ -1824,26 +1782,13 @@ def q_ivf_pq_search(spark, sf_dir):
     corpus × centroids assignment pass + the in-row encode — is the
     batch job; searches are cheap scans of the already-partitioned
     17-byte rows)."""
-    import hashlib
-    import os
-    import tempfile
-
     from pyresample_spark.operators.similarity import ivf_assign
     from pyresample_spark.plans.lut import LutCache
 
     emb = _emb(spark, sf_dir)
     cb = _pq_codebook(emb, sf_dir)
-    cache = LutCache(
-        os.environ.get("PYRESAMPLE_SPARK_LUT_DIR")
-        or os.path.join(tempfile.gettempdir(), "pyresample_spark_luts"),
-        bucket_col="centroid_id",
-    )
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(p)
-    src_hash = hashlib.sha1(
-        f"ivfpq-index|{os.path.abspath(sf_dir)}|{st.st_size}|"
-        f"{st.st_mtime_ns}".encode()
-    ).hexdigest()[:16]
+    cache = LutCache(bucket_col="centroid_id")
+    src_hash = lut_src_hash("ivfpq-index", sf_dir, "embeddings")
 
     def build_index():
         centroids = emb.filter(F.col("vec_id") % 50 == 0)
@@ -1866,7 +1811,7 @@ def q_ivf_pq_search(spark, sf_dir):
             F.col("vec_id").alias("probe_id"),
             F.col("embedding").alias("pv"),
             "centroid_id",
-            *_cb_cols(cb),
+            *cb,
         )
         .selectExpr("probe_id", "centroid_id", *_adc_lut_exprs())
     )

@@ -15,7 +15,7 @@ from pyresample_spark.operators.dedup import (
     simhash_sql,
     words_col,
 )
-from pyresample_spark.queries import register, rnd, table
+from pyresample_spark.queries import lut_src_hash, register, rnd, table
 
 N_HASHES = 16
 BAND = 4
@@ -2840,10 +2840,6 @@ def q_dedup_incremental(spark, sf_dir):
     candidate pairs exactly as q_dedup_minhash reports them. The
     oracle recomputes both sides from scratch, proving the persisted
     index byte-equivalent to a fresh banding pass."""
-    import hashlib
-    import os
-    import tempfile
-
     from pyresample_spark.operators.dedup import (
         BAND_SIZE as _BS,
         N_HASHES as _NH,
@@ -2856,17 +2852,8 @@ def q_dedup_incremental(spark, sf_dir):
     existing = d.filter(F.col("doc_id") % 10 < 8)
     new = d.filter(F.col("doc_id") % 10 >= 8)
 
-    cache = LutCache(
-        os.environ.get("PYRESAMPLE_SPARK_LUT_DIR")
-        or os.path.join(tempfile.gettempdir(), "pyresample_spark_luts"),
-        bucket_col="sig",
-    )
-    p = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(p)
-    src_hash = hashlib.sha1(
-        f"lsh-bands-mod10lt8|{os.path.abspath(sf_dir)}|{st.st_size}|"
-        f"{st.st_mtime_ns}".encode()
-    ).hexdigest()[:16]
+    cache = LutCache(bucket_col="sig")
+    src_hash = lut_src_hash("lsh-bands-mod10lt8", sf_dir, "documents")
     # the k-tuple carries the signature FORMAT (hash count, band size,
     # shingle n, layout version): changing any of them must be a cache
     # MISS, never a silent stale-index near-empty candidate set

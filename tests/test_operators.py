@@ -2837,30 +2837,30 @@ def test_ivf_null_centroid_rows_fall_back_to_join_tier(spark):
             F.col("embedding").alias("cv"),
             F.col("vnorm").alias("cvn"),
         )
-        assert _centroid_rows(cen)[0] is None
+        assert _centroid_rows(cen) is None
         got = sorted(map(tuple, ivf_assign(corpus, cents).collect()))
         assert got == want
 
 
 def test_ivf_literal_memo_skips_unkeyed_centroids(spark, monkeypatch):
-    """Centroids with no stable identity (memo key None) are collected
-    afresh on every call; their literal columns must not be memoized,
-    or the memo grows by one pinned entry per call."""
-    from pyresample_spark.operators import similarity as S
+    """Centroids with no input files (an in-memory frame: no stable
+    identity) are collected afresh on every call; their literal tier
+    must not be memoized, or the plan memo would take one pinned
+    entry per call."""
+    from collections import OrderedDict
 
+    from pyresample_spark.operators import similarity as S
+    from pyresample_spark.plans import inputs
+
+    monkeypatch.setattr(inputs, "_MEMO", OrderedDict())
     corpus = _ivf_corpus(spark)
     clean = spark.createDataFrame(_IVF_CENTROIDS, _IVF_SCHEMA)
+    assert inputs.file_identity(clean) is None
     want = sorted(map(tuple, S.ivf_assign(corpus, clean).collect()))
-
-    def no_identity(self):
-        raise RuntimeError("no stable identity")
-
-    monkeypatch.setattr(type(clean), "semanticHash", no_identity)
-    before = len(S._IVF_COL_CACHE)
     for _ in range(2):
         got = sorted(map(tuple, S.ivf_assign(corpus, clean).collect()))
         assert got == want
-    assert len(S._IVF_COL_CACHE) == before
+    assert len(inputs._MEMO) == 0
 
 
 # --- gradient-search walk (operators/gradient_walk.py) ---
