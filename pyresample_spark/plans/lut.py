@@ -17,15 +17,22 @@ equi-join on src_id.
 Storage layout (VERDICT r4 item 2): the LUT is written hash-bucketed by
 ``tgt_id`` (``bucketBy().sortBy().saveAsTable()`` — Spark only supports
 bucketed writes through the table API, not bare parquet paths). The
-bucketed scan reports ``HashPartitioning(tgt_id, n)``, so every
-apply-side ``groupBy("tgt_id")`` / ``tgt_id`` equi-join over the loaded
-LUT co-locates WITHOUT a shuffle — on a 1000-executor cluster the
-per-channel apply is a local scan + broadcast join + partial-free agg.
-A ``.meta.json`` sidecar records the bucket spec so a NEW session (or a
-rebuilt catalog) can re-register the external table over the same files
-with ``CREATE TABLE ... CLUSTERED BY ... LOCATION`` and recover the
-shuffle-free layout; with no sidecar (pre-r5 caches) loads fall back to
-a plain parquet read.
+bucket count is the writing session's ``spark.sql.shuffle.partitions``,
+read at ``save()`` time, and the rows are repartitioned on the bucket
+column first, so each bucket is exactly one file
+(``sources/bucketed.py write_bucketed``). The bucketed scan reports
+``HashPartitioning(tgt_id, n)``, so every apply-side
+``groupBy("tgt_id")`` / ``tgt_id`` equi-join over the loaded LUT
+co-locates WITHOUT a shuffle — on a 1000-executor cluster the
+per-channel apply is a local scan + broadcast join + partial-free agg,
+one task per bucket. A LUT small enough to broadcast is broadcast
+instead, which turns the bucketed scan off, so empty buckets cost no
+tasks. A ``.meta.json`` sidecar records the bucket spec so a NEW
+session (or a rebuilt catalog) can re-register the external table over
+the same files with ``CREATE TABLE ... CLUSTERED BY ... LOCATION`` and
+recover the shuffle-free layout, whatever bucket count the cache was
+written with; with no sidecar (pre-r5 caches) loads fall back to a
+plain parquet read.
 """
 
 from __future__ import annotations
@@ -41,7 +48,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_BUCKETS = 32  # match spark.sql.shuffle.partitions in this rig
+from pyresample_spark.sources.bucketed import write_bucketed
 
 # Writer-lock bounds (VERDICT r5 item 4 / ADVICE r6). A live writer
 # heartbeats its lock (touches mtime every LOCK_HEARTBEAT_S), so a lock
@@ -60,7 +67,6 @@ class LutCache:
     """Bucketed-table-backed cache of precomputed join LUTs."""
 
     def __init__(self, base_dir: str | None = None,
-                 num_buckets: int = DEFAULT_BUCKETS,
                  bucket_col: str = "tgt_id"):
         # None: the deployment's PYRESAMPLE_SPARK_LUT_DIR, else a
         # per-host temp dir
@@ -69,7 +75,6 @@ class LutCache:
             or os.environ.get("PYRESAMPLE_SPARK_LUT_DIR")
             or os.path.join(tempfile.gettempdir(), "pyresample_spark_luts")
         )
-        self.num_buckets = num_buckets
         self.bucket_col = bucket_col
 
     def key(self, src_hash: str, tgt_hash: str, radius_m: float, k) -> str:
@@ -151,7 +156,8 @@ class LutCache:
             if os.path.exists(os.path.join(p, "_SUCCESS")):
                 return spark.read.parquet(p)
             return None
-        meta = json.load(open(mp))
+        with open(mp) as f:
+            meta = json.load(f)
         name = self._table(key)
         # IF NOT EXISTS: two threads of one session may race the
         # tableExists probe; the registration is idempotent (same DDL
@@ -251,18 +257,12 @@ class LutCache:
             beat.start()
             name = self._table(key)
             spark.sql(f"DROP TABLE IF EXISTS {name}")
-            (
-                lut.write.mode("overwrite")
-                .bucketBy(self.num_buckets, self.bucket_col)
-                .sortBy(self.bucket_col)
-                .option("path", p)
-                .saveAsTable(name)
-            )
+            n = write_bucketed(lut, name, [self.bucket_col], path=p)
             with open(self._meta_path(key), "w") as f:
                 json.dump(
                     {
                         "bucket_col": self.bucket_col,
-                        "num_buckets": self.num_buckets,
+                        "num_buckets": n,
                         "schema": [
                             (fld.name, fld.dataType.simpleString())
                             for fld in lut.schema.fields

@@ -133,7 +133,10 @@ class Resampler:
         None (the default) the planner probes the source with the
         one-scan heuristic and salts automatically if any cell is
         hotter than ``hot_cell_rows`` (default HOT_CELL_ROWS). Pass
-        ``salt_factor=1`` to force the unsalted plan.
+        ``salt_factor=1`` to force the unsalted plan. The probe runs
+        only when the join does: a LUT served from the cache is valid
+        for any salt, so a cache hit runs no probe and its plan
+        records ``salt_factor=None``, as does the broadcast strategy.
 
         ``neighbor_scheme``: cell-join geometry — ``"c27"`` (default,
         less filter compute) or ``"2c8"`` (3.4× less probe shuffle;
@@ -148,12 +151,11 @@ class Resampler:
         strategy = self.choose_strategy(src_count)
         if strategy == "noop":
             return ResamplePlan("noop", None)
-        if strategy == "cell_knn" and salt_factor is None:
-            salt_factor = self._choose_salt(
-                src_points, radius_m, hot_cell_rows
-            )
+        # the salt the cell join ran with; stays None when no join ran
+        used_salt = None
 
         def compute():
+            nonlocal used_salt
             if strategy == "broadcast_knn":
                 return knn_join_broadcast(
                     with_geocentric(src_points),
@@ -163,9 +165,14 @@ class Resampler:
                     src_count=src_count,
                     epsilon=epsilon,
                 )
+            used_salt = salt_factor
+            if strategy == "cell_knn" and used_salt is None:
+                used_salt = self._choose_salt(
+                    src_points, radius_m, hot_cell_rows
+                )
             return knn_join(
                 src_points, tgt_points, radius_m, k=k,
-                salt_factor=salt_factor,
+                salt_factor=used_salt,
                 neighbor_scheme=neighbor_scheme,
             )
 
@@ -193,7 +200,7 @@ class Resampler:
             )
         else:
             lut = compute().persist()
-        return ResamplePlan(strategy, lut, salt_factor=salt_factor)
+        return ResamplePlan(strategy, lut, salt_factor=used_salt)
 
     def compute(
         self, plan: ResamplePlan, src_values: DataFrame, combine

@@ -11,6 +11,9 @@ by the scan) instead of re-shuffling.
 This module wraps `bucketBy().sortBy().saveAsTable()` (bucketed writes
 are only supported for managed/external *tables*, not bare parquet
 paths) and provides the cell-key writer used by the resample joins.
+Every bucketed write here (and the LUT cache's) takes its bucket count
+from the writing session's shuffle parallelism and repartitions on the
+bucket key first, so each bucket lands as exactly one file.
 """
 
 from __future__ import annotations
@@ -22,17 +25,34 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     bucket_cols: list,
-    num_buckets: int = 32,
+    num_buckets: int | None = None,
     path: str | None = None,
     sort_cols: list | None = None,
-) -> None:
+) -> int:
     """Persist ``df`` hash-bucketed (and optionally sorted) by
-    ``bucket_cols``. ``path`` makes it an external table."""
-    w = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
+    ``bucket_cols``; returns the bucket count written. ``path`` makes
+    it an external table.
+
+    ``num_buckets`` defaults to the writing session's
+    ``spark.sql.shuffle.partitions`` (sized to cores by ``get_spark``),
+    so a bucketed scan runs at the parallelism the session's shuffles
+    run at. The rows are repartitioned on ``bucket_cols`` first:
+    ``repartition(n, cols)`` hashes with the same murmur3 pmod as the
+    bucket id, so each write task holds exactly one bucket and writes
+    one file, instead of one file per bucket per input partition."""
+    n = num_buckets or int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+    w = (
+        df.repartition(n, *bucket_cols)
+        .write.mode("overwrite")
+        .bucketBy(n, *bucket_cols)
+    )
     w = w.sortBy(*(sort_cols or bucket_cols))
     if path:
         w = w.option("path", path)
     w.saveAsTable(table)
+    return n
 
 
 def read_table(spark: SparkSession, table: str) -> DataFrame:
@@ -43,7 +63,7 @@ def write_cell_bucketed_points(
     df: DataFrame,
     table: str,
     radius_m: float,
-    num_buckets: int = 32,
+    num_buckets: int | None = None,
     path: str | None = None,
     lon_col: str = "lon",
     lat_col: str = "lat",

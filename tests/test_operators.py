@@ -290,6 +290,174 @@ def test_lut_cache_crash_safety(spark, tmp_path):
     assert seen, "heartbeat never touched the lock during save()"
 
 
+def _bucket_files(path):
+    """{bucket id: [file, ...]} of a bucketed table's directory (Spark
+    names bucket files ``part-…_<bucket id>.c000….parquet``)."""
+    import os
+    import re
+
+    out = {}
+    for f in os.listdir(path):
+        m = re.search(r"_(\d{5})\.c\d{3}\..*parquet$", f)
+        if m:
+            out.setdefault(int(m.group(1)), []).append(f)
+    return out
+
+
+def _lut_rows(spark, n_tgt=500, parts=7):
+    return spark.range(3000).repartition(parts).select(
+        (F.col("id") % n_tgt).alias("tgt_id"),
+        F.col("id").alias("src_id"),
+        (F.col("id") * 1.5).alias("dist_m"),
+    )
+
+
+def test_lut_save_one_file_per_bucket(spark, tmp_path):
+    """save() sizes the LUT to the writing session: the bucket count is
+    spark.sql.shuffle.partitions at write time (recorded in the
+    sidecar), and the rows are repartitioned on the bucket column, so
+    every non-empty bucket is exactly one file however many partitions
+    the LUT arrived in, and an empty bucket is no file."""
+    import json
+
+    cache = LutCache(str(tmp_path))
+    key = cache.key("a", "b", 1.0, 1)
+    # 3 distinct targets over 5 buckets: some buckets stay empty
+    lut = _lut_rows(spark, n_tgt=3)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try:
+        out = cache.save(lut, key)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    with open(cache._meta_path(key)) as f:
+        assert json.load(f)["num_buckets"] == 5
+    want = {
+        r.b for r in lut.select(
+            F.expr("pmod(hash(tgt_id), 5)").alias("b")
+        ).distinct().collect()
+    }
+    files = _bucket_files(cache.path(key))
+    assert set(files) == want, files
+    assert all(len(v) == 1 for v in files.values()), files
+    assert out.count() == 3000
+
+
+def test_lut_cache_loads_legacy_32_bucket_layout(spark, tmp_path):
+    """A cache laid out before the bucket count followed the session
+    (32 buckets, one file per bucket per write task, sidecar saying
+    32) loads unchanged: the sidecar's count re-registers the table,
+    and the apply-side groupBy("tgt_id") stays shuffle-free."""
+    import json
+
+    cache = LutCache(str(tmp_path))
+    key = cache.key("a", "b", 1.0, 1)
+    lut = _lut_rows(spark, parts=3)
+    try:
+        (
+            lut.write.mode("overwrite")
+            .bucketBy(32, "tgt_id").sortBy("tgt_id")
+            .option("path", cache.path(key))
+            .saveAsTable("lut_legacy_writer")
+        )
+    finally:
+        # external table: dropping it keeps the files
+        spark.sql("DROP TABLE IF EXISTS lut_legacy_writer")
+    with open(cache._meta_path(key), "w") as f:
+        json.dump({"bucket_col": "tgt_id", "num_buckets": 32,
+                   "schema": [["tgt_id", "bigint"], ["src_id", "bigint"],
+                              ["dist_m", "double"]]}, f)
+    files = _bucket_files(cache.path(key))
+    assert len(files) == 32
+    assert max(len(v) for v in files.values()) > 1, files
+    loaded = cache.load(spark, key)
+    assert loaded.count() == 3000
+    plan = (
+        loaded.groupBy("tgt_id").count()
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "Exchange" not in plan, plan
+
+
+def _hot_points(spark):
+    """1000 source points in one kNN cell (salted by the planner at
+    hot_cell_rows=100) and 4 targets beside them."""
+    src = spark.range(1000).select(
+        F.col("id").alias("src_id"),
+        (10.0 + (F.col("id") % 10) * 1e-6).alias("lon"),
+        F.lit(50.0).alias("lat"),
+    )
+    tgt = spark.range(4).select(
+        F.col("id").alias("tgt_id"),
+        (10.0 + F.col("id") * 1e-5).alias("lon"),
+        F.lit(50.0).alias("lat"),
+    )
+    return src, tgt
+
+
+def test_lut_hit_runs_no_salt_probe(spark, tmp_path, monkeypatch):
+    """The skew probe runs only when the join does: a cache miss probes
+    once and records the salt; a LUT served from the cache (valid for
+    any salt) runs zero probes and records salt_factor=None."""
+    from pyresample_spark.operators import knn as knn_mod
+
+    calls = []
+    probe = knn_mod.choose_salt_factor
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return probe(*a, **kw)
+
+    monkeypatch.setattr(knn_mod, "choose_salt_factor", counted)
+    src, tgt = _hot_points(spark)
+    area = AreaDefinition("o", "stere", 10, 10, (0.0, 0.0, 1.0, 1.0))
+
+    def precompute():
+        # a fresh Resampler each time: no per-instance salt memo
+        r = Resampler(spark, "probe-swath", area, cache_dir=str(tmp_path))
+        return r.precompute(src, tgt, 50_000.0, k=1, hot_cell_rows=100)
+
+    miss = precompute()
+    assert len(calls) == 1 and miss.salt_factor == 10
+    hit = precompute()
+    assert len(calls) == 1 and hit.salt_factor is None
+    key = lambda row: (row.tgt_id, row.src_id, row.dist_m)  # noqa: E731
+    assert sorted(map(key, hit.lut.collect())) == sorted(
+        map(key, miss.lut.collect())
+    )
+
+
+def test_lut_apply_streams_bucketed_scan_without_shuffle(spark, tmp_path):
+    """The layout property at scale, where the LUT is far above the
+    broadcast threshold: Resampler.compute over a loaded LUT streams
+    the bucketed scan through the (broadcast) channel join into the
+    tgt_id aggregate with no hash exchange in between."""
+    src, tgt = _hot_points(spark)
+    area = AreaDefinition("o", "stere", 10, 10, (0.0, 0.0, 1.0, 1.0))
+    r = Resampler(spark, "apply-swath", area, cache_dir=str(tmp_path))
+    r.precompute(src, tgt, 50_000.0, k=4)
+    # a new session's view: the catalog entry is gone, the sidecar
+    # re-registers the bucketed table over the files
+    for t in spark.catalog.listTables():
+        if t.name.startswith("lut_"):
+            spark.sql(f"DROP TABLE {t.name}")
+    plan = r.precompute(src, tgt, 50_000.0, k=4)
+    vals = src.select("src_id", (F.col("src_id") * 0.5).alias("value"))
+
+    def combine(pairs):
+        return pairs.groupBy("tgt_id").agg(F.sum("value").alias("v"))
+
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = r.compute(plan, F.broadcast(vals), combine)
+        ex = out._jdf.queryExecution().executedPlan().toString()
+        assert "Bucketed: true" in ex, ex
+        assert "Exchange hashpartitioning" not in ex, ex
+        assert out.count() == 4
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
 def test_resampler_noop_and_dispatch(spark):
     area = AreaDefinition("t", "longlat", 85, 80, (-20.0, 20.0, 20.0, 35.0))
     r = Resampler(spark, area, area)
