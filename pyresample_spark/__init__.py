@@ -15,12 +15,15 @@ small dimension sides are broadcast, filters are emitted as pushable
 predicates, and aggregations rely on Catalyst's partial/final hash-agg.
 """
 
+from pyresample_spark import pyworker
 from pyresample_spark.geometry import (
     AreaDefinition,
     DynamicAreaDefinition,
     StackedAreaDefinition,
 )
 from pyresample_spark.session import get_spark
+
+pyworker.install()
 
 __all__ = [
     "AreaDefinition",

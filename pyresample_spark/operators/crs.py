@@ -1328,7 +1328,13 @@ def _regrid_gather(t, src_row, src_col, src_area, src_img,
     to the source raster, gather values by equi-join. The pixel index
     is materialized behind a Generate barrier, so the bounds filter
     and the join's inferred filters read it instead of re-running the
-    CRS math (functions/exprs.py generate_barrier)."""
+    CRS math (functions/exprs.py generate_barrier). The source image's
+    (row, col) sit behind one too: the join copies the target-side
+    bounds onto the source side, and a derived source row (a band
+    offset parsed from the file name) would otherwise run again in
+    that filter per source pixel. The copied bounds hold for every
+    pixel of a valid source raster, so keeping them off the scan
+    prunes nothing."""
     t = generate_barrier(
         t, ["cell_id"], [("src_row", src_row), ("src_col", src_col)], "px"
     ).select("cell_id", "px.src_row", "px.src_col").filter(
@@ -1337,9 +1343,13 @@ def _regrid_gather(t, src_row, src_col, src_area, src_img,
         & (F.col("src_col") >= 0)
         & (F.col("src_col") <= src_area.width - 1)
     )
+    value = value_col.replace("`", "``")
+    s = generate_barrier(
+        src_img, [f"`{value}` AS src_value"],
+        [("row", "`row`"), ("col", "`col`")], "sp",
+    ).selectExpr("sp.row", "sp.col", "src_value")
     return t.join(
-        src_img.select("row", "col", F.col(value_col).alias("src_value")),
-        (t.src_row == F.col("row")) & (t.src_col == F.col("col")),
+        s, (t.src_row == F.col("row")) & (t.src_col == F.col("col")),
     ).select("cell_id", "src_row", "src_col", "src_value")
 
 

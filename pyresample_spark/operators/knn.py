@@ -32,6 +32,7 @@ build side and avoids the shuffle entirely.
 from __future__ import annotations
 
 import math
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -595,6 +596,101 @@ def knn_join(
     )
 
 
+def _broadcast_probe(b_ids, b_xyz, chord, k, batches):
+    """Exact probe of :func:`knn_join_broadcast` (module level, so a
+    worker unpickles it by reference and imports this package)."""
+    import numpy as np
+    import pandas as pd
+
+    ids = b_ids.value
+    xyz = b_xyz.value
+    for pdf in batches:
+        txyz = pdf[["gx", "gy", "gz"]].to_numpy(dtype="float64")
+        # (n_t, n_s) squared chord distances, blocked to bound memory
+        out_t, out_s, out_d, out_r = [], [], [], []
+        step = max(1, 4_000_000 // max(1, len(ids)))
+        for i0 in range(0, len(txyz), step):
+            blk = txyz[i0 : i0 + step]
+            d2 = ((blk[:, None, :] - xyz[None, :, :]) ** 2).sum(axis=2)
+            d_mm = np.round(np.sqrt(d2) * 1000.0)
+            for j in range(blk.shape[0]):
+                row = d_mm[j]
+                within = np.flatnonzero(row <= round(chord * 1000.0))
+                if len(within) == 0:
+                    continue
+                order = np.lexsort((ids[within], row[within]))[:k]
+                sel = within[order]
+                out_t.extend([pdf["tgt_id"].iloc[i0 + j]] * len(sel))
+                out_s.extend(ids[sel])
+                out_d.extend(row[sel] / 1000.0)
+                out_r.extend(range(1, len(sel) + 1))
+        yield pd.DataFrame(
+            {
+                "tgt_id": pd.Series(out_t, dtype="int64"),
+                "src_id": pd.Series(out_s, dtype="int64"),
+                "dist_m": pd.Series(out_d, dtype="float64"),
+                "nn_rank": pd.Series(out_r, dtype="int32"),
+            }
+        )
+
+
+def _broadcast_probe_approx(b_ids, b_xyz, b_blocks, thresh_mm, eps, k,
+                            batches):
+    """Block-pruned probe of :func:`knn_join_broadcast` (``epsilon > 0``)."""
+    import numpy as np
+    import pandas as pd
+
+    ids = b_ids.value
+    xyz = b_xyz.value
+    ctr, rad, st = b_blocks.value
+    rmax = rad.max() if len(rad) else 0.0
+    for pdf in batches:
+        txyz = pdf[["gx", "gy", "gz"]].to_numpy(dtype="float64")
+        out_t, out_s, out_d, out_r = [], [], [], []
+        for j in range(len(txyz)):
+            t = txyz[j]
+            cd = np.sqrt(((ctr - t) ** 2).sum(axis=1)) * 1000.0
+            ob = np.argsort(cd)
+            cand_d, cand_i = [], []
+            dk = np.inf
+            for b in ob:
+                bound = min(thresh_mm, dk / (1.0 + eps))
+                if cd[b] - rad[b] > bound:
+                    if cd[b] - rmax > bound:
+                        break  # cd ascending: no block can win
+                    continue
+                s, e = st[b], st[b + 1]
+                d = np.round(
+                    np.sqrt(((xyz[s:e] - t) ** 2).sum(axis=1))
+                    * 1000.0
+                )
+                w = d <= thresh_mm
+                if w.any():
+                    cand_d.append(d[w])
+                    cand_i.append(ids[s:e][w])
+                    if k is not None:
+                        alld = np.concatenate(cand_d)
+                        if len(alld) >= k:
+                            dk = np.partition(alld, k - 1)[k - 1]
+            if not cand_d:
+                continue
+            alld = np.concatenate(cand_d)
+            alli = np.concatenate(cand_i)
+            sel = np.lexsort((alli, alld))[:k]
+            out_t.extend([pdf["tgt_id"].iloc[j]] * len(sel))
+            out_s.extend(alli[sel])
+            out_d.extend(alld[sel] / 1000.0)
+            out_r.extend(range(1, len(sel) + 1))
+        yield pd.DataFrame(
+            {
+                "tgt_id": pd.Series(out_t, dtype="int64"),
+                "src_id": pd.Series(out_s, dtype="int64"),
+                "dist_m": pd.Series(out_d, dtype="float64"),
+                "nn_rank": pd.Series(out_r, dtype="int32"),
+            }
+        )
+
+
 def knn_join_broadcast(
     src: DataFrame,
     tgt: DataFrame,
@@ -639,7 +735,6 @@ def knn_join_broadcast(
     Returns the same schema as :func:`knn_join`.
     """
     import numpy as np
-    import pandas as pd
 
     if max_src_rows is None:
         from pyresample_spark.plans.planner import BROADCAST_SOURCE_LIMIT
@@ -669,37 +764,7 @@ def knn_join_broadcast(
         src_pdf[["gx", "gy", "gz"]].to_numpy(dtype="float64")
     )
 
-    def probe(batches):
-        ids = b_ids.value
-        xyz = b_xyz.value
-        for pdf in batches:
-            txyz = pdf[["gx", "gy", "gz"]].to_numpy(dtype="float64")
-            # (n_t, n_s) squared chord distances, blocked to bound memory
-            out_t, out_s, out_d, out_r = [], [], [], []
-            step = max(1, 4_000_000 // max(1, len(ids)))
-            for i0 in range(0, len(txyz), step):
-                blk = txyz[i0 : i0 + step]
-                d2 = ((blk[:, None, :] - xyz[None, :, :]) ** 2).sum(axis=2)
-                d_mm = np.round(np.sqrt(d2) * 1000.0)
-                for j in range(blk.shape[0]):
-                    row = d_mm[j]
-                    within = np.flatnonzero(row <= round(chord * 1000.0))
-                    if len(within) == 0:
-                        continue
-                    order = np.lexsort((ids[within], row[within]))[:k]
-                    sel = within[order]
-                    out_t.extend([pdf["tgt_id"].iloc[i0 + j]] * len(sel))
-                    out_s.extend(ids[sel])
-                    out_d.extend(row[sel] / 1000.0)
-                    out_r.extend(range(1, len(sel) + 1))
-            yield pd.DataFrame(
-                {
-                    "tgt_id": pd.Series(out_t, dtype="int64"),
-                    "src_id": pd.Series(out_s, dtype="int64"),
-                    "dist_m": pd.Series(out_d, dtype="float64"),
-                    "nn_rank": pd.Series(out_r, dtype="int32"),
-                }
-            )
+    probe = partial(_broadcast_probe, b_ids, b_xyz, chord, k)
 
     if epsilon and epsilon > 0.0:
         # block bounding balls, computed once on the driver
@@ -722,58 +787,8 @@ def knn_join_broadcast(
         thresh_mm = round(chord * 1000.0)
         eps = float(epsilon)
 
-        def probe_approx(batches):
-            ids = b_ids.value
-            xyz = b_xyz.value
-            ctr, rad, st = b_blocks.value
-            rmax = rad.max() if len(rad) else 0.0
-            for pdf in batches:
-                txyz = pdf[["gx", "gy", "gz"]].to_numpy(dtype="float64")
-                out_t, out_s, out_d, out_r = [], [], [], []
-                for j in range(len(txyz)):
-                    t = txyz[j]
-                    cd = np.sqrt(((ctr - t) ** 2).sum(axis=1)) * 1000.0
-                    ob = np.argsort(cd)
-                    cand_d, cand_i = [], []
-                    dk = np.inf
-                    for b in ob:
-                        bound = min(thresh_mm, dk / (1.0 + eps))
-                        if cd[b] - rad[b] > bound:
-                            if cd[b] - rmax > bound:
-                                break  # cd ascending: no block can win
-                            continue
-                        s, e = st[b], st[b + 1]
-                        d = np.round(
-                            np.sqrt(((xyz[s:e] - t) ** 2).sum(axis=1))
-                            * 1000.0
-                        )
-                        w = d <= thresh_mm
-                        if w.any():
-                            cand_d.append(d[w])
-                            cand_i.append(ids[s:e][w])
-                            if k is not None:
-                                alld = np.concatenate(cand_d)
-                                if len(alld) >= k:
-                                    dk = np.partition(alld, k - 1)[k - 1]
-                    if not cand_d:
-                        continue
-                    alld = np.concatenate(cand_d)
-                    alli = np.concatenate(cand_i)
-                    sel = np.lexsort((alli, alld))[:k]
-                    out_t.extend([pdf["tgt_id"].iloc[j]] * len(sel))
-                    out_s.extend(alli[sel])
-                    out_d.extend(alld[sel] / 1000.0)
-                    out_r.extend(range(1, len(sel) + 1))
-                yield pd.DataFrame(
-                    {
-                        "tgt_id": pd.Series(out_t, dtype="int64"),
-                        "src_id": pd.Series(out_s, dtype="int64"),
-                        "dist_m": pd.Series(out_d, dtype="float64"),
-                        "nn_rank": pd.Series(out_r, dtype="int32"),
-                    }
-                )
-
-        probe = probe_approx
+        probe = partial(_broadcast_probe_approx, b_ids, b_xyz, b_blocks,
+                        thresh_mm, eps, k)
 
     t = tgt.select(F.col(tgt_id).alias("tgt_id"), "gx", "gy", "gz")
     return t.mapInPandas(

@@ -425,6 +425,12 @@ def q_weighted_avg(spark, sf_dir):
     )
 
 
+def _inv_dist_weight(d: pd.Series) -> pd.Series:
+    """q_custom_weight's radial weight; module level, so a worker
+    unpickles it by reference and imports this package."""
+    return 1.0 / (1.0 + d / RADIUS_M)
+
+
 @register(
     "q_custom_weight",
     oracle=PAIRS_SQL
@@ -445,10 +451,7 @@ def q_custom_weight(spark, sf_dir):
     function applied between join and aggregation — the reference's one
     true user-code extension point, realized as an Arrow-vectorized
     pandas UDF on the dist column (SURVEY §2.11)."""
-    @F.pandas_udf("double")
-    def inv_dist_weight(d: pd.Series) -> pd.Series:
-        return 1.0 / (1.0 + d / RADIUS_M)
-
+    inv_dist_weight = F.pandas_udf(_inv_dist_weight, "double")
     nn = _knn_pairs(spark, sf_dir, k=8)
     src_vals = _src(spark, sf_dir).select("src_id", "value")
     wp = nn.join(F.broadcast(src_vals), "src_id", "inner").withColumn(

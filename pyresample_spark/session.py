@@ -13,8 +13,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(total_bytes: int | None = None) -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set, else
+    a quarter of host RAM (``total_bytes``, default this host's),
+    capped at 4 GB and floored at 1 GB — the driver heap of a local
+    session that shares the host with its Python workers."""
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, min(4096, total_bytes // 2**20 // 4))}m"
+
+
 def get_spark(app_name: str = "pyresample_spark", ui_port: int | None = None) -> SparkSession:
     """Session factory.
+
+    The master is ``local[$SPARK_GRAFT_CPUS]`` (default 32) with shuffle
+    partitions sized to it; the driver heap comes from
+    :func:`driver_memory`. A Python stage (``mapInPandas``/``mapInArrow``,
+    Python UDFs) costs a fixed amount per task on top of its work
+    (PERF.md "Python-stage fixed cost"). Importing this package in a
+    worker, which unpickling any of its functions does, runs
+    ``pyworker.install``, and that removes most of it.
 
     ``ui_port``: when given, the Spark UI (and its REST API) is enabled on
     that port — used by ``bench.py``/``tools/scale_probe_*`` to read REAL
@@ -41,7 +62,7 @@ def get_spark(app_name: str = "pyresample_spark", ui_port: int | None = None) ->
         # call-site line, nothing else. This is driver-side Python
         # overhead identical on any cluster, not a local-mode knob.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "true" if ui_port else "false")
         .config("spark.ui.port", str(ui_port or 4040))
         # metric scrapers sum /stages cumulatively; the default

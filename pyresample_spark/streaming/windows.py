@@ -147,6 +147,21 @@ def session_windows(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
+def _update_user_totals(key, pdfs, state):
+    """:func:`running_user_totals`'s state update; module level, so a
+    worker unpickles it by reference and imports this package."""
+    import pandas as pd
+
+    n, total = state.get if state.exists else (0, 0.0)
+    for pdf in pdfs:
+        n += len(pdf)
+        total += float(pdf["value"].sum())
+    state.update((n, total))
+    yield pd.DataFrame(
+        {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
+    )
+
+
 def running_user_totals(stream: DataFrame) -> DataFrame:
     """Custom stateful operator (applyInPandasWithState): running
     per-user event count + value sum across micro-batches — the
@@ -155,21 +170,8 @@ def running_user_totals(stream: DataFrame) -> DataFrame:
 
     State = (n, total) per user_id; each batch emits the updated row.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState
-
-    def update(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
     return stream.groupBy("user_id").applyInPandasWithState(
-        update,
+        _update_user_totals,
         outputStructType="user_id long, n_events long, total_value double",
         stateStructType="n long, total double",
         outputMode="update",

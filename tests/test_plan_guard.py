@@ -25,10 +25,11 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
-from explain_audit import transcendental_counts  # noqa: E402
+from explain_audit import python_stages, transcendental_counts  # noqa: E402
 
 from pyresample_spark.geometry import AreaDefinition  # noqa: E402
 from pyresample_spark.image import GeoImage  # noqa: E402
+from pyresample_spark.pyworker import probe  # noqa: E402
 from pyresample_spark.queries import load_all  # noqa: E402
 
 SLACK = 2
@@ -109,3 +110,38 @@ def test_regrid_query_math_not_reinlined(spark, sf_dir, name):
         f"{name}: {optimized} transcendental calls optimized vs "
         f"{analyzed} analyzed"
     )
+
+
+def test_regrid_derived_source_row_evaluated_once(spark):
+    """The gather's equi-join copies the target-side bounds onto the
+    source image; a source row derived per pixel (a band offset parsed
+    from the file name, as an ingest stacks granules) must not be
+    re-evaluated in that copied filter."""
+    w = SRC_AREA.width
+    band = F.regexp_extract(
+        F.concat(F.lit("granule_"), (F.col("id") / (w * 16)).cast("long")
+                 .cast("string"), F.lit(".nc")), r"granule_(\d+)\.nc$", 1)
+    grid = spark.range(w * SRC_AREA.height).select(
+        (band.cast("long") * 16
+         + (F.col("id") / w).cast("long") % 16).alias("row"),
+        (F.col("id") % w).alias("col"),
+        F.col("id").cast("double").alias("value"),
+    )
+    df = GeoImage.from_area(grid, SRC_AREA).resample(
+        TARGETS["laea"], method="regrid").df
+    plan = df._jdf.queryExecution().optimizedPlan().treeString(
+        True, False, 2**31 - 1, False, False)
+    assert plan.count("regexp_extract(") == 1, plan
+
+
+def test_python_stages_counts_python_operator_nodes(spark):
+    def formatted(df):
+        return df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+
+    df = spark.range(3)
+    arrow = df.mapInArrow(probe, "pid long, installed boolean, reads long")
+    udf = F.pandas_udf(lambda s: s, "long")
+    assert python_stages(formatted(df.selectExpr("id + 1"))) == 0
+    assert python_stages(formatted(arrow)) == 1
+    assert python_stages(formatted(arrow.select(udf("pid")))) == 2

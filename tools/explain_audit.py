@@ -8,6 +8,8 @@ queries and grep them for the scale-critical properties (SURVEY.md §4):
 - partial (map-side) aggregation before every exchange
 - no more transcendental calls in the optimized plan than in the
   analyzed plan (pushdown re-inlining projection math into filters)
+- Python stages per query: each pays a fixed cost per task on top of
+  its work (PERF.md "Python-stage fixed cost")
 
 Writes EXPLAINS.md at the repo root. Run: python tools/explain_audit.py
 """
@@ -154,6 +156,20 @@ def transcendental_counts(df) -> tuple[int, int]:
     return count(qe.analyzed()), count(qe.optimizedPlan())
 
 
+# Python operator nodes, as formatted plans head their detail sections
+# (`(N) MapInPandas`); each runs its tasks in Python workers.
+PYTHON_NODE = re.compile(
+    r"^\(\d+\) (?:MapInPandas|MapInArrow|ArrowEvalPython|BatchEvalPython"
+    r"|FlatMapGroupsInPandas)\b",
+    re.MULTILINE,
+)
+
+
+def python_stages(plan: str) -> int:
+    """Number of Python operator nodes in a formatted plan."""
+    return len(PYTHON_NODE.findall(plan))
+
+
 def growth_notes(df) -> list[str]:
     analyzed, optimized = transcendental_counts(df)
     if optimized > analyzed:
@@ -206,9 +222,9 @@ def audit_plan(name: str, plan: str) -> list[str]:
     rowudf = plan.count("BatchEvalPython")
     if rowudf:
         notes.append(f"!! {rowudf} row-at-a-time Python UDF node(s)")
-    arrow = plan.count("ArrowEvalPython") + plan.count("MapInPandas")
-    if arrow:
-        notes.append(f"{arrow} Arrow-vectorized Python node(s)")
+    n_python = python_stages(plan)
+    if n_python:
+        notes.append(f"{n_python} Python stage(s)")
     return notes
 
 
@@ -302,7 +318,7 @@ def main():
         "`!!` notes listed inline, clean queries only counted."
     )
     out.append("")
-    flagged, clean = [], []
+    flagged, clean, python = [], [], []
     for name, spec in registry.items():
         df = spec.builder(spark, SF)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -314,7 +330,11 @@ def main():
             flagged.append((name, flags))
         else:
             clean.append(name)
-        print(name, "OK" if not flags else f"FLAGS: {flags}", flush=True)
+        n_python = python_stages(plan)
+        if n_python:
+            python.append((name, n_python))
+        print(name, "OK" if not flags else f"FLAGS: {flags}",
+              f"python_stages={n_python}", flush=True)
     out.append(
         f"- **{len(registry)} queries audited: "
         f"{len(flagged)} flagged, {len(clean)} clean.**"
@@ -323,13 +343,20 @@ def main():
         for fl in flags:
             out.append(f"- `{name}`: {fl}")
     out.append("")
+    out.append(
+        f"Queries with Python stages ({len(python)}; each pays the "
+        "per-task fixed cost of PERF.md \"Python-stage fixed cost\"): "
+        + ", ".join(f"`{name}` ({n})" for name, n in python)
+    )
+    out.append("")
 
     path = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "EXPLAINS.md")
     with open(path, "w") as f:
         f.write("\n".join(out))
     print(f"wrote {path}")
-    print(f"sweep: {len(registry)} audited, {len(flagged)} flagged")
+    print(f"sweep: {len(registry)} audited, {len(flagged)} flagged, "
+          f"{len(python)} with Python stages")
 
 
 if __name__ == "__main__":
