@@ -24,15 +24,13 @@ explode is applied to the *probe* side before the join (worst case 27×
 row amplification of ids+coords only — a few dozen bytes/row); the
 build side shuffles once at 1× . Skewed cells (dense swath regions) are
 split by AQE skew-join; per-cell salting can be layered on the cell key
-if a single cell exceeds task memory. For a small build side
-(≤ ~10M points) prefer :func:`knn_join_broadcast`, which broadcasts the
-build side and avoids the shuffle entirely.
+if a single cell exceeds task memory. A small build side (see
+BROADCAST_SRC_BYTES) is broadcast instead, so neither side shuffles.
 """
 
 from __future__ import annotations
 
 import math
-from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -52,6 +50,12 @@ from pyresample_spark.plans.inputs import file_identity
 # and the plan falls back to the shuffle join unchanged — the switch
 # is data-adaptive, not tuned to local mode.
 BROADCAST_SRC_BYTES = 32 << 20
+
+# Cell side of the approximate "shift2" grids, in units of the
+# effective radius. The per-axis guarantee (a pair within the radius
+# cannot straddle a wall of BOTH half-cell-shifted grids) needs wall
+# spacing >= the accepted distance, i.e. a factor of at least 2.
+SHIFT2_CELL_FACTOR = 2.0
 
 
 def broadcast_bound(spark) -> int:
@@ -102,13 +106,12 @@ def cell_side(c: float) -> float:
     The accepted set is ``floor(d·1000 + 0.5) <= round(c·1000)``, i.e.
     ``d < c_eff = (round(c·1000) + 0.5) / 1000`` — up to ~1 mm beyond
     ``c``. Cells of side exactly ``c`` do not cover that rounding band:
-    a source in (c, c_eff) whose per-axis offset falls just past a cell
-    wall is missed by the 2c8 one-neighbor-per-axis explode (and, when
-    the probe sits within the same slack of a wall, by c27's ±1-cell
-    explode too). Sizing cells by ``c_eff`` restores the coverage
-    invariant *including* the quantization slack, so both schemes'
-    "identical pair sets" exactness claim holds without changing the
-    accepted-distance semantics (the filter threshold is unchanged)."""
+    when the probe sits within that slack of a cell wall, a source in
+    (c, c_eff) just past the next wall is missed by c27's ±1-cell
+    explode. Sizing cells by ``c_eff`` restores the coverage invariant
+    *including* the quantization slack, so the exact join's pair set
+    is complete without changing the accepted-distance semantics (the
+    filter threshold is unchanged)."""
     return (round(c * 1000.0) + 0.5) / 1000.0
 
 
@@ -131,8 +134,8 @@ def _xyz_sql(lon: str, lat: str) -> tuple:
 
 def with_geocentric(df: DataFrame, lon_col="lon", lat_col="lat") -> DataFrame:
     # keep-list instead of "*": withColumn REPLACED a pre-existing
-    # gx/gy/gz (e.g. knn_join_broadcast's fallback feeds frames that
-    # already carry them); a bare "*" would duplicate the names
+    # gx/gy/gz (a frame that already went through with_geocentric); a
+    # bare "*" would duplicate the names
     gx, gy, gz = _xyz_sql(lon_col, lat_col)
     keep = [c for c in df.columns if c not in ("gx", "gy", "gz")]
     return df.selectExpr(
@@ -172,7 +175,6 @@ def _radius_pairs(
     extra_src_cols: tuple = (),
     extra_tgt_cols: tuple = (),
     neighbor_scheme: str = "c27",
-    approx_cell_factor: float = 2.0,
 ) -> DataFrame:
     """(tgt_id, src_id, dist_mm[, extra…]) candidate pairs within chord
     ``c`` — the shared cell-join core of knn_join and the fused
@@ -182,20 +184,13 @@ def _radius_pairs(
     for a few scalars like the target's own lon/lat, cf. the fused
     bilinear corner pick).
 
-    ``neighbor_scheme`` picks the cell/explode geometry (both EXACT —
-    identical pair sets; the difference is shuffle bytes vs filter
-    compute, measured in PERF.md):
+    ``neighbor_scheme`` picks the cell/explode geometry:
 
-    - ``"c27"`` (default): cells of side c, probe explodes over its 27
-      neighbors. Candidate volume 27c³ per probe; probe shuffle 27×.
-    - ``"2c8"``: cells of side 2c, probe explodes over the 8 cells
-      nearest its position (per axis: its own cell + the one on the
-      side it sits closer to — any point within c lies in one of
-      them). Probe shuffle drops to 8× (3.4× fewer bytes) but each
-      cell holds 8× the volume, so candidate pairs grow ~2.4×
-      (64c³ vs 27c³) and the exact-distance filter does more work.
+    - ``"c27"`` (default, EXACT): cells of side c, probe explodes over
+      its 27 neighbors. Candidate volume 27c³ per probe; probe shuffle
+      27×.
     - ``"shift2"``: APPROXIMATE — two grids of cell side
-      ``approx_cell_factor·c``, the second shifted by half a cell on
+      ``SHIFT2_CELL_FACTOR·c``, the second shifted by half a cell on
       every axis; BOTH sides key each row under both grids (2×
       amplification each) and the join is own-cell-only within a grid.
       Per axis a pair closer than the wall spacing cannot straddle a
@@ -212,7 +207,7 @@ def _radius_pairs(
       radius-only k=None join and the unpacked window fallback would
       surface them, and :func:`knn_join` rejects those combinations.
     """
-    if neighbor_scheme not in ("c27", "2c8", "shift2"):
+    if neighbor_scheme not in ("c27", "shift2"):
         raise ValueError(f"unknown neighbor_scheme {neighbor_scheme!r}")
     # the extras are spliced into selectExpr text by name: a Column
     # would render as "Column<'x'>" there
@@ -226,18 +221,8 @@ def _radius_pairs(
     # see cell_side() — the exact filter admits d up to c_eff, and the
     # explode geometry must cover everything the filter accepts.
     eff = cell_side(c)
-    if neighbor_scheme == "shift2":
-        if approx_cell_factor < 2.0:
-            raise ValueError(
-                f"approx_cell_factor={approx_cell_factor} < 2: the "
-                "shift2 per-axis guarantee (a pair within the radius "
-                "cannot straddle a wall of BOTH half-cell-shifted "
-                "grids) needs wall spacing >= the accepted distance, "
-                "i.e. cell >= 2x the effective radius"
-            )
-        cell = approx_cell_factor * eff
-    else:
-        cell = eff if neighbor_scheme == "c27" else 2.0 * eff
+    cell = SHIFT2_CELL_FACTOR * eff if neighbor_scheme == "shift2" else eff
+
     def _shift2_cells(df):
         # two half-cell-shifted grids; IEEE op order (g/cell then
         # + grid·0.5 then floor) mirrored verbatim in the SQL oracles.
@@ -274,7 +259,7 @@ def _radius_pairs(
     if neighbor_scheme == "shift2":
         tk = _shift2_cells(with_geocentric(tgt, tgt_lon, tgt_lat))
         offsets = None
-    elif neighbor_scheme == "c27":
+    else:
         # literal 27-struct array, NOT nested transform() lambdas: the
         # higher-order-function form is CodegenFallback — Spark
         # evaluates the whole lambda tree interpreted PER PROBE ROW
@@ -289,32 +274,6 @@ def _radius_pairs(
         )
         offsets = F.expr(f"explode(array({cells27}))")
         tk = with_cells(with_geocentric(tgt, tgt_lon, tgt_lat), cell)
-    else:
-        # per axis: 0 plus the signed step toward the nearer wall —
-        # g in cell C covers [C·2c_eff, (C+1)·2c_eff); if the offset
-        # within the cell is < c_eff the ±c_eff ball can only spill
-        # into C−1, else only into C+1 (c_eff bounds are what the mm
-        # filter accepts, see cell_side())
-        tk = with_cells(with_geocentric(tgt, tgt_lon, tgt_lat), cell)
-        tk = tk.selectExpr(
-            "*",
-            *[
-                f"CAST(CASE WHEN (g{ax} - c{ax}3 * {cell!r}D) < {eff!r}D"
-                f" THEN -1 ELSE 1 END AS BIGINT) AS b{ax}"
-                for ax in ("x", "y", "z")
-            ],
-        )
-        # literal 8-pick array for the same CodegenFallback reason as
-        # c27 above: pick ∈ {0,1} per axis selects 0 or the signed
-        # step (dx = px·bx below) instead of building the row-dependent
-        # array inside an interpreted lambda tree
-        picks8 = ", ".join(
-            f"named_struct('px', {px}L, 'py', {py}L, 'pz', {pz}L)"
-            for px in (0, 1)
-            for py in (0, 1)
-            for pz in (0, 1)
-        )
-        offsets = F.expr(f"explode(array({picks8}))")
     base_cols = [
         F.col(tgt_id).alias("tgt_id"),
         F.col("gx").alias("t_gx"),
@@ -326,12 +285,6 @@ def _radius_pairs(
     if offsets is None:
         t = tk.select(*base_cols)
     else:
-        if neighbor_scheme == "2c8":
-            sel_extra = ["bx", "by", "bz"]
-            dx, dy, dz = "o.px * bx", "o.py * by", "o.pz * bz"
-        else:
-            sel_extra = []
-            dx, dy, dz = "o.dx", "o.dy", "o.dz"
         keep = [
             "tgt_id", "t_gx", "t_gy", "t_gz",
             *[k for k in cell_keys if k not in ("cx3", "cy3", "cz3")],
@@ -339,11 +292,11 @@ def _radius_pairs(
         ]
         # one selectExpr instead of 3 withColumn + drop: every
         # transformation re-analyzes the whole plan (see _xyz_sql)
-        t = tk.select(*base_cols, *sel_extra, offsets.alias("o")).selectExpr(
+        t = tk.select(*base_cols, offsets.alias("o")).selectExpr(
             *keep,
-            f"cx3 + {dx} AS cx3",
-            f"cy3 + {dy} AS cy3",
-            f"cz3 + {dz} AS cz3",
+            "cx3 + o.dx AS cx3",
+            "cy3 + o.dy AS cy3",
+            "cz3 + o.dz AS cz3",
         )
         # Box-distance prune (VERDICT r15 item 4): drop exploded
         # neighbor cells whose axis-aligned distance from the probe to
@@ -436,7 +389,6 @@ def knn_join(
     salt_factor: int | None = None,
     packed: bool = True,
     neighbor_scheme: str = "c27",
-    approx_cell_factor: float = 2.0,
 ) -> DataFrame:
     """Cell-bucketed kNN radius join.
 
@@ -453,14 +405,13 @@ def knn_join(
     over N tasks. AQE skew-join usually makes this unnecessary; the
     explicit salt is for single cells exceeding task memory.
 
-    The default schemes are EXACT — the cell join has no tree to
-    prune, so unlike the reference kd-tree there is no accuracy/speed
-    dial hidden in the default path. The reference's ``epsilon``
-    semantics (kd_tree.py:86-88,545-548) are offered in two explicit
-    tiers instead: ``neighbor_scheme="shift2"`` here (own-cell probe
-    under two half-cell-shifted coarser grids — 2×/2× shuffle vs the
-    exact 27×/1×, recall measured by ``q_knn_approx_recall``), and
-    :func:`knn_join_broadcast`'s block-pruned probe for small sources.
+    The default scheme is EXACT — the cell join has no tree to prune,
+    so unlike the reference kd-tree there is no accuracy/speed dial
+    hidden in the default path. The reference's ``epsilon`` semantics
+    (kd_tree.py:86-88,545-548) are offered as one explicit tier
+    instead: ``neighbor_scheme="shift2"`` (own-cell probe under two
+    half-cell-shifted coarser grids — 2×/2× shuffle vs the exact
+    27×/1×, recall measured by ``q_knn_approx_recall``).
 
     ``packed=True`` (default) ranks candidates via a packed-bigint
     HashAggregate (no per-target sort). The packing requires
@@ -476,7 +427,7 @@ def knn_join(
         raise ValueError(
             "neighbor_scheme='shift2' emits duplicate pairs (one per "
             "co-located grid) — the radius-only (k=None) join would "
-            "return them; use c27/2c8 there"
+            "return them; use c27 there"
         )
     if neighbor_scheme == "shift2" and k is not None and k > 1 and not packed:
         raise ValueError(
@@ -488,7 +439,6 @@ def knn_join(
     pairs = _radius_pairs(
         src, tgt, c, src_id, tgt_id, src_lon, src_lat, tgt_lon, tgt_lat,
         salt_factor, neighbor_scheme=neighbor_scheme,
-        approx_cell_factor=approx_cell_factor,
     )
     if k is None:
         # radius-only join (EWA footprint path) — no top-k, so no
@@ -593,206 +543,6 @@ def knn_join(
             (F.col("dist_mm") / 1000.0).alias("dist_m"),
             "nn_rank",
         )
-    )
-
-
-def _broadcast_probe(b_ids, b_xyz, chord, k, batches):
-    """Exact probe of :func:`knn_join_broadcast` (module level, so a
-    worker unpickles it by reference and imports this package)."""
-    import numpy as np
-    import pandas as pd
-
-    ids = b_ids.value
-    xyz = b_xyz.value
-    for pdf in batches:
-        txyz = pdf[["gx", "gy", "gz"]].to_numpy(dtype="float64")
-        # (n_t, n_s) squared chord distances, blocked to bound memory
-        out_t, out_s, out_d, out_r = [], [], [], []
-        step = max(1, 4_000_000 // max(1, len(ids)))
-        for i0 in range(0, len(txyz), step):
-            blk = txyz[i0 : i0 + step]
-            d2 = ((blk[:, None, :] - xyz[None, :, :]) ** 2).sum(axis=2)
-            d_mm = np.round(np.sqrt(d2) * 1000.0)
-            for j in range(blk.shape[0]):
-                row = d_mm[j]
-                within = np.flatnonzero(row <= round(chord * 1000.0))
-                if len(within) == 0:
-                    continue
-                order = np.lexsort((ids[within], row[within]))[:k]
-                sel = within[order]
-                out_t.extend([pdf["tgt_id"].iloc[i0 + j]] * len(sel))
-                out_s.extend(ids[sel])
-                out_d.extend(row[sel] / 1000.0)
-                out_r.extend(range(1, len(sel) + 1))
-        yield pd.DataFrame(
-            {
-                "tgt_id": pd.Series(out_t, dtype="int64"),
-                "src_id": pd.Series(out_s, dtype="int64"),
-                "dist_m": pd.Series(out_d, dtype="float64"),
-                "nn_rank": pd.Series(out_r, dtype="int32"),
-            }
-        )
-
-
-def _broadcast_probe_approx(b_ids, b_xyz, b_blocks, thresh_mm, eps, k,
-                            batches):
-    """Block-pruned probe of :func:`knn_join_broadcast` (``epsilon > 0``)."""
-    import numpy as np
-    import pandas as pd
-
-    ids = b_ids.value
-    xyz = b_xyz.value
-    ctr, rad, st = b_blocks.value
-    rmax = rad.max() if len(rad) else 0.0
-    for pdf in batches:
-        txyz = pdf[["gx", "gy", "gz"]].to_numpy(dtype="float64")
-        out_t, out_s, out_d, out_r = [], [], [], []
-        for j in range(len(txyz)):
-            t = txyz[j]
-            cd = np.sqrt(((ctr - t) ** 2).sum(axis=1)) * 1000.0
-            ob = np.argsort(cd)
-            cand_d, cand_i = [], []
-            dk = np.inf
-            for b in ob:
-                bound = min(thresh_mm, dk / (1.0 + eps))
-                if cd[b] - rad[b] > bound:
-                    if cd[b] - rmax > bound:
-                        break  # cd ascending: no block can win
-                    continue
-                s, e = st[b], st[b + 1]
-                d = np.round(
-                    np.sqrt(((xyz[s:e] - t) ** 2).sum(axis=1))
-                    * 1000.0
-                )
-                w = d <= thresh_mm
-                if w.any():
-                    cand_d.append(d[w])
-                    cand_i.append(ids[s:e][w])
-                    if k is not None:
-                        alld = np.concatenate(cand_d)
-                        if len(alld) >= k:
-                            dk = np.partition(alld, k - 1)[k - 1]
-            if not cand_d:
-                continue
-            alld = np.concatenate(cand_d)
-            alli = np.concatenate(cand_i)
-            sel = np.lexsort((alli, alld))[:k]
-            out_t.extend([pdf["tgt_id"].iloc[j]] * len(sel))
-            out_s.extend(alli[sel])
-            out_d.extend(alld[sel] / 1000.0)
-            out_r.extend(range(1, len(sel) + 1))
-        yield pd.DataFrame(
-            {
-                "tgt_id": pd.Series(out_t, dtype="int64"),
-                "src_id": pd.Series(out_s, dtype="int64"),
-                "dist_m": pd.Series(out_d, dtype="float64"),
-                "nn_rank": pd.Series(out_r, dtype="int32"),
-            }
-        )
-
-
-def knn_join_broadcast(
-    src: DataFrame,
-    tgt: DataFrame,
-    radius_m: float,
-    k: int = 1,
-    src_id: str = "src_id",
-    tgt_id: str = "tgt_id",
-    max_src_rows: int | None = None,
-    src_count: int | None = None,
-    epsilon: float = 0.0,
-) -> DataFrame:
-    """Broadcast-kNN for small build sides (kd_tree.py:464-489 analog).
-
-    Collects the source coords to the driver, broadcasts the array to
-    executors, and probes with a vectorized numpy kernel over Arrow
-    batches (``mapInPandas``) — the Spark analog of pykdtree-inside-
-    dask-blocks. Use when the source fits comfortably in executor
-    memory; otherwise use :func:`knn_join`.
-
-    ``epsilon`` is the reference's approximation knob
-    (kd_tree.py:86-88,545-548 → scipy/pykdtree ``eps``): the returned
-    k-th neighbour is guaranteed within ``(1+epsilon)`` of the true
-    k-th distance. ``epsilon=0`` (default) runs the exact fully
-    vectorized probe; ``epsilon>0`` switches to a block-pruned probe —
-    the broadcast source is sorted into spatial blocks with
-    precomputed bounding balls, and per target, blocks whose nearest
-    possible point exceeds ``d_k/(1+epsilon)`` (d_k = current k-th
-    best) are skipped, the numpy analog of kd-tree branch pruning.
-    The cell-join path (:func:`knn_join`) stays EXACT regardless: its
-    candidate set is already bounded by the 27-cell neighbourhood, so
-    there is no tree to prune and nothing to trade.
-
-    The planner threshold is ENFORCED here (ADVICE r1 / VERDICT #8):
-    the source is counted first (one cheap column scan — trivial next
-    to the O(N·P) probe this function implies), and a source larger
-    than ``max_src_rows`` (default planner BROADCAST_SOURCE_LIMIT)
-    silently falls back to the cell-join :func:`knn_join` instead of
-    OOMing the driver on ``toPandas``.
-
-    Expects both frames to already carry gx/gy/gz (``with_geocentric``);
-    lon/lat columns must also be present for the fallback path.
-    Returns the same schema as :func:`knn_join`.
-    """
-    import numpy as np
-
-    if max_src_rows is None:
-        from pyresample_spark.plans.planner import BROADCAST_SOURCE_LIMIT
-
-        max_src_rows = BROADCAST_SOURCE_LIMIT
-    # callers that already know the source size (planner.choose_strategy
-    # counted it) pass src_count to skip the re-count scan (VERDICT r3)
-    if src_count is None:
-        src_count = src.count()
-    if src_count > max_src_rows:
-        return knn_join(
-            src, tgt, radius_m, k=k, src_id=src_id, tgt_id=tgt_id
-        )
-    src_pdf = src.select(src_id, "gx", "gy", "gz").toPandas()
-    chord = chord_length(radius_m)
-    if epsilon and epsilon > 0.0:
-        # sort the broadcast side into spatial blocks (quantized-cell
-        # lexsort ≈ a shallow kd-tree) so the probe can prune whole
-        # blocks by their bounding balls
-        xyz_all = src_pdf[["gx", "gy", "gz"]].to_numpy(dtype="float64")
-        q = np.floor(xyz_all / max(chord, 1e-9)).astype("int64")
-        order = np.lexsort((q[:, 2], q[:, 1], q[:, 0]))
-        src_pdf = src_pdf.iloc[order].reset_index(drop=True)
-    sc = tgt.sparkSession.sparkContext
-    b_ids = sc.broadcast(src_pdf[src_id].to_numpy())
-    b_xyz = sc.broadcast(
-        src_pdf[["gx", "gy", "gz"]].to_numpy(dtype="float64")
-    )
-
-    probe = partial(_broadcast_probe, b_ids, b_xyz, chord, k)
-
-    if epsilon and epsilon > 0.0:
-        # block bounding balls, computed once on the driver
-        B = 256
-        xyz_s = src_pdf[["gx", "gy", "gz"]].to_numpy(dtype="float64")
-        n = len(xyz_s)
-        starts = np.arange(0, n + B, B)
-        starts[-1] = min(starts[-1], n)
-        starts = np.unique(starts)
-        centers = np.stack(
-            [xyz_s[s:e].mean(axis=0) for s, e in zip(starts, starts[1:])]
-        )
-        radii_mm = np.array(
-            [
-                np.sqrt(((xyz_s[s:e] - c) ** 2).sum(axis=1)).max() * 1000.0
-                for (s, e), c in zip(zip(starts, starts[1:]), centers)
-            ]
-        )
-        b_blocks = sc.broadcast((centers, radii_mm, starts))
-        thresh_mm = round(chord * 1000.0)
-        eps = float(epsilon)
-
-        probe = partial(_broadcast_probe_approx, b_ids, b_xyz, b_blocks,
-                        thresh_mm, eps, k)
-
-    t = tgt.select(F.col(tgt_id).alias("tgt_id"), "gx", "gy", "gz")
-    return t.mapInPandas(
-        probe, "tgt_id long, src_id long, dist_m double, nn_rank int"
     )
 
 

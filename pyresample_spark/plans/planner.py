@@ -9,10 +9,10 @@ Catalyst rules are required (SURVEY §4 verdict).
 Strategy dispatch (the one real planner decision,
 cf. create_gradient_search_resampler gradient/__init__.py:54-60):
 
-  1. source == target            → no-op (resampler.py:121-122)
-  2. area ↔ area (analytic CRS)  → affine/projection inverse equi-join
-  3. small source (≤ broadcast)  → broadcast numpy probe (UDF kd-tree)
-  4. otherwise                   → 3-D cell-bucketed shuffle kNN join
+  1. source == target  → no-op (resampler.py:121-122)
+  2. otherwise         → 3-D cell-bucketed kNN join (operators/knn.py
+                         knn_join; it broadcasts a small source itself
+                         and is salted when a source cell is hot)
 """
 
 from __future__ import annotations
@@ -23,8 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyresample_spark.geometry import AreaDefinition
 from pyresample_spark.plans.lut import LutCache
-
-BROADCAST_SOURCE_LIMIT = 5_000_000  # points; ~120 MB of xyz coords
 
 
 @dataclass
@@ -66,19 +64,12 @@ class Resampler:
             return geom.geometry_hash()
         return str(geom)
 
-    def choose_strategy(self, src_count: int | None = None) -> str:
+    def choose_strategy(self) -> str:
         if (
             isinstance(self.src, AreaDefinition)
             and self.src == self.tgt
         ):
             return "noop"
-        if isinstance(self.src, AreaDefinition) and self.src.crs in (
-            "longlat",
-            "eqc",
-        ):
-            return "analytic"
-        if src_count is not None and src_count <= BROADCAST_SOURCE_LIMIT:
-            return "broadcast_knn"
         return "cell_knn"
 
     def _choose_salt(
@@ -116,18 +107,11 @@ class Resampler:
         tgt_points: DataFrame,
         radius_m: float,
         k: int | None = 1,
-        src_count: int | None = None,
-        epsilon: float = 0.0,
         salt_factor: int | None = None,
         hot_cell_rows: int | None = None,
-        neighbor_scheme: str = "c27",
     ) -> ResamplePlan:
-        """Build (or load) the neighbour-info LUT.
-
-        ``epsilon`` (reference kd_tree.py:86-88 ``epsilon=0`` default)
-        only applies on the broadcast strategy — the cell join is
-        exact by construction (see knn_join's docstring) and ignores
-        it.
+        """Build (or load) the neighbour-info LUT with the exact
+        cell join.
 
         ``salt_factor``: explicit skew salt for the cell join; when
         None (the default) the planner probes the source with the
@@ -136,19 +120,11 @@ class Resampler:
         ``salt_factor=1`` to force the unsalted plan. The probe runs
         only when the join does: a LUT served from the cache is valid
         for any salt, so a cache hit runs no probe and its plan
-        records ``salt_factor=None``, as does the broadcast strategy.
-
-        ``neighbor_scheme``: cell-join geometry — ``"c27"`` (default,
-        less filter compute) or ``"2c8"`` (3.4× less probe shuffle;
-        for network-bound clusters — both exact, PERF.md A/B).
+        records ``salt_factor=None``.
         """
-        from pyresample_spark.operators.knn import (
-            knn_join,
-            knn_join_broadcast,
-            with_geocentric,
-        )
+        from pyresample_spark.operators.knn import knn_join
 
-        strategy = self.choose_strategy(src_count)
+        strategy = self.choose_strategy()
         if strategy == "noop":
             return ResamplePlan("noop", None)
         # the salt the cell join ran with; stays None when no join ran
@@ -156,46 +132,26 @@ class Resampler:
 
         def compute():
             nonlocal used_salt
-            if strategy == "broadcast_knn":
-                return knn_join_broadcast(
-                    with_geocentric(src_points),
-                    with_geocentric(tgt_points),
-                    radius_m,
-                    k=k or 1,
-                    src_count=src_count,
-                    epsilon=epsilon,
-                )
             used_salt = salt_factor
-            if strategy == "cell_knn" and used_salt is None:
+            if used_salt is None:
                 used_salt = self._choose_salt(
                     src_points, radius_m, hot_cell_rows
                 )
             return knn_join(
                 src_points, tgt_points, radius_m, k=k,
                 salt_factor=used_salt,
-                neighbor_scheme=neighbor_scheme,
             )
 
         if self.cache is not None:
-            # an approximate LUT must never be served for an exact
-            # request (or vice versa): epsilon AND any non-default
-            # neighbor_scheme join the cache key — c27/2c8 share the
-            # exact pair set, but "shift2" is approximate and its
-            # cached LUT is NOT interchangeable with theirs. The salt
-            # does NOT join the key — salted and unsalted joins
-            # produce the identical pair set, so a cached LUT is valid
-            # for any salt.
-            variant = k
-            if epsilon:
-                variant = (variant, "eps", epsilon)
-            if neighbor_scheme not in ("c27", "2c8"):
-                variant = (variant, "scheme", neighbor_scheme)
+            # the salt does NOT join the key — salted and unsalted
+            # joins produce the identical pair set, so a cached LUT is
+            # valid for any salt
             lut = self.cache.get_or_compute(
                 self.spark,
                 self._hash(self.src),
                 self._hash(self.tgt),
                 radius_m,
-                variant,
+                k,
                 compute,
             )
         else:

@@ -182,20 +182,17 @@ def q_nn_gather(spark, sf_dir):
     )
 
 
-APPROX_FACTOR = 2.0
-
-
-def approx_cte_sql(area, radius_m: float, factor: float) -> str:
+def approx_cte_sql(area, radius_m: float) -> str:
     """Approximate-kNN CTE fragment (names sa/ta/apairs/aranked so it
     can be appended to PAIRS_SQL for side-by-side recall queries): the
     DuckDB twin of operators/knn.py neighbor_scheme="shift2" — two
-    grids of cell side factor·cell_side(c), the second shifted by half
-    a cell per axis; own-cell join within each grid, same mm-quantized
-    chord filter and ranking (duplicate pairs from dual co-location
-    are harmless under the rank-1 min)."""
-    from pyresample_spark.operators.knn import cell_side
+    grids of cell side SHIFT2_CELL_FACTOR·cell_side(c), the second
+    shifted by half a cell per axis; own-cell join within each grid,
+    same mm-quantized chord filter and ranking (duplicate pairs from
+    dual co-location are harmless under the rank-1 min)."""
+    from pyresample_spark.operators.knn import SHIFT2_CELL_FACTOR, cell_side
 
-    cell = repr(factor * cell_side(chord_length(radius_m)))
+    cell = repr(SHIFT2_CELL_FACTOR * cell_side(chord_length(radius_m)))
     chord_mm = round(chord_length(radius_m) * 1000.0)
     return f"""
     sa AS (
@@ -228,14 +225,14 @@ def approx_cte_sql(area, radius_m: float, factor: float) -> str:
 """
 
 
-APPROX_CTE = approx_cte_sql(KNN_AREA, RADIUS_M, APPROX_FACTOR)
+APPROX_CTE = approx_cte_sql(KNN_AREA, RADIUS_M)
 
 
 def _knn_approx(spark, sf_dir):
     return knn_join(
         _src(spark, sf_dir), _tgt(spark), RADIUS_M, k=1,
         src_id="src_id", tgt_id="tgt_id",
-        neighbor_scheme="shift2", approx_cell_factor=APPROX_FACTOR,
+        neighbor_scheme="shift2",
     )
 
 

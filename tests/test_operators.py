@@ -6,8 +6,8 @@ from pyspark.sql import functions as F
 
 from pyresample_spark.geometry import AreaDefinition
 from pyresample_spark.operators.knn import (
+    chord_length,
     knn_join,
-    knn_join_broadcast,
     with_geocentric,
 )
 from pyresample_spark.operators.multimodal import (
@@ -31,25 +31,72 @@ def _pts(spark, rows, id_col="src_id"):
     )
 
 
-def test_knn_cell_vs_broadcast_equivalence(spark):
-    """The two kNN strategies must return identical neighbour sets."""
-    src = _pts(
+def _knn_bruteforce(src, tgt, radius_m, k=None):
+    """All-pairs numpy reference for the cell join: chord distances over
+    the engine's own geocentric coordinates, quantized to mm as
+    FLOOR(d·1000 + 0.5), kept within the chord radius and ranked by
+    (dist_mm, src_id). Returns sorted (tgt_id, src_id, dist_mm, rank)
+    rows, the first ``k`` per target (all of them when k is None)."""
+    import numpy as np
+
+    s = with_geocentric(src).select("src_id", "gx", "gy", "gz").toPandas()
+    t = with_geocentric(tgt).select("tgt_id", "gx", "gy", "gz").toPandas()
+    d2 = 0.0
+    for ax in ("gx", "gy", "gz"):
+        d = t[ax].to_numpy()[:, None] - s[ax].to_numpy()[None, :]
+        d2 = d2 + d * d
+    dist_mm = np.floor(np.sqrt(d2) * 1000.0 + 0.5)
+    limit = round(chord_length(radius_m) * 1000.0)
+    sid = s["src_id"].to_numpy()
+    out = []
+    for i, tid in enumerate(t["tgt_id"].to_numpy()):
+        near = np.flatnonzero(dist_mm[i] <= limit)
+        near = near[np.lexsort((sid[near], dist_mm[i, near]))][:k]
+        out += [
+            (int(tid), int(sid[j]), float(dist_mm[i, j]), rank)
+            for rank, j in enumerate(near, 1)
+        ]
+    return sorted(out)
+
+
+def test_knn_cell_vs_broadcast_equivalence(spark, tmp_path, monkeypatch):
+    """knn_join at k=1 and k=2 equals an all-pairs numpy brute force on
+    both join tiers: the broadcast-hash tier (small parquet source) and
+    the shuffle-hash tier (BROADCAST_SRC_BYTES forced to 0)."""
+    import pyresample_spark.operators.knn as knn_mod
+
+    p = str(tmp_path / "src.parquet")
+    _pts(
         spark,
-        [(i, float(-170 + 3 * i), float(-50 + 2 * i)) for i in range(40)],
-    )
+        [(i, -20.0 + 1.7 * (i % 20), -10.0 + 1.3 * (i // 20))
+         for i in range(300)],
+    ).write.mode("overwrite").parquet(p)
+    src = spark.read.parquet(p)
     tgt = _pts(
         spark,
-        [(j, float(-169 + 4 * j), float(-49 + 3 * j)) for j in range(25)],
+        [(j, -19.3 + 2.9 * (j % 10), -9.1 + 2.3 * (j // 10))
+         for j in range(60)],
         id_col="tgt_id",
     )
-    cell = knn_join(src, tgt, 500_000.0, k=2).orderBy("tgt_id", "nn_rank")
-    bc = knn_join_broadcast(
-        with_geocentric(src), with_geocentric(tgt), 500_000.0, k=2
-    ).orderBy("tgt_id", "nn_rank")
-    a = [(r.tgt_id, r.src_id, round(r.dist_m, 3)) for r in cell.collect()]
-    b = [(r.tgt_id, r.src_id, round(r.dist_m, 3)) for r in bc.collect()]
-    assert a == b
-    assert len(a) > 0
+    R = 300_000.0
+    want = {
+        k: [(t, s, d / 1000.0, rank)
+            for t, s, d, rank in _knn_bruteforce(src, tgt, R, k)]
+        for k in (1, 2)
+    }
+    assert any(rank == 2 for *_, rank in want[2])
+    for tier, bound in (("BroadcastHashJoin", None), ("ShuffledHashJoin", 0)):
+        if bound is not None:
+            monkeypatch.setattr(knn_mod, "BROADCAST_SRC_BYTES", bound)
+        for k in (1, 2):
+            got = knn_join(src, tgt, R, k=k)
+            plan = got._jdf.queryExecution().executedPlan().toString()
+            assert tier in plan, plan
+            rows = sorted(
+                (r.tgt_id, r.src_id, r.dist_m, r.nn_rank)
+                for r in got.collect()
+            )
+            assert rows == want[k], (tier, k)
 
 
 def test_knn_approx_shift2(spark):
@@ -462,10 +509,10 @@ def test_resampler_noop_and_dispatch(spark):
     area = AreaDefinition("t", "longlat", 85, 80, (-20.0, 20.0, 20.0, 35.0))
     r = Resampler(spark, area, area)
     assert r.choose_strategy() == "noop"
+    ll = AreaDefinition("l", "longlat", 40, 40, (-10.0, 20.0, 10.0, 35.0))
+    assert Resampler(spark, ll, area).choose_strategy() == "cell_knn"
     other = AreaDefinition("o", "stere", 10, 10, (0.0, 0.0, 1.0, 1.0))
-    r2 = Resampler(spark, other, area)
-    assert r2.choose_strategy(src_count=100) == "broadcast_knn"
-    assert r2.choose_strategy(src_count=10_000_000_000) == "cell_knn"
+    assert Resampler(spark, other, area).choose_strategy() == "cell_knn"
 
 
 def test_multimodal_stub_and_meta(spark, sf_dir):
@@ -876,28 +923,6 @@ def test_ewa_elliptical_matches_scalar_fornav(spark):
         assert abs(sv - gv) < 1e-9, cid
         assert abs(sw - gw) < 1e-9, cid
     assert len(golden) > 50  # substantive coverage
-
-
-def test_knn_broadcast_guard_falls_back_to_cell_join(spark):
-    """A source larger than the broadcast threshold must route to the
-    cell join (same results), not toPandas (VERDICT r1 #8)."""
-    src = _pts(
-        spark,
-        [(i, float(-170 + 3 * i), float(-50 + 2 * i)) for i in range(40)],
-    )
-    tgt = _pts(
-        spark,
-        [(j, float(-169 + 4 * j), float(-49 + 3 * j)) for j in range(10)],
-        id_col="tgt_id",
-    )
-    guarded = knn_join_broadcast(
-        with_geocentric(src), with_geocentric(tgt), 500_000.0, k=2,
-        max_src_rows=10,  # force the fallback
-    )
-    cell = knn_join(src, tgt, 500_000.0, k=2)
-    a = sorted((r.tgt_id, r.src_id, r.nn_rank) for r in guarded.collect())
-    b = sorted((r.tgt_id, r.src_id, r.nn_rank) for r in cell.collect())
-    assert a == b and len(a) > 0
 
 
 def test_tmerc_utm_roundtrip_and_dispatch(spark):
@@ -1443,69 +1468,6 @@ def test_round5_advice_fixes(spark, duck):
         [(7, 1.0, 2.0, 3.0)], "k long, lon double, lat double, value double"
     )
     assert _src_keyed(GeoImage(df=ok, area=None), "k").collect()[0].src_id == 7
-
-
-def test_knn_broadcast_epsilon_knob(spark):
-    """The reference's `epsilon` approximation knob
-    (kd_tree.py:86-88,545-548 → scipy eps semantics) on the broadcast
-    probe: epsilon=0 is bit-identical to the exact probe; epsilon>0
-    returns, per target, a k-th neighbour within (1+eps) of the true
-    k-th distance, every pair still inside the radius."""
-    import random
-
-    from pyresample_spark.operators.knn import (
-        knn_join_broadcast,
-        with_geocentric,
-    )
-
-    rng = random.Random(7)
-    src_rows = [
-        (i, rng.uniform(-30.0, 30.0), rng.uniform(30.0, 60.0))
-        for i in range(400)
-    ]
-    tgt_rows = [
-        (i, rng.uniform(-30.0, 30.0), rng.uniform(30.0, 60.0))
-        for i in range(60)
-    ]
-    src = with_geocentric(
-        spark.createDataFrame(src_rows, "src_id long, lon double, lat double")
-    )
-    tgt = with_geocentric(
-        spark.createDataFrame(tgt_rows, "tgt_id long, lon double, lat double")
-    ).withColumnRenamed("tgt_id", "cell_id").withColumnRenamed(
-        "cell_id", "tgt_id"
-    )
-    R, K = 800_000.0, 4
-
-    def as_map(df):
-        m = {}
-        for r in df.collect():
-            m.setdefault(r.tgt_id, []).append(
-                (r.nn_rank, r.src_id, r.dist_m)
-            )
-        return {t: sorted(v) for t, v in m.items()}
-
-    exact = as_map(knn_join_broadcast(src, tgt, R, k=K))
-    e0 = as_map(knn_join_broadcast(src, tgt, R, k=K, epsilon=0.0))
-    assert e0 == exact  # epsilon=0 ≡ exact, same path
-
-    for eps in (0.1, 0.5):
-        approx = as_map(knn_join_broadcast(src, tgt, R, k=K, epsilon=eps))
-        assert set(approx) == set(exact)  # same matched target set
-        for t, pairs in approx.items():
-            dists = [d for _, _, d in pairs]
-            assert all(d <= R for d in dists)
-            true_k = [d for _, _, d in exact[t]]
-            # (1+eps) guarantee on the k-th returned distance
-            assert dists[-1] <= (1.0 + eps) * true_k[-1] + 1e-6
-            # and each rank's distance is never better than truth
-            for (got, tru) in zip(dists, true_k):
-                assert got + 1e-9 >= tru
-    # pruning really engages at tight epsilon=0-like bound: approx with
-    # a huge epsilon still returns only in-radius pairs
-    big = as_map(knn_join_broadcast(src, tgt, R, k=K, epsilon=10.0))
-    for t, pairs in big.items():
-        assert all(d <= R for _, _, d in pairs)
 
 
 def test_real_decoders_ppm_and_wav(spark):
@@ -2909,19 +2871,12 @@ def test_ann_ivf_index_persist_and_reuse(spark, sf_dir, tmp_path):
 
 
 def test_knn_neighbor_schemes_identical_pairs(spark):
-    """The 8-neighbor/2c cell scheme must produce EXACTLY the pair set
-    of the default 27-neighbor/c scheme (it is an exact geometry, not
-    an approximation): per axis, a point's ±c ball can only spill into
-    the adjacent 2c-cell on the side it sits closer to. Measured
-    trade in PERF.md (probe shuffle 27x -> 8x vs ~1.7x more pairs
-    through the distance filter)."""
+    """The exact 27-neighbor scheme's pair set (box prune included) is
+    EXACTLY the all-pairs brute force within the radius; an unknown
+    scheme, including a retired one, is rejected."""
     from pyspark.sql import functions as F
 
-    from pyresample_spark.operators.knn import (
-        _radius_pairs,
-        chord_length,
-        knn_join,
-    )
+    from pyresample_spark.operators.knn import _radius_pairs
 
     src = spark.range(4000).select(
         F.col("id").alias("src_id"),
@@ -2938,19 +2893,12 @@ def test_knn_neighbor_schemes_identical_pairs(spark):
         .alias("lat"),
     )
     c = chord_length(300_000.0)
-    a = set(map(tuple, _radius_pairs(src, tgt, c).collect()))
-    b = set(map(
-        tuple, _radius_pairs(src, tgt, c, neighbor_scheme="2c8").collect()
-    ))
+    a = sorted(map(tuple, _radius_pairs(src, tgt, c).collect()))
+    b = [row[:3] for row in _knn_bruteforce(src, tgt, 300_000.0)]
     assert a == b and len(a) > 1000
-    # end-to-end: identical k=2 results through knn_join
-    ka = sorted(map(tuple, knn_join(src, tgt, 300_000.0, k=2).collect()))
-    kb = sorted(map(tuple, knn_join(
-        src, tgt, 300_000.0, k=2, neighbor_scheme="2c8"
-    ).collect()))
-    assert ka == kb
-    with pytest.raises(ValueError, match="neighbor_scheme"):
-        _radius_pairs(src, tgt, c, neighbor_scheme="c9")
+    for scheme in ("c9", "2c8"):
+        with pytest.raises(ValueError, match="neighbor_scheme"):
+            _radius_pairs(src, tgt, c, neighbor_scheme=scheme)
 
 
 def test_radius_pairs_extra_cols_take_names_only(spark):
