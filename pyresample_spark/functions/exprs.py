@@ -45,12 +45,14 @@ def generate_barrier(df: DataFrame, keep: list, named_exprs: list,
     one-element array: row-preserving and codegen'd. Its fields are
     generator output, and Catalyst cannot push a filter that reads
     generator output below the Generate. Without the barrier,
-    PushDownPredicates and InferFiltersFromConstraints substitute the
-    projected expressions into every pushed bounds filter and inferred
-    join filter (no cost guard), and a LAEA regrid's projection math
-    runs about three times per pixel. The same barrier stops
-    CollapseProject from inlining a staged chain's aliases into their
-    consumers.
+    PushDownPredicates substitutes the projected expressions into
+    every filter it pushes through a Project or into a join condition
+    (no cost guard), and a LAEA regrid's projection math runs about
+    three times per pixel. ``get_spark`` turns constraint propagation
+    off, so InferFiltersFromConstraints no longer adds inferred copies;
+    the pushdown above still runs, and the barrier is what stops it.
+    The same barrier stops CollapseProject from inlining a staged
+    chain's aliases into their consumers.
 
     Put it where expensive per-row math (CRS transforms, solve stages)
     feeds a filter or a join key. Read the fields as ``alias.name``.

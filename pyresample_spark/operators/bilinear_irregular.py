@@ -11,9 +11,11 @@ p1(1−s)(1−t) + p2·s(1−t) + p3(1−s)t + p4·s·t, corners UL,UR,LL,LR).
 Spark-first: candidates come from the cell-bucketed join core
 (operators/knn.py _radius_pairs) with the source lon/lat/value riding
 the build side and the target lon/lat riding the probe explode. The
-exact neighbor schemes pick corners with a narrow sort (a packed
-(dist_mm, src_id) key, a row_number top-k cut, one min/min_by
-aggregate per quadrant); the approximate shift2 scheme keeps a sorted
+cell join is the plan's only join: the target lon/lat ride every later
+step with the rows of their target. The exact neighbor schemes pick
+corners with a narrow sort (a packed (dist_mm, src_id) key, a
+row_number top-k cut, one min/min_by aggregate per quadrant, grouped
+by the target); the approximate shift2 scheme keeps a sorted
 collect_set slice and a per-quadrant ``filter()`` over it. The
 closed-form (t, s) solve — the reference's full irregular →
 uprights-parallel → parallelogram fallback chain — runs as staged
@@ -252,19 +254,19 @@ def bilinear_irregular(
     tests/test_bilinear.py is row-for-row equal; the DuckDB oracle
     matches in the parity suite):
 
-    1. candidates: the shared cell join, with the source lon/lat/value
-       on the build side and the target lon/lat (``xx``/``yy``) on the
-       probe explode in both topologies (broadcast source: the target
-       is pre-partitioned by tgt_id, so no pair-level exchange
-       follows; shuffle: one cell-join exchange);
+    1. candidates: the shared cell join — the plan's only join — with
+       the source lon/lat/value on the build side and the target
+       lon/lat (``xx``/``yy``) on the probe explode in both topologies
+       (broadcast source: the target is pre-partitioned by tgt_id, so
+       no pair-level exchange follows; shuffle: one cell-join
+       exchange, then one tgt_id exchange for the per-target steps);
     2. exact schemes: the strict-sign quadrant is computed per pair,
-       the pairs are cut to the top-k by one packed (dist_mm, src_id)
-       key, and one min/min_by hash aggregate picks the nearest
-       candidate per quadrant and pivots the four corners; the
-       target's xx/yy re-attach afterwards by joining the ≤|tgt|-row
-       corner table to the target table. shift2: a sorted
-       ``collect_set`` slice per target and a per-quadrant ``filter()``
-       over it, behind a Generate barrier;
+       the pairs (still carrying xx/yy) are cut to the top-k by one
+       packed (dist_mm, src_id) key, and one min/min_by hash aggregate
+       grouped by (tgt_id, xx, yy) picks the nearest candidate per
+       quadrant and pivots the four corners. shift2: a sorted
+       ``collect_set`` slice per (tgt_id, xx, yy) and a per-quadrant
+       ``filter()`` over it, behind a Generate barrier;
     3. the (t, s) solve and the interpolation run as staged codegen'd
        projects behind Generate barriers (:func:`_ts_chain_staged`),
        built from the formula builders the DuckDB oracle also uses.
@@ -288,40 +290,30 @@ def bilinear_irregular(
         broadcast_bound,
     )
 
+    # the probe explode carries the target's own lon/lat as xx/yy (16
+    # bytes/row): the strict-sign quadrant needs them at pair level,
+    # before the top-k cut, and the solve reads them after the corner
+    # pick — they ride every step, so no join re-attaches them
+    tgt2 = tgt.select(
+        "tgt_id", "lon", "lat",
+        F.col("lon").alias("xx"), F.col("lat").alias("yy"),
+    )
     nbytes = _scan_bytes_hint(src)
     bound = broadcast_bound(src.sparkSession)
-    small_src = nbytes is not None and bound and nbytes <= bound
-    if small_src:
-        # Broadcast-src topology (r17-opt): _radius_pairs broadcasts
-        # the build side, so the probe side never shuffles. The
-        # pre-explode repartition hash-partitions the (1×-sized)
-        # target rows by tgt_id so that (a) the downstream per-target
-        # window/aggregation needs NO pair-level exchange (the
-        # partitioning flows through explode, broadcast join and
-        # projections) and (b) the probe stage parallelizes even when
-        # the target scan is a single input split. Explicit partition
-        # count (defaultParallelism) so AQE cannot coalesce the tiny
+    if nbytes is not None and bound and nbytes <= bound:
+        # Broadcast-src topology: _radius_pairs broadcasts the build
+        # side, so the probe side never shuffles. The pre-explode
+        # repartition hash-partitions the (1×-sized) target rows by
+        # tgt_id so that (a) the downstream per-target window and
+        # aggregation need NO pair-level exchange (the partitioning
+        # flows through explode, broadcast join and projections) and
+        # (b) the probe stage parallelizes even when the target scan
+        # is a single input split. Dropping it measured slower (PERF.md
+        # "Constraint propagation"). Explicit partition count
+        # (defaultParallelism) so AQE cannot coalesce the tiny
         # pre-explode exchange to one task.
         npart = tgt.sparkSession.sparkContext.defaultParallelism
-        tgt2 = tgt.select(
-            "tgt_id", "lon", "lat",
-            F.col("lon").alias("xx"), F.col("lat").alias("yy"),
-        ).repartition(npart, F.col("tgt_id"))
-    else:
-        # Shuffle topology (large source): the probe explode carries
-        # xx/yy (16 bytes/row on the 27× probe exchange) so the
-        # strict-sign quadrant is computable at pair level — the r18
-        # narrow-sort selection needs it BEFORE the top-k cut, and in
-        # exchange the pair-level window shuffles rows that are ~40%
-        # narrower (the quadrant byte replaces xx/yy/dist/src on the
-        # sorted rows) and the old post-rank tcoords hash join (an
-        # extra scan + two exchanges on the pair-heavy side) is
-        # replaced by one join against the already-aggregated
-        # (≤|tgt|-row) corner table.
-        tgt2 = tgt.select(
-            "tgt_id", "lon", "lat",
-            F.col("lon").alias("xx"), F.col("lat").alias("yy"),
-        )
+        tgt2 = tgt2.repartition(npart, F.col("tgt_id"))
     pairs = _radius_pairs(
         src2, tgt2, c,
         extra_src_cols=("s_lon", "s_lat", "value"),
@@ -381,10 +373,10 @@ def bilinear_irregular(
         #      exactly as in the r17 plan where the q filter ran after
         #      the rank, so they ride the window and drop after);
         #   3. top-k cut: row_number over (tgt_id | k_) on rows of
-        #      (tgt_id, q, k_, s_lon, s_lat, value) — ~40% narrower
-        #      than the r17 sort input (xx/yy/dist_mm/src_id dropped)
-        #      and a single-long comparator; no exchange in the
-        #      broadcast topology (rows are clustered by tgt_id);
+        #      (tgt_id, xx, yy, q, k_, s_lon, s_lat, value) — dist_mm
+        #      and src_id ride packed in k_, a single-long comparator;
+        #      no exchange in the broadcast topology (rows are
+        #      clustered by tgt_id);
         #   4. nearest-per-quadrant + corner pivot fused into ONE
         #      hash aggregate of primitive min()/min_by() — both
         #      DeclarativeAggregates with flat buffers, so the plan
@@ -392,10 +384,12 @@ def bilinear_irregular(
         #      16-expression MAX(CASE) pivot); all-4-quadrants is
         #      enforced by the bᵢ NULL checks (≡ the oracle's HAVING
         #      COUNT(*) = 4);
-        #   5. xx/yy re-attach from the 1×-sized target table onto the
-        #      ≤|tgt|-row corner table (broadcast when its scan
-        #      footprint is provably small, else shuffle_hash — the
-        #      corner side is already partitioned by tgt_id).
+        #   5. the aggregate groups by (tgt_id, xx, yy), as the shift2
+        #      path does: xx/yy are functions of tgt_id, so the groups
+        #      are the per-target groups, the tgt_id partitioning of the
+        #      window already satisfies the grouping, and the corner
+        #      rows leave the aggregate with the target coordinates the
+        #      solve reads — no join back to the target table.
         # Equivalence with the window pair (r17 plan): per (tgt, q)
         # the window's rn2=1 row is the min of q ∩ top-k in
         # (dist_mm, src_id) order; since every q-candidate larger than
@@ -424,7 +418,7 @@ def bilinear_irregular(
             " WHEN s_lon > xx AND s_lat < yy THEN 4 END"
         )
         top = pairs.selectExpr(
-            "tgt_id", f"{q_sql} AS q", f"{key_sql} AS k_",
+            "tgt_id", "xx", "yy", f"{q_sql} AS q", f"{key_sql} AS k_",
             "s_lon", "s_lat", "value",
         ).selectExpr(
             "*",
@@ -442,17 +436,11 @@ def bilinear_irregular(
                         f"min_by(CASE WHEN q = {i} THEN {src_c} END, {kq})"
                     ).alias(f"{nm}{i}")
                 )
-        g = top.groupBy("tgt_id").agg(*aggs).filter(
+        g = top.groupBy("tgt_id", "xx", "yy").agg(*aggs).filter(
             "b1 IS NOT NULL AND b2 IS NOT NULL "
             "AND b3 IS NOT NULL AND b4 IS NOT NULL"
         )
-        tco = tgt.selectExpr("tgt_id", "lon AS xx", "lat AS yy")
-        tbytes = _scan_bytes_hint(tgt)
-        if tbytes is not None and bound and tbytes <= bound:
-            joined = g.join(F.broadcast(tco), "tgt_id")
-        else:
-            joined = g.join(tco.hint("shuffle_hash"), "tgt_id")
-        wide = joined.selectExpr(
+        wide = g.selectExpr(
             "tgt_id", "xx", "yy",
             *[
                 e

@@ -1327,13 +1327,14 @@ def _regrid_gather(t, src_row, src_col, src_area, src_img,
     """Shared regrid tail: project (cell_id, src_row, src_col), bound
     to the source raster, gather values by equi-join. The pixel index
     is materialized behind a Generate barrier, so the bounds filter
-    and the join's inferred filters read it instead of re-running the
+    and any inferred join filter read it instead of re-running the
     CRS math (functions/exprs.py generate_barrier). The source image's
-    (row, col) sit behind one too: the join copies the target-side
-    bounds onto the source side, and a derived source row (a band
-    offset parsed from the file name) would otherwise run again in
-    that filter per source pixel. The copied bounds hold for every
-    pixel of a valid source raster, so keeping them off the scan
+    (row, col) sit behind one too: with constraint propagation on
+    (Spark's default; ``get_spark`` turns it off) the join copies the
+    target-side bounds onto the source side, and a derived source row
+    (a band offset parsed from the file name) would otherwise run
+    again in that filter per source pixel. The copied bounds hold for
+    every pixel of a valid source raster, so keeping them off the scan
     prunes nothing."""
     t = generate_barrier(
         t, ["cell_id"], [("src_row", src_row), ("src_col", src_col)], "px"

@@ -256,13 +256,21 @@ def q_geocentric_res(spark, sf_dir):
 
     The reference's np.histogram + argmax becomes groupBy(bin).count()
     + row_number; the bin average uses exact integer-mm sums so the
-    result is order-insensitive."""
+    result is order-insensitive. The spacing sits behind a Generate
+    barrier: the IS NOT NULL filter would otherwise carry an inlined
+    copy of the haversine (functions/exprs.py generate_barrier)."""
+    from pyresample_spark.functions.exprs import generate_barrier
+
     pts = _pts(spark, sf_dir)
     w = W.orderBy("event_id")
-    d = haversine_m(
-        "lon", "lat", F.lead("lon").over(w), F.lead("lat").over(w)
-    ).alias("d")
-    spacing = pts.select(d).filter(F.col("d").isNotNull())
+    nxt = pts.select(
+        "lon", "lat",
+        F.lead("lon").over(w).alias("lon2"),
+        F.lead("lat").over(w).alias("lat2"),
+    )
+    spacing = generate_barrier(
+        nxt, [], [("d", haversine_m("lon", "lat", "lon2", "lat2"))], "h"
+    ).select(F.col("h.d").alias("d")).filter(F.col("d").isNotNull())
     binned = spacing.select(
         F.floor(F.col("d") / 100000.0).alias("bin"),
         rnd(F.col("d") * 1000.0, 0).cast("bigint").alias("d_mm"),

@@ -62,6 +62,15 @@ def get_spark(app_name: str = "pyresample_spark", ui_port: int | None = None) ->
         # call-site line, nothing else. This is driver-side Python
         # overhead identical on any cluster, not a local-mode knob.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Constraint propagation infers filters (isnotnull(<join-key
+        # expression>), copies of a filter onto the other join side)
+        # that predicates already in the plan imply, so results cannot
+        # change. Building those constraint sets made PruneFilters the
+        # costliest optimizer rule of a bilinear op (~39 ms per op, 0
+        # effective runs), and the inferred isnotnull filters re-inline
+        # the lon/lat -> xyz trig into the scan and the probe. PERF.md
+        # "Constraint propagation".
+        .config("spark.sql.constraintPropagation.enabled", "false")
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "true" if ui_port else "false")
         .config("spark.ui.port", str(ui_port or 4040))

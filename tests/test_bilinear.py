@@ -9,6 +9,7 @@ independent reference (pyresample/bilinear/_base.py one-to-one, NumPy
 over Arrow batches) that the fused Spark plan must match row for row."""
 
 import math
+import re
 import sys
 
 import numpy as np
@@ -413,6 +414,50 @@ def test_fused_plan_matches_pandas_kernel(spark, sf_dir):
     )
     a = bilinear_irregular(src, tgt, 150_000.0, k=32).toPandas()
     b = bilinear_irregular_pandas(src, tgt, 150_000.0, k=32).toPandas()
+    assert len(a) == len(b) > 0
+    ka = sorted(map(tuple, a.round(9).values.tolist()))
+    kb = sorted(map(tuple, b.round(9).values.tolist()))
+    assert ka == kb
+
+
+_JOIN_NODE = re.compile(
+    r"\b(?:BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin"
+    r"|BroadcastNestedLoopJoin|CartesianProduct)\b")
+
+
+@pytest.mark.parametrize("topology", ["broadcast", "shuffle"])
+def test_exact_plan_holds_only_the_cell_join(spark, sf_dir, topology):
+    """The exact schemes carry the target lon/lat through the top-k
+    rows and group the corner pick by (tgt_id, xx, yy): the cell join
+    is the plan's only join in both topologies (no join re-attaches
+    the target coordinates), and the rows still equal the reference
+    kernel's."""
+    from pyresample_spark.queries.joins import _src
+
+    src = _src(spark, sf_dir)
+    tgt = src.filter(F.col("src_id") % 20 == 0).select(
+        F.col("src_id").alias("tgt_id"),
+        (F.col("lon") + 0.21).alias("lon"),
+        (F.col("lat") + 0.13).alias("lat"),
+    )
+    if topology == "shuffle":
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        df = bilinear_irregular(src, tgt, 150_000.0, k=32)
+        qe = df._jdf.queryExecution()
+        logical = qe.optimizedPlan().treeString(
+            True, False, 2**31 - 1, False, False)
+        joins = re.findall(r"Join Inner, \(?(.*)", logical)
+        assert len(joins) == 1 and "cx3" in joins[0], logical
+        physical = qe.executedPlan().toString()
+        kinds = _JOIN_NODE.findall(physical)
+        want = ("BroadcastHashJoin" if topology == "broadcast"
+                else "ShuffledHashJoin")
+        assert kinds == [want], physical
+        a = df.toPandas()
+        b = bilinear_irregular_pandas(src, tgt, 150_000.0, k=32).toPandas()
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert len(a) == len(b) > 0
     ka = sorted(map(tuple, a.round(9).values.tolist()))
     kb = sorted(map(tuple, b.round(9).values.tolist()))

@@ -1,16 +1,14 @@
 """Plan guard: projection math is evaluated once per pixel.
 
 Catalyst's filter pushdown copies projected expressions into pushed
-bounds filters and inferred join filters, with no cost guard. Without
-a Generate barrier (functions/exprs.py generate_barrier) a LAEA regrid
+bounds filters and join conditions, with no cost guard. Without a
+Generate barrier (functions/exprs.py generate_barrier) a LAEA regrid
 ran its CRS math three times per pixel. These tests build plans and
 never execute them: the optimized plan may hold at most two more
-transcendental calls than the analyzed plan.
-
-The kNN probes (nearest, gauss, bilinear) get the growth of the same
-probe onto a longlat target as extra allowance: the cell join's own
-lon/lat -> xyz projection is re-inlined into its inferred join filters
-for every target CRS, and the guard here is about the target inverse.
+transcendental calls than the analyzed plan, for the kNN probes
+(nearest, gauss, bilinear) as for the regrid. The session runs with
+constraint propagation off, so no inferred join filter re-inlines the
+cell join's lon/lat -> xyz projection.
 """
 
 from __future__ import annotations
@@ -34,8 +32,9 @@ from pyresample_spark.queries import load_all  # noqa: E402
 
 SLACK = 2
 SRC_AREA = AreaDefinition("src", "longlat", 64, 32, (0.0, 40.0, 12.8, 46.4))
-LONGLAT = AreaDefinition("t", "longlat", 16, 16, (2.0, 41.0, 8.0, 45.0))
 TARGETS = {
+    "longlat": AreaDefinition(
+        "t", "longlat", 16, 16, (2.0, 41.0, 8.0, 45.0)),
     "laea": AreaDefinition(
         "t", "+proj=laea +lat_0=43 +lon_0=6", 16, 16,
         (-200e3, -200e3, 200e3, 200e3)),
@@ -71,23 +70,14 @@ def _growth(df) -> tuple[int, int, int]:
     return optimized - analyzed, analyzed, optimized
 
 
-_LONGLAT_GROWTH: dict = {}
-
-
 @pytest.mark.parametrize("target", sorted(TARGETS))
 @pytest.mark.parametrize("method", [*KNN, "regrid"])
 def test_projection_math_not_reinlined(spark, method, target):
     growth, analyzed, optimized = _growth(
         _resampled(spark, method, TARGETS[target]))
-    allowance = SLACK
-    if method in KNN:
-        if method not in _LONGLAT_GROWTH:
-            _LONGLAT_GROWTH[method] = _growth(
-                _resampled(spark, method, LONGLAT))[0]
-        allowance += _LONGLAT_GROWTH[method]
-    assert growth <= allowance, (
+    assert growth <= SLACK, (
         f"{method} onto {target}: {optimized} transcendental calls "
-        f"optimized vs {analyzed} analyzed (allowance +{allowance})"
+        f"optimized vs {analyzed} analyzed (allowance +{SLACK})"
     )
 
 
