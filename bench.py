@@ -26,11 +26,16 @@ reclaim the median; `extra_reps` in the JSON records how many fired.
 Load-invariant floor (VERDICT r13 item 2): wall-clock on a shared host
 lost resolution as a regression detector (best-rep floor drifted
 7.86→10.00 across sessions on byte-identical plans). The JSON now also
-carries per-query `cpu` — the median across reps of the REST-scraped
-`executorCpuTime` delta (task CPU nanoseconds actually burned by the
-plan, summed over the query's stages) — plus `comparable12_cpu` /
-`comparable12_cpu_best`. CPU time is what the plan costs regardless of
-who else is on the box, so THOSE are the round-over-round anchors.
+carries per-query `cpu` — the median across reps of the task CPU
+seconds the plan actually burned, summed over the query's stages — plus
+`comparable12_cpu` / `comparable12_cpu_best`. CPU time is what the plan
+costs regardless of who else is on the box, so THOSE are the
+round-over-round anchors.
+
+Each timed query runs in its own job group; after it, outside the timed
+window, `perfbench/tracing.py SparkRest` reads that group's stages and
+`stage_totals` sums their cpu, GC and shuffle-write records. `cpus` is
+the session's core count: never compare numbers across boxes without it.
 """
 
 from __future__ import annotations
@@ -39,7 +44,6 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -110,42 +114,19 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
+    from perfbench.tracing import SparkRest, stage_totals
     from pyresample_spark.queries import load_all
     from pyresample_spark.session import get_spark
 
     registry = load_all()
-    ui_port = int(os.environ.get("SPARK_GRAFT_BENCH_UI_PORT", "4048"))
-    spark = get_spark("bench", ui_port=ui_port)
+    spark = get_spark(
+        "bench", ui_port=int(os.environ.get("SPARK_GRAFT_BENCH_UI_PORT", "4048"))
+    )
     spark.range(10).count()  # JVM warmup
 
-    app_id = spark.sparkContext.applicationId
+    sc = spark.sparkContext
+    rest = SparkRest(sc)
 
-    def stage_counters_now():
-        """(executorCpuTime ns, shuffleWriteRecords) summed over all
-        stages so far, via the REST API. CPU is the load-invariant cost
-        anchor; shuffle-write records are a fully DETERMINISTIC
-        structural metric (a plan shuffles the same rows regardless of
-        host load — VERDICT r15 item 2), so round-over-round deltas in
-        it survive any amount of box noise. Returns (None, None) when
-        the UI is unreachable (bench still reports wall times)."""
-        try:
-            with urllib.request.urlopen(
-                f"http://localhost:{ui_port}/api/v1/applications/"
-                f"{app_id}/stages",
-                timeout=10,
-            ) as r:
-                stages = json.load(r)
-            cpu = sum(st.get("executorCpuTime", 0) or 0 for st in stages)
-            shuf = sum(
-                st.get("shuffleWriteRecords", 0) or 0 for st in stages
-            )
-            gc = sum(st.get("jvmGcTime", 0) or 0 for st in stages)
-            return cpu, shuf, gc
-        except Exception:
-            return None, None, None
-
-    def cpu_now_ns():
-        return stage_counters_now()[0]
     # Initialize the parquet reader path (footer/schema reads only — no
     # data pages) so the first timed query measures the query, not
     # Hadoop FS + codec init.
@@ -200,41 +181,31 @@ def main():
         l1 = load1_now()
         rep_load1.append(round(l1, 2) if l1 is not None else None)
         tot = 0.0
-        cpu_before, shuf_before, gc_before = stage_counters_now()
         for name in HEADLINE:
             spec = registry[name]
+            gid = f"bench:{name}:{len(rep_totals)}"
+            sc.setJobGroup(gid, name)
             t0 = time.time()
             df = spec.builder(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
             samples[name].append(dt)
             tot += dt
-            # CPU delta scraped OUTSIDE the wall-timed window; each
-            # query's "after" doubles as the next query's "before".
-            cpu_after, shuf_after, gc_after = stage_counters_now()
-            if cpu_before is not None and cpu_after is not None:
-                d = (cpu_after - cpu_before) / 1e9
-                if d > 0:
-                    cpu_samples[name].append(d)
-                else:
-                    # a non-positive delta means the UI evicted stages
-                    # mid-run (retainedStages raised in get_spark, but
-                    # belt-and-braces): flag it instead of recording
-                    # garbage into the load-invariant anchor
-                    cpu_dropped[0] += 1
-            if shuf_before is not None and shuf_after is not None:
-                ds = shuf_after - shuf_before
-                if ds >= 0:
-                    shuf_samples[name].append(ds)
+            # the group's stage metrics, read OUTSIDE the wall-timed
+            # window; a group with no completed stage is flagged
+            # instead of recording garbage into the load-invariant
+            # anchor
+            stages = rest.group(gid)["stages"]
+            if not any(st["status"] == "COMPLETE" for st in stages):
+                cpu_dropped[0] += 1
+                continue
+            st = stage_totals(stages)
+            cpu_samples[name].append(st["cpu_s"])
+            shuf_samples[name].append(st["shuffle_write_records"])
             # GC attribution for the host's ~200x cpu blowups (r17
             # A/B): a blowup WITH a matching jvmGcTime spike is heap
             # pressure; one without is external to the JVM.
-            if gc_before is not None and gc_after is not None:
-                dg = (gc_after - gc_before) / 1e3
-                if dg >= 0:
-                    gc_samples[name].append(round(dg, 3))
-            cpu_before, shuf_before, gc_before = (
-                cpu_after, shuf_after, gc_after)
+            gc_samples[name].append(round(st["gc_s"], 3))
         rep_totals.append(tot)
 
     def median(xs):
@@ -332,6 +303,7 @@ def main():
                 # rep timeline so degradation is visible at a glance
                 "rep_totals": [round(t, 3) for t in rep_totals],
                 "sf": sf,
+                "cpus": sc.defaultParallelism,
                 "reps": reps,
                 "total_min": round(sum(min(v) for v in samples.values()), 3),
                 "total_max": round(sum(max(v) for v in samples.values()), 3),

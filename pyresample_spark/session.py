@@ -38,10 +38,12 @@ def get_spark(app_name: str = "pyresample_spark", ui_port: int | None = None) ->
     ``pyworker.install``, and that removes most of it.
 
     ``ui_port``: when given, the Spark UI (and its REST API) is enabled on
-    that port — used by ``bench.py``/``tools/scale_probe_*`` to read REAL
-    executor metrics (``executorCpuTime``, shuffle bytes) instead of
-    guessing from plans. Only honored by the first ``getOrCreate`` in a
-    process (Spark config semantics); tests keep the UI off.
+    that port, or the next free one — ``perfbench/tracing.py SparkRest``
+    reads the port Spark bound and, per job group, the REAL executor
+    metrics (``executorCpuTime``, shuffle bytes) for ``bench.py``,
+    ``perfbench`` and the profiling tools. Only honored by the first
+    ``getOrCreate`` in a process (Spark config semantics); tests keep
+    the UI off.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -74,12 +76,12 @@ def get_spark(app_name: str = "pyresample_spark", ui_port: int | None = None) ->
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "true" if ui_port else "false")
         .config("spark.ui.port", str(ui_port or 4040))
-        # metric scrapers sum /stages cumulatively; the default
-        # retainedStages=1000 evicts early stages mid-bench, making
-        # running totals DECREASE and per-query deltas go negative
-        # (ADVICE r14). 10k covers a full bench run (~2-3k stages)
-        # with bounded driver memory — unbounded retention in the
-        # task-sharing local JVM is its own hazard.
+        # SparkRest reads each job group's jobs and stages right after
+        # the group ends, when the default retainedStages=1000 still
+        # holds them; 10k keeps a whole bench run (~2-3k stages)
+        # readable afterwards, in the UI or the REST API, with bounded
+        # driver memory — unbounded retention in the task-sharing
+        # local JVM is its own hazard.
         .config("spark.ui.retainedStages", "10000")
         .config("spark.ui.retainedJobs", "10000")
         # managed-table machinery (bucketed tables) kept out of the repo

@@ -30,7 +30,7 @@ def main():
     names = args.queries or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     registry = load_all()
-    spark = get_spark("dump_plans", ui_port=4052)
+    spark = get_spark("dump_plans")
     os.makedirs(args.out, exist_ok=True)
     for name in names:
         df = registry[name].builder(spark, sf_dir)

@@ -202,9 +202,9 @@ def audit_plan(name: str, plan: str) -> list[str]:
         # AQE's pre-execution formatted plan carries no codegen ids;
         # absence here is not absence of codegen
         notes.append("codegen ids elided by pre-execution AQE plan")
-    n_exch = len(re.findall(
-        r"Arguments: (?:hash|range)partitioning", plan
-    ))
+    # every partitioning shuffles: hash, range, round-robin (a
+    # repartition(n)) and single
+    n_exch = len(re.findall(r"^\(\d+\) Exchange\b", plan, re.MULTILINE))
     notes.append(f"{n_exch} shuffle exchange(s)")
     if "BroadcastHashJoin" in plan:
         notes.append("broadcast hash join present")

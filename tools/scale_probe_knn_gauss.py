@@ -21,11 +21,9 @@ Run: python tools/scale_probe_knn_gauss.py [N ...]  (default 1 4 16 64)
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -33,48 +31,6 @@ from pyspark.sql import functions as F
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 UI_PORT = int(os.environ.get("SPARK_GRAFT_UI_PORT", "4048"))
-
-
-def make_spark():
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-probe-knn-gauss")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.sql.warehouse.dir", "/tmp/pyresample_spark_warehouse")
-        .config("spark.driver.extraJavaOptions",
-                "-Dderby.system.home=/tmp/pyresample_spark_derby")
-        .getOrCreate()
-    )
-
-
-def rest(path):
-    with urllib.request.urlopen(
-        f"http://localhost:{UI_PORT}/api/v1/{path}", timeout=10
-    ) as r:
-        return json.load(r)
-
-
-def stage_totals(app_id, after_stage):
-    tot = dict(sw_rec=0, sw_mb=0.0, stages=0)
-    for st in rest(f"applications/{app_id}/stages"):
-        if st["stageId"] <= after_stage or st["status"] == "SKIPPED":
-            continue
-        tot["stages"] += 1
-        tot["sw_rec"] += st.get("shuffleWriteRecords", 0)
-        tot["sw_mb"] += st.get("shuffleWriteBytes", 0) / 1e6
-    return tot
 
 
 def amplified_src(spark, n: int):
@@ -121,10 +77,13 @@ def knn_build(spark, n: int, scheme: str):
 
 def main():
     ns = [int(a) for a in sys.argv[1:]] or [1, 4, 16, 64]
-    spark = make_spark()
-    spark.sparkContext.setLogLevel("WARN")
+    from perfbench.tracing import SparkRest, stage_totals
+    from pyresample_spark.session import get_spark
+
+    spark = get_spark("scale-probe-knn-gauss", ui_port=UI_PORT)
     spark.range(10).count()
-    app_id = spark.sparkContext.applicationId
+    sc = spark.sparkContext
+    rest = SparkRest(sc)
 
     for label, build in (("gauss_fold", gauss_build), ("knn_join", knn_build)):
         for scheme in ("c27", "shift2"):
@@ -133,21 +92,20 @@ def main():
                 "overwrite"
             ).save()
             for n in ns:
-                last = max(
-                    (s["stageId"]
-                     for s in rest(f"applications/{app_id}/stages")),
-                    default=-1,
-                )
+                gid = f"knn_gauss:{label}:{scheme}:{n}"
+                sc.setJobGroup(gid, label)
                 df = build(spark, n, scheme)
                 t0 = time.time()
                 df.write.format("noop").mode("overwrite").save()
                 dt = time.time() - t0
-                tot = stage_totals(app_id, last)
+                stages = [st for st in rest.group(gid)["stages"]
+                          if st["status"] == "COMPLETE"]
+                tot = stage_totals(stages)
                 print(
                     f"{label}/{scheme} n={n}: wall={dt:.2f}s "
-                    f"stages={tot['stages']} "
-                    f"shuffle_write={tot['sw_rec']:,} rec "
-                    f"/ {tot['sw_mb']:.1f} MB "
+                    f"stages={len(stages)} "
+                    f"shuffle_write={tot['shuffle_write_records']:,} rec "
+                    f"/ {tot['shuffle_write_mb']:.1f} MB "
                     f"load1={os.getloadavg()[0]:.1f}",
                     flush=True,
                 )
