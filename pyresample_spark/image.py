@@ -214,13 +214,13 @@ def _gauss(
     approx: bool = False,
 ):
     """``approx=True`` routes the candidate join through the shift2
-    approximate tier (duplicate pairs collapse in-aggregate via a
-    struct collect_set) — the same epsilon-style knob as nearest."""
+    approximate tier (it emits each candidate pair once, so the same
+    top-k and sums run) — the same epsilon-style knob as nearest."""
     from pyresample_spark.operators.knn import knn_gauss_fold
 
-    # fused top-k + weighted sums (one HashAggregate, no value re-join);
-    # the struct-sort top-k has no packed-id range precondition, so any
-    # caller-supplied natural key works unchanged
+    # fused top-k + weighted sums (no value re-join); the window top-k
+    # has no packed-id range precondition, so any caller-supplied
+    # natural key works unchanged
     src = _src_keyed(img, key_col)
     tgt = grid_lonlat(target, img.df.sparkSession, "tgt_id")
     sums = knn_gauss_fold(
@@ -252,12 +252,13 @@ def _bilinear(
     approx: bool = False,
 ):
     """``approx=True`` routes the 32-NN candidate stage through the
-    shift2 approximate tier (duplicates collapse via collect_set
-    before the top-k slice) — the same epsilon-style knob as the
-    nearest/gauss facades; a target whose corner candidates straddle
-    both shifted grids' walls may solve from a slightly different
-    quadrant pick or drop out, so measure with the
-    q_knn_approx_recall pattern before shipping results."""
+    shift2 approximate tier (it emits each candidate pair once, so
+    the same corner pick runs, ids in the same packable range) — the
+    same epsilon-style knob as the nearest/gauss facades; a target
+    whose corner candidates straddle both shifted grids' walls may
+    solve from a slightly different quadrant pick or drop out, so
+    measure with the q_knn_approx_recall pattern before shipping
+    results."""
     from pyresample_spark.operators.bilinear_irregular import bilinear_irregular
 
     src = _src_keyed(img, key_col)

@@ -12,12 +12,11 @@ Spark-first: candidates come from the cell-bucketed join core
 (operators/knn.py _radius_pairs) with the source lon/lat/value riding
 the build side and the target lon/lat riding the probe explode. The
 cell join is the plan's only join: the target lon/lat ride every later
-step with the rows of their target. The exact neighbor schemes pick
-corners with a narrow sort (a packed (dist_mm, src_id) key, a
-row_number top-k cut, one min/min_by aggregate per quadrant, grouped
-by the target); the approximate shift2 scheme keeps a sorted
-collect_set slice and a per-quadrant ``filter()`` over it. The
-closed-form (t, s) solve — the reference's full irregular →
+step with the rows of their target. Both neighbor schemes pick corners
+with one narrow sort (a packed (dist_mm, src_id) key, a row_number
+top-k cut, one min/min_by aggregate per quadrant, grouped by the
+target): the cell join emits each candidate pair once under either
+scheme. The closed-form (t, s) solve — the reference's full irregular →
 uprights-parallel → parallelogram fallback chain — runs as staged
 codegen'd projects behind Generate barriers (``_ts_chain_staged``).
 No Python anywhere in the plan.
@@ -174,15 +173,6 @@ def interp_sql(t: str, s: str) -> str:
             f" + v3 * (1.0 - {s}) * {t} + v4 * {s} * {t}")
 
 
-# strict-sign quadrants in reference order (p1 UL, p2 UR, p3 LL, p4 LR)
-QUAD_CONDS = (
-    ("p1", "x.s_lon < xx AND x.s_lat > yy"),
-    ("p2", "x.s_lon > xx AND x.s_lat > yy"),
-    ("p3", "x.s_lon < xx AND x.s_lat < yy"),
-    ("p4", "x.s_lon > xx AND x.s_lat < yy"),
-)
-
-
 def _ts_chain_staged(wide: DataFrame) -> DataFrame:
     """The closed-form (t, s, value) solve as STAGED codegen'd
     projects over the wide corner columns (x1..y4, v1..v4, xx, yy),
@@ -260,13 +250,11 @@ def bilinear_irregular(
        (broadcast source: the target is pre-partitioned by tgt_id, so
        no pair-level exchange follows; shuffle: one cell-join
        exchange, then one tgt_id exchange for the per-target steps);
-    2. exact schemes: the strict-sign quadrant is computed per pair,
-       the pairs (still carrying xx/yy) are cut to the top-k by one
-       packed (dist_mm, src_id) key, and one min/min_by hash aggregate
+    2. the strict-sign quadrant is computed per pair, the pairs
+       (still carrying xx/yy) are cut to the top-k by one packed
+       (dist_mm, src_id) key, and one min/min_by hash aggregate
        grouped by (tgt_id, xx, yy) picks the nearest candidate per
-       quadrant and pivots the four corners. shift2: a sorted
-       ``collect_set`` slice per (tgt_id, xx, yy) and a per-quadrant
-       ``filter()`` over it, behind a Generate barrier;
+       quadrant and pivots the four corners;
     3. the (t, s) solve and the interpolation run as staged codegen'd
        projects behind Generate barriers (:func:`_ts_chain_staged`),
        built from the formula builders the DuckDB oracle also uses.
@@ -275,10 +263,9 @@ def bilinear_irregular(
     (:func:`~pyresample_spark.operators.knn._radius_pairs`):
     ``"shift2"`` is the APPROXIMATE tier (own-cell probe on two
     half-shifted coarse grids — a distant corner candidate can be
-    missed when a pair straddles both grids' walls); its duplicate
-    candidate pairs collapse via ``collect_set`` before the top-k
-    slice, the same dedup idiom as ``knn_join``'s shift2 path, so
-    duplicates never consume top-k slots."""
+    missed when a pair straddles both grids' walls). It emits each
+    candidate pair once, so it runs the same corner pick, including
+    the packable-id precondition ``0 <= src_id < pack``."""
     c = chord_length(radius_m)
     src2 = src.select(
         "src_id", "lon", "lat",
@@ -320,137 +307,99 @@ def bilinear_irregular(
         extra_tgt_cols=("xx", "yy"),
         neighbor_scheme=neighbor_scheme,
     )
-    if neighbor_scheme == "shift2":
-        # shift2 emits duplicate pairs (one per co-located grid);
-        # collect_set collapses them in-aggregate before the top-k
-        # slice, so the selection stays the fused-aggregate form (a
-        # row_number rank would count duplicates as distinct ranks)
-        g = pairs.groupBy("tgt_id", "xx", "yy").agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_set(
-                        F.struct(
-                            "dist_mm", "src_id", "s_lon", "s_lat", "value"
-                        )
-                    )
-                ),
-                1, k,
-            ).alias("ks"),
-        )
-        # picks materialized as GENERATOR OUTPUT — see the barrier
-        # rationale below
-        corners = generate_barrier(g, ["tgt_id", "xx", "yy"], [
-            (name, f"try_element_at(filter(ks, x -> {cond}), 1)")
-            for name, cond in QUAD_CONDS
-        ], "pk").filter(
-            "pk.p1 IS NOT NULL AND pk.p2 IS NOT NULL "
-            "AND pk.p3 IS NOT NULL AND pk.p4 IS NOT NULL"
-        )
-        wide = corners.selectExpr(
-            "tgt_id", "xx", "yy",
-            *[
-                e
-                for i in (1, 2, 3, 4)
-                for e in (
-                    f"pk.p{i}.s_lon AS x{i}", f"pk.p{i}.s_lat AS y{i}",
-                    f"pk.p{i}.value AS v{i}", f"pk.p{i}.src_id AS id{i}",
-                )
-            ],
-        )
-    else:
-        # Exact schemes (r18-opt narrow-sort selection; replaces the
-        # r17 two-window + MAX(CASE) pivot): the pair-level top-k sort
-        # was the query's dominant cost (stage-isolated at sf0.1:
-        # +2.05 of 3.46 cpu-s — tools/probe_bilinear_r18.py), so the
-        # sorted rows are cut to the minimum the selection needs:
-        #   1. pack (dist_mm, src_id) into ONE bigint key (the
-        #      knn_join idiom; order-isomorphic to the window's
-        #      (dist_mm, src_id) given 0 ≤ src_id < pack, which a
-        #      per-row assert enforces — an out-of-range id would
-        #      silently mis-sort, so it must raise, not survive);
-        #   2. compute the strict-sign quadrant BEFORE the cut (rows
-        #      on an axis get NULL — they still occupy top-k slots,
-        #      exactly as in the r17 plan where the q filter ran after
-        #      the rank, so they ride the window and drop after);
-        #   3. top-k cut: row_number over (tgt_id | k_) on rows of
-        #      (tgt_id, xx, yy, q, k_, s_lon, s_lat, value) — dist_mm
-        #      and src_id ride packed in k_, a single-long comparator;
-        #      no exchange in the broadcast topology (rows are
-        #      clustered by tgt_id);
-        #   4. nearest-per-quadrant + corner pivot fused into ONE
-        #      hash aggregate of primitive min()/min_by() — both
-        #      DeclarativeAggregates with flat buffers, so the plan
-        #      stays a codegen'd HashAggregate (no second window, no
-        #      16-expression MAX(CASE) pivot); all-4-quadrants is
-        #      enforced by the bᵢ NULL checks (≡ the oracle's HAVING
-        #      COUNT(*) = 4);
-        #   5. the aggregate groups by (tgt_id, xx, yy), as the shift2
-        #      path does: xx/yy are functions of tgt_id, so the groups
-        #      are the per-target groups, the tgt_id partitioning of the
-        #      window already satisfies the grouping, and the corner
-        #      rows leave the aggregate with the target coordinates the
-        #      solve reads — no join back to the target table.
-        # Equivalence with the window pair (r17 plan): per (tgt, q)
-        # the window's rn2=1 row is the min of q ∩ top-k in
-        # (dist_mm, src_id) order; since every q-candidate larger than
-        # min(q) ranks strictly worse, q ∩ top-k is non-empty iff
-        # min(q) is in the top-k, and then equals min(q) — which is
-        # exactly min(k_ | q) over the rank-cut survivors. Verified
-        # row-identical at sf0.1/sf0.01/sf0.001 (probe + oracle).
-        # SQL-text construction throughout (r18-opt): every DataFrame
-        # transformation eagerly re-analyzes the whole accumulated
-        # plan, so the former Column-API chains (~150 py4j calls at
-        # ~0.6 ms each plus repeated analyses) made BUILD time rival
-        # execution inside the bench's timed region. Same expressions,
-        # same plan — just fewer, bigger selectExpr calls.
-        max_dist_mm = round(c * 1000.0)
-        pack = (1 << 62) // max(max_dist_mm + 1, 1)
-        key_sql = (
-            f"CASE WHEN assert_true(src_id >= 0 AND src_id < {pack}L, "
-            f"'bilinear_irregular: src_id outside the packable range "
-            f"[0, pack) — remap ids with operators.ids.with_compact_id'"
-            f") IS NULL THEN dist_mm * {pack}L + src_id END"
-        )
-        q_sql = (
-            "CASE WHEN s_lon < xx AND s_lat > yy THEN 1"
-            " WHEN s_lon > xx AND s_lat > yy THEN 2"
-            " WHEN s_lon < xx AND s_lat < yy THEN 3"
-            " WHEN s_lon > xx AND s_lat < yy THEN 4 END"
-        )
-        top = pairs.selectExpr(
-            "tgt_id", "xx", "yy", f"{q_sql} AS q", f"{key_sql} AS k_",
-            "s_lon", "s_lat", "value",
-        ).selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY tgt_id ORDER BY k_ ASC)"
-            " AS rn",
-        ).filter(f"rn <= {int(k)} AND q IS NOT NULL")
-        aggs = []
-        for i in (1, 2, 3, 4):
-            kq = f"CASE WHEN q = {i} THEN k_ END"
-            aggs.append(F.expr(f"min({kq})").alias(f"b{i}"))
-            for nm, src_c in (("x", "s_lon"), ("y", "s_lat"),
-                              ("v", "value")):
-                aggs.append(
-                    F.expr(
-                        f"min_by(CASE WHEN q = {i} THEN {src_c} END, {kq})"
-                    ).alias(f"{nm}{i}")
-                )
-        g = top.groupBy("tgt_id", "xx", "yy").agg(*aggs).filter(
-            "b1 IS NOT NULL AND b2 IS NOT NULL "
-            "AND b3 IS NOT NULL AND b4 IS NOT NULL"
-        )
-        wide = g.selectExpr(
-            "tgt_id", "xx", "yy",
-            *[
-                e
-                for i in (1, 2, 3, 4)
-                for e in (
-                    f"x{i}", f"y{i}", f"v{i}",
-                    f"b{i} % {pack}L AS id{i}",
-                )
-            ],
-        )
+    # Corner pick, both schemes (r18-opt narrow-sort selection;
+    # replaces the r17 two-window + MAX(CASE) pivot): the pair-level top-k sort
+    # was the query's dominant cost (stage-isolated at sf0.1:
+    # +2.05 of 3.46 cpu-s, r18 stage probe), so the
+    # sorted rows are cut to the minimum the selection needs:
+    #   1. pack (dist_mm, src_id) into ONE bigint key (the
+    #      knn_join idiom; order-isomorphic to the window's
+    #      (dist_mm, src_id) given 0 ≤ src_id < pack, which a
+    #      per-row assert enforces — an out-of-range id would
+    #      silently mis-sort, so it must raise, not survive);
+    #   2. compute the strict-sign quadrant BEFORE the cut (rows
+    #      on an axis get NULL — they still occupy top-k slots,
+    #      exactly as in the r17 plan where the q filter ran after
+    #      the rank, so they ride the window and drop after);
+    #   3. top-k cut: row_number over (tgt_id | k_) on rows of
+    #      (tgt_id, xx, yy, q, k_, s_lon, s_lat, value) — dist_mm
+    #      and src_id ride packed in k_, a single-long comparator;
+    #      no exchange in the broadcast topology (rows are
+    #      clustered by tgt_id);
+    #   4. nearest-per-quadrant + corner pivot fused into ONE
+    #      hash aggregate of primitive min()/min_by() — both
+    #      DeclarativeAggregates with flat buffers, so the plan
+    #      stays a codegen'd HashAggregate (no second window, no
+    #      16-expression MAX(CASE) pivot); all-4-quadrants is
+    #      enforced by the bᵢ NULL checks (≡ the oracle's HAVING
+    #      COUNT(*) = 4);
+    #   5. the aggregate groups by (tgt_id, xx, yy): xx/yy are
+    #      functions of tgt_id, so the groups
+    #      are the per-target groups, the tgt_id partitioning of the
+    #      window already satisfies the grouping, and the corner
+    #      rows leave the aggregate with the target coordinates the
+    #      solve reads — no join back to the target table.
+    # Equivalence with the window pair (r17 plan): per (tgt, q)
+    # the window's rn2=1 row is the min of q ∩ top-k in
+    # (dist_mm, src_id) order; since every q-candidate larger than
+    # min(q) ranks strictly worse, q ∩ top-k is non-empty iff
+    # min(q) is in the top-k, and then equals min(q) — which is
+    # exactly min(k_ | q) over the rank-cut survivors. Verified
+    # row-identical at sf0.1/sf0.01/sf0.001 (probe + oracle).
+    # SQL-text construction throughout (r18-opt): every DataFrame
+    # transformation eagerly re-analyzes the whole accumulated
+    # plan, so the former Column-API chains (~150 py4j calls at
+    # ~0.6 ms each plus repeated analyses) made BUILD time rival
+    # execution inside the bench's timed region. Same expressions,
+    # same plan — just fewer, bigger selectExpr calls.
+    max_dist_mm = round(c * 1000.0)
+    pack = (1 << 62) // max(max_dist_mm + 1, 1)
+    key_sql = (
+        f"CASE WHEN assert_true(src_id >= 0 AND src_id < {pack}L, "
+        f"'bilinear_irregular: src_id outside the packable range "
+        f"[0, pack) — remap ids with operators.ids.with_compact_id'"
+        f") IS NULL THEN dist_mm * {pack}L + src_id END"
+    )
+    q_sql = (
+        "CASE WHEN s_lon < xx AND s_lat > yy THEN 1"
+        " WHEN s_lon > xx AND s_lat > yy THEN 2"
+        " WHEN s_lon < xx AND s_lat < yy THEN 3"
+        " WHEN s_lon > xx AND s_lat < yy THEN 4 END"
+    )
+    top = pairs.selectExpr(
+        "tgt_id", "xx", "yy", f"{q_sql} AS q", f"{key_sql} AS k_",
+        "s_lon", "s_lat", "value",
+    ).selectExpr(
+        "*",
+        "row_number() OVER (PARTITION BY tgt_id ORDER BY k_ ASC)"
+        " AS rn",
+    ).filter(f"rn <= {int(k)} AND q IS NOT NULL")
+    aggs = []
+    for i in (1, 2, 3, 4):
+        kq = f"CASE WHEN q = {i} THEN k_ END"
+        aggs.append(F.expr(f"min({kq})").alias(f"b{i}"))
+        for nm, src_c in (("x", "s_lon"), ("y", "s_lat"),
+                          ("v", "value")):
+            aggs.append(
+                F.expr(
+                    f"min_by(CASE WHEN q = {i} THEN {src_c} END, {kq})"
+                ).alias(f"{nm}{i}")
+            )
+    g = top.groupBy("tgt_id", "xx", "yy").agg(*aggs).filter(
+        "b1 IS NOT NULL AND b2 IS NOT NULL "
+        "AND b3 IS NOT NULL AND b4 IS NOT NULL"
+    )
+    wide = g.selectExpr(
+        "tgt_id", "xx", "yy",
+        *[
+            e
+            for i in (1, 2, 3, 4)
+            for e in (
+                f"x{i}", f"y{i}", f"v{i}",
+                f"b{i} % {pack}L AS id{i}",
+            )
+        ],
+    )
     # The (t, s) chain is materialized behind Generate barriers
     # (_ts_chain_staged). Why: Catalyst's predicate pushdown
     # substitutes deterministic project aliases into pushed

@@ -188,8 +188,9 @@ def approx_cte_sql(area, radius_m: float) -> str:
     DuckDB twin of operators/knn.py neighbor_scheme="shift2" — two
     grids of cell side SHIFT2_CELL_FACTOR·cell_side(c), the second
     shifted by half a cell per axis; own-cell join within each grid,
-    same mm-quantized chord filter and ranking (duplicate pairs from
-    dual co-location are harmless under the rank-1 min)."""
+    same mm-quantized chord filter and ranking. A grid-1 pair is kept
+    only when its ends sit in different grid-0 cells (the keying with
+    the grid fixed at 0), so each pair appears once, as on Spark."""
     from pyresample_spark.operators.knn import SHIFT2_CELL_FACTOR, cell_side
 
     cell = repr(SHIFT2_CELL_FACTOR * cell_side(chord_length(radius_m)))
@@ -215,6 +216,10 @@ def approx_cte_sql(area, radius_m: float) -> str:
                            + (t_gy - s_gy) * (t_gy - s_gy)
                            + (t_gz - s_gz) * (t_gz - s_gz)) * 1000.0 + 0.5) AS BIGINT) AS dist_mm
       FROM ta JOIN sa USING (grid, acx3, acy3, acz3)
+      WHERE grid = 0
+         OR FLOOR(t_gx / {cell} + 0 * 0.5) <> FLOOR(s_gx / {cell} + 0 * 0.5)
+         OR FLOOR(t_gy / {cell} + 0 * 0.5) <> FLOOR(s_gy / {cell} + 0 * 0.5)
+         OR FLOOR(t_gz / {cell} + 0 * 0.5) <> FLOOR(s_gz / {cell} + 0 * 0.5)
     ),
     aranked AS (
       SELECT tgt_id, src_id, dist_mm,

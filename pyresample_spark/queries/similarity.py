@@ -941,7 +941,16 @@ def q_semdedup(spark, sf_dir):
     distinct stream of bare ids joined back broadcast-style. At
     100 TB: k scales with corpus size to bound Σ|cluster|², exactly
     the paper's pre-clustering recipe."""
-    emb = _emb(spark, sf_dir)
+    # the 64-term unrolled dot below reads element_at(e, 1..64): assert
+    # the table contract once per vector, before any pair is formed, so
+    # a short embedding raises instead of giving a NULL cosine that
+    # counts as "not a duplicate"
+    emb = _emb(spark, sf_dir).selectExpr(
+        "vec_id",
+        "CASE WHEN assert_true(size(embedding) = 64, 'q_semdedup: every "
+        "embedding must have 64 elements') IS NULL THEN embedding END"
+        " AS embedding",
+    )
     centroids = emb.filter(F.col("vec_id") % 50 == 0)
     # r17-opt: carry_vec rides the embedding+norm through the
     # assignment so the corpus is normalized and assigned in ONE pass;

@@ -1545,11 +1545,17 @@ def q_dedup_span_mask(spark, sf_dir):
     count vs doc length. Shuffles carry only (8-byte hash) and
     (doc_id, pos) ints — never text; the positions explode is 5× rows
     of ints, collapsed by the distinct's map-side partial."""
+    d = table(spark, sf_dir, "documents")
+    return span_mask(d.select("doc_id", words_col().alias("wl")))
+
+
+def span_mask(base):
+    """The span mask of q_dedup_span_mask over a ``(doc_id, wl)`` frame
+    of per-document word arrays: (doc_id, n_tokens, n_masked,
+    keep_fraction). ``tools/scale_probe_soak.py`` runs it on an
+    amplified frame."""
     from pyspark.sql.window import Window as W
 
-    d = table(spark, sf_dir, "documents")
-    wl = words_col()
-    base = d.select("doc_id", wl.alias("wl"))
     tok = base.select(
         "doc_id", F.size("wl").cast("long").alias("n_tokens")
     )

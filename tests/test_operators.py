@@ -102,9 +102,8 @@ def test_knn_cell_vs_broadcast_equivalence(spark, tmp_path, monkeypatch):
 def test_knn_approx_shift2(spark):
     """shift2 approximate tier: results are a subset of the exact k=1
     join (never an invented pair, never a closer-than-exact distance),
-    recall is high on a dense cluster, and k>1 is rejected."""
-    import pytest
-
+    recall is high on a dense cluster, and every (k, packed) form runs
+    on the once-per-pair candidate set."""
     src = _pts(
         spark,
         [(i, float(10 + 0.11 * (i % 13)), float(40 + 0.13 * (i // 13)))
@@ -134,8 +133,8 @@ def test_knn_approx_shift2(spark):
         assert approx[t][1] == exact[t][1]
     # dense cluster well inside one radius → recall should be high
     assert len(same) / len(exact) >= 0.9
-    # k>1: duplicate pairs collapse via collect_set — each (tgt, rank)
-    # row is a real exact pair, ranks are dense, no pair repeats
+    # k>1: each (tgt, rank) row is a real exact pair, ranks are dense,
+    # no pair repeats
     a3 = knn_join(src, tgt, 300_000.0, k=3,
                   neighbor_scheme="shift2").collect()
     e3 = {
@@ -152,12 +151,22 @@ def test_knn_approx_shift2(spark):
             assert round(r.dist_m, 3) == e3[(r.tgt_id, r.src_id)]
     for ranks in by_tgt.values():
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
-    # the guarded combinations refuse loudly
-    with pytest.raises(ValueError, match="shift2"):
-        knn_join(src, tgt, 300_000.0, k=None, neighbor_scheme="shift2")
-    with pytest.raises(ValueError, match="shift2"):
-        knn_join(src, tgt, 300_000.0, k=2, neighbor_scheme="shift2",
-                 packed=False)
+    # the radius-only join repeats no pair
+    within = [
+        (r.tgt_id, r.src_id)
+        for r in knn_join(src, tgt, 300_000.0, k=None,
+                          neighbor_scheme="shift2").collect()
+    ]
+    assert within and len(within) == len(set(within))
+
+    # the unpacked window fallback ranks exactly as the packed path
+    def top2(packed):
+        return sorted(map(tuple, knn_join(
+            src, tgt, 300_000.0, k=2, neighbor_scheme="shift2",
+            packed=packed,
+        ).collect()))
+
+    assert top2(False) == top2(True)
 
 
 def test_knn_respects_radius(spark):
@@ -2872,11 +2881,19 @@ def test_ann_ivf_index_persist_and_reuse(spark, sf_dir, tmp_path):
 
 def test_knn_neighbor_schemes_identical_pairs(spark):
     """The exact 27-neighbor scheme's pair set (box prune included) is
-    EXACTLY the all-pairs brute force within the radius; an unknown
-    scheme, including a retired one, is rejected."""
+    EXACTLY the all-pairs brute force within the radius. The shift2
+    pair set repeats no pair and is the distinct union of its two
+    single-grid own-cell joins (keyed here in numpy over Spark's own
+    geocentric columns), each pair at its brute-force distance. An
+    unknown scheme, including a retired one, is rejected."""
+    import numpy as np
     from pyspark.sql import functions as F
 
-    from pyresample_spark.operators.knn import _radius_pairs
+    from pyresample_spark.operators.knn import (
+        SHIFT2_CELL_FACTOR,
+        _radius_pairs,
+        cell_side,
+    )
 
     src = spark.range(4000).select(
         F.col("id").alias("src_id"),
@@ -2896,6 +2913,35 @@ def test_knn_neighbor_schemes_identical_pairs(spark):
     a = sorted(map(tuple, _radius_pairs(src, tgt, c).collect()))
     b = [row[:3] for row in _knn_bruteforce(src, tgt, 300_000.0)]
     assert a == b and len(a) > 1000
+
+    brute = {(t, s): d for t, s, d in b}
+    cell = SHIFT2_CELL_FACTOR * cell_side(c)
+    geo = {
+        side: with_geocentric(df).select(f"{side}_id", "gx", "gy", "gz")
+        .toPandas()
+        for side, df in (("src", src), ("tgt", tgt))
+    }
+    own = set()
+    for grid in (0, 1):
+        keyed = {
+            side: g.assign(**{
+                f"k{ax}": np.floor(g[ax] / cell + grid * 0.5)
+                for ax in ("gx", "gy", "gz")
+            })
+            for side, g in geo.items()
+        }
+        j = keyed["tgt"].merge(keyed["src"], on=["kgx", "kgy", "kgz"])
+        own |= set(zip(j["tgt_id"].tolist(), j["src_id"].tolist()))
+    want = {p for p in own if p in brute}
+    got = [
+        tuple(r)
+        for r in _radius_pairs(src, tgt, c, neighbor_scheme="shift2")
+        .collect()
+    ]
+    keys = [(t, s) for t, s, _ in got]
+    assert len(keys) == len(set(keys))
+    assert set(keys) == want and len(want) > 1000
+    assert all(brute[(t, s)] == d for t, s, d in got)
     for scheme in ("c9", "2c8"):
         with pytest.raises(ValueError, match="neighbor_scheme"):
             _radius_pairs(src, tgt, c, neighbor_scheme=scheme)
@@ -2928,6 +2974,29 @@ def _ivf_corpus(spark):
     return spark.createDataFrame(
         [(i, [float(i % 3), 1.0 + (i % 2), float(i % 5)])
          for i in range(30)], _IVF_SCHEMA)
+
+
+def test_semdedup_short_embedding_raises(spark, sf_dir, tmp_path):
+    """q_semdedup's unrolled dot reads 64 elements; one 63-dim row
+    must fail the query, not yield a NULL cosine ("not a duplicate")."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyresample_spark.queries.similarity import q_semdedup
+
+    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = t.column("embedding").to_pylist()
+    emb[7] = emb[7][:63]
+    t = t.set_column(
+        t.schema.get_field_index("embedding"),
+        t.schema.field("embedding"),
+        pa.array(emb, t.schema.field("embedding").type),
+    )
+    pq.write_table(t, str(tmp_path / "embeddings.parquet"))
+    with pytest.raises(Exception, match="64 elements"):
+        q_semdedup(spark, str(tmp_path)).collect()
 
 
 def test_ivf_null_centroid_rows_fall_back_to_join_tier(spark):

@@ -13,8 +13,8 @@ the TARGET stays the base 2-degree world grid — the realistic 100 TB
 shape (ever-more source data resampled onto a fixed output area).
 Candidate pairs grow ~n x under both schemes; the aggregate state
 stays one row per target, so the comparison isolates the probe-side
-explode factor (27 cells vs 2 own-cells) and the dedup cost shift2
-pays (collect_set on the packed key).
+explode factor (27 cells vs 2 own-cells) and the grid-0 ownership
+filter shift2 applies after its join (each pair kept once).
 
 Run: python tools/scale_probe_knn_gauss.py [N ...]  (default 1 4 16 64)
 """

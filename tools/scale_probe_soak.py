@@ -8,10 +8,11 @@ Amplification is IN-PLAN (one scan + explode(sequence), the
 scale_probe_minhash precedent) and DECORRELATED so structure grows
 linearly, not quadratically:
 
-- span-mask: each replica's shingle hashes are salted with the replica
-  index (md5 of shingle + rep), so duplicated 5-gram spans exist only
-  WITHIN a replica — per-replica mask structure identical to 1x, total
-  work n x.
+- span-mask: each replica's words are salted with the replica index
+  (so its shingles and their md5 hashes are too), so duplicated 5-gram
+  spans exist only WITHIN a replica — per-replica mask structure
+  identical to 1x, total work n x. The plan is the query's own
+  (queries/textops.py span_mask).
 - bilinear: the source swath replicates n x with a small deterministic
   longitude jitter (decorrelates exact coordinates) while the TARGET
   set stays the base grid — the realistic 100 TB shape (ever-more
@@ -39,60 +40,26 @@ UI_PORT = int(os.environ.get("SPARK_GRAFT_UI_PORT", "4049"))
 
 
 def span_mask_amplified(spark, n: int):
-    """q_dedup_span_mask's exact plan over an n x salted replica
-    stream (queries/textops.py:1474 — same shingle explode, same
-    groupBy(h), same count_distinct fold)."""
+    """q_dedup_span_mask's own plan (queries/textops.py span_mask) over
+    n salted replicas of the documents: doc_id remaps to
+    doc_id * n + rep and every word is salted with its replica index,
+    so duplicated spans exist only within a replica. n = 1 is the
+    query's own input."""
     from pyresample_spark.queries import table
-    from pyresample_spark.queries.textops import md5_bigint, words_col
+    from pyresample_spark.queries.textops import span_mask, words_col
 
-    d = table(spark, SF, "documents")
-    base = d.select("doc_id", words_col().alias("wl")).select(
-        "doc_id",
-        "wl",
-        F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("rep"),
-    ).select(
-        (F.col("doc_id") * n + F.col("rep")).alias("doc_id"), "wl", "rep"
+    base = table(spark, SF, "documents").select(
+        "doc_id", words_col().alias("wl")
     )
-    tok = base.select("doc_id", F.size("wl").cast("long").alias("n_tokens"))
-    sh = (
-        base.filter(F.size("wl") >= 5)
-        .select(
-            "doc_id",
-            "rep",
-            F.posexplode(
-                F.expr(
-                    "transform(sequence(0, size(wl) - 5), i -> "
-                    "concat(element_at(wl, i + 1), ' ', element_at(wl, i + 2),"
-                    " ' ', element_at(wl, i + 3), ' ', element_at(wl, i + 4),"
-                    " ' ', element_at(wl, i + 5)))"
-                )
-            ).alias("s", "shingle"),
+    if n > 1:
+        base = base.select(
+            "doc_id", "wl",
+            F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("rep"),
+        ).selectExpr(
+            f"doc_id * {n} + rep AS doc_id",
+            "transform(wl, w -> concat(w, '\\u001f', rep)) AS wl",
         )
-        .select(
-            "doc_id",
-            "s",
-            md5_bigint(
-                F.concat_ws("\x1f", "shingle", F.col("rep").cast("string"))
-            ).alias("h"),
-        )
-    )
-    c = sh.groupBy("h").agg(F.count(F.lit(1)).alias("cnt"))
-    covered = (
-        sh.join(c, "h")
-        .filter(F.col("cnt") >= 2)
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.col("s"), F.col("s") + 4)).alias("pos"),
-        )
-    )
-    masked = covered.groupBy("doc_id").agg(
-        F.count_distinct("pos").cast("long").alias("n_masked")
-    )
-    return tok.join(masked, "doc_id", "left").select(
-        "doc_id",
-        "n_tokens",
-        F.coalesce("n_masked", F.lit(0)).alias("n_masked"),
-    )
+    return span_mask(base)
 
 
 def bilinear_amplified(spark, n: int):
