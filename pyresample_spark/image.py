@@ -277,7 +277,7 @@ def _bilinear(
 @register_resampler("regrid")
 def _regrid(img: GeoImage, target: AreaDefinition, value_col="value", **kw):
     """Analytic cross-CRS nearest regrid (operators/crs.py): both areas
-    in the analytic registry (longlat/eqc/polar stere/laea) → pure
+    in the analytic family table (operators/crs.py ``_FAMILIES``) → pure
     column-math inverse∘forward + one equi-join. The gradient-search
     replacement for projected grids (gradient/__init__.py:54-60)."""
     from pyresample_spark.operators.crs import regrid_nearest

@@ -2,13 +2,20 @@
 
 The reference delegates every coordinate transform to pyproj
 (bucket/__init__.py:165, grid.py:119). This engine implements the CRS
-families its test areas actually use as pure Catalyst column math —
-longlat, eqc (plate carrée), polar stereographic, Lambert azimuthal
-equal-area — and falls back to the Arrow-batched pyproj UDF
-(operators/proj_udf.py) for anything else when pyproj is importable.
+families its areas use itself, each declared once in the family table
+``_FAMILIES``: a parameter parser, the Column forward and inverse
+(functions/geo.py kernels, pure Catalyst math), an optional SQL-text
+forward, and a driver-side float inverse. ``_family`` picks the row;
+anything outside the table falls back to the Arrow-batched pyproj UDF
+(operators/proj_udf.py) when pyproj is importable.
 
-``forward(crs)``  → f(lon_col, lat_col) -> (x, y) columns
-``inverse(crs)``  → f(x_col, y_col) -> (lon, lat) columns
+``forward(crs)``        → f(lon_col, lat_col) -> (x, y) columns
+``inverse(crs)``        → f(x_col, y_col) -> (lon, lat) columns
+``forward_sql(crs)``    → f(lon_sql, lat_sql) -> (x_sql, y_sql), or None
+``inverse_scalar(crs)`` → f(x, y) -> (lon, lat) floats, or None
+
+Each wraps the family's centered math in the CRS's frame (``_Frame``:
++x_0/+y_0, custom sphere, +pm, +units, +lon_wrap, +axis, +geoc).
 
 Supported proj strings (whitespace-separated key=value, order-free):
 - ``longlat`` (degrees pass-through)
@@ -28,9 +35,11 @@ Supported proj strings (whitespace-separated key=value, order-free):
   azimuthal equidistant — true distances from the center)
 - ``+proj=gnom [+lat_0=..] [+lon_0=..]`` (Snyder 22 gnomonic — great
   circles map to straight lines; beyond-horizon pixels NULL-masked)
-- ``+proj=laea [+lat_0=..] [+lon_0=..]``
-- ``+proj=merc [+lat_ts=..] [+lon_0=..]``
-- ``+proj=lcc +lat_1=.. [+lat_2=..] [+lat_0=..] [+lon_0=..]``
+- ``+proj=laea [+lat_0=..] [+lon_0=..]`` (with +a/+b: the polar
+  EASE-Grid 2.0 aspects or the oblique ellipsoidal form)
+- ``+proj=merc [+lat_ts=..] [+lon_0=..]`` and
+  ``+proj=lcc +lat_1=.. [+lat_2=..] [+lat_0=..] [+lon_0=..]``
+  (ellipsoidal with +a/+b or +ellps)
 - ``+proj=geos [+h=..] [+lon_0=..] [+sweep=x|y]`` (full-disc; off-disc
   pixels are NULL-masked by the horizon condition); with +a/+b the
   ELLIPSOIDAL form (PROJ geos.cpp: geocentric-latitude view vector,
@@ -40,6 +49,9 @@ Supported proj strings (whitespace-separated key=value, order-free):
   a declared ellipsoid the Redfearn/Thomas series 8-9..8-25 — the
   kernel PROJ uses for tmerc — validated against the EPSG GN7-2
   OSGB worked example)
+- ``+proj=sinu``, ``+proj=cea [+lat_ts=..]`` (ellipsoidal with +a/+b),
+  ``+proj=ortho`` (beyond-horizon pixels NULL-masked),
+  ``+proj=krovak`` (EPSG 9819, Bessel 1841 by default)
 - ``+proj=omerc +lat_0=.. +lonc=.. +alpha=.. [+ctrack=merc]`` — the
   fitted swath-following frame produced by ``compute_optimal_bb_area``.
   Default cross-track is equidistant (the fitted-bb convention);
@@ -50,75 +62,108 @@ Supported proj strings (whitespace-separated key=value, order-free):
 
 from __future__ import annotations
 
+import math
+from typing import Callable, NamedTuple
+
 from pyspark.sql import functions as F
 
 from pyresample_spark.functions.exprs import generate_barrier
 from pyresample_spark.functions.geo import (
+    _MOLL_CX,
+    _MOLL_CY,
+    _ROBIN_CX,
+    _ROBIN_CY,
+    _ROBIN_X,
+    _ROBIN_Y,
     R_EARTH,
-    aeqd_inverse,
-    aeqd_xy,
-    gnom_inverse,
-    gnom_xy,
-    stere_ell_constants,
-    stere_ell_inverse,
-    stere_ell_polar_constants,
-    stere_ell_polar_inverse,
-    stere_ell_polar_xy,
-    stere_ell_xy,
+    _c,
+    aea_constants,
     aea_inverse,
     aea_xy,
-    stere_oblique_inverse,
-    stere_oblique_xy,
+    aeqd_inverse,
+    aeqd_xy,
+    authalic_constants,
+    cea_ell_inverse,
+    cea_ell_sql,
+    cea_ell_xy,
+    cea_inverse,
+    cea_xy,
     eqc_x,
     eqc_y,
+    eqdc_constants,
     eqdc_inverse,
     eqdc_xy,
-    moll_inverse,
-    moll_xy,
-    robin_inverse,
-    robin_xy,
+    geos_ell_constants,
     geos_ell_inverse,
     geos_ell_xy,
     geos_inverse,
     geos_xy,
+    gnom_inverse,
+    gnom_xy,
+    krovak_constants,
+    krovak_inverse,
+    krovak_sql,
+    krovak_xy,
+    laea_ell_oblique_constants,
+    laea_ell_oblique_inverse,
+    laea_ell_oblique_sql,
+    laea_ell_oblique_xy,
+    laea_ell_polar_inverse,
+    laea_ell_polar_sql,
+    laea_ell_polar_xy,
     laea_inverse,
+    laea_sql,
     laea_x,
     laea_y,
+    lcc_constants,
+    lcc_ell_constants,
+    lcc_ell_inverse,
+    lcc_ell_sql,
+    lcc_ell_xy,
     lcc_inverse,
     lcc_x,
     lcc_y,
+    merc_ell_constants,
+    merc_ell_inverse,
+    merc_ell_sql,
+    merc_ell_xy,
     merc_inverse,
+    merc_sql,
     merc_x,
     merc_y,
+    moll_inverse,
+    moll_xy,
     omerc_frame,
     omerc_inverse,
     omerc_xy,
-    cea_inverse,
-    cea_xy,
     ortho_inverse,
     ortho_xy,
+    robin_inverse,
+    robin_xy,
     sinu_inverse,
     sinu_xy,
+    stere_ell_constants,
+    stere_ell_inverse,
+    stere_ell_polar_constants,
+    stere_ell_polar_inverse,
+    stere_ell_polar_sql,
+    stere_ell_polar_xy,
+    stere_ell_sql,
+    stere_ell_xy,
+    stere_oblique_inverse,
+    stere_oblique_sql,
+    stere_oblique_xy,
     stere_polar_inverse,
     stere_polar_x,
     stere_polar_y,
-    cea_ell_inverse,
-    cea_ell_xy,
-    laea_ell_oblique_inverse,
-    laea_ell_oblique_xy,
-    laea_ell_polar_inverse,
-    laea_ell_polar_xy,
-    lcc_ell_inverse,
-    lcc_ell_xy,
-    merc_ell_inverse,
-    merc_ell_xy,
+    tmerc_ell_constants,
     tmerc_ell_inverse,
+    tmerc_ell_sql,
     tmerc_ell_xy,
     tmerc_inverse,
+    tmerc_sql,
     tmerc_xy,
     utm_params,
-    krovak_inverse,
-    krovak_xy,
 )
 
 
@@ -140,68 +185,48 @@ def _params(crs: str) -> dict:
     return _resolve_datum_token(out)
 
 
+# proj names that are their own family row
+_PLAIN = frozenset(("eqc", "aeqd", "gnom", "krovak", "sinu", "ortho",
+                    "omerc", "aea", "eqdc", "moll", "robin"))
+# spherical row -> its ellipsoidal twin, taken when +a/+b or +ellps
+# declare a non-spherical ellipsoid. tmerc/utm: the twin is the
+# Redfearn/Thomas series (PROJ's tmerc default kernel); areas that say
+# "+proj=utm +zone=33" with no ellipsoid keep the Snyder 8-5..8-8
+# sphere and their existing goldens
+_ELL_TWIN = {"merc": "merc_ell", "lcc": "lcc_ell", "geos": "geos_ell",
+             "cea": "cea_ell", "tmerc": "tmerc_ell"}
+
+
 def _family(crs: str) -> str:
+    """The ``_FAMILIES`` key of ``crs``."""
     p = _params(crs)
     proj = p.get("proj", crs.strip())
     if proj in ("longlat", "latlong", "lonlat"):
         return "longlat"
-    if proj == "eqc":
-        return "eqc"
+    if proj in _PLAIN:
+        return proj
+    proj = "tmerc" if proj == "utm" else proj
+    if proj in _ELL_TWIN:
+        return _ELL_TWIN[proj] if _ellipsoid_ab(p) else proj
     if proj == "stere":
-        lat0 = float(p.get("lat_0", "90"))
         # polar aspects keep the lat_ts secant form (stere_polar_*);
         # oblique/equatorial aspects use Snyder 21-2..21-4 (k0 scale),
         # or PROJ's conformal-latitude ellipsoidal form when the CRS
         # carries an explicit +a/+b ellipsoid
         ell = _ellipsoid_ab(p)
-        if abs(lat0) == 90.0:
+        if abs(float(p.get("lat_0", "90"))) == 90.0:
             return "stere_ell_polar" if ell else "stere"
         return "stere_ell" if ell else "stere_oblique"
-    if proj == "aeqd":
-        return "aeqd"
-    if proj == "gnom":
-        return "gnom"
     if proj == "laea":
-        ell = _ellipsoid_ab(p)
-        if ell:
-            # EASE-Grid 2.0 north/south (EPSG 6931/6932) take the
-            # polar-aspect forms (Snyder 24-23/24-24); any other lat_0
-            # dispatches to the oblique ellipsoidal family (Snyder
-            # 24-17.., e.g. ETRS89-LAEA EPSG 3035)
-            if abs(float(p.get("lat_0", "0"))) == 90.0:
-                return "laea_ell_polar"
-            return "laea_ell_oblique"
-        return "laea"
-    if proj == "krovak":
-        return "krovak"
-    if proj == "merc":
-        return "merc_ell" if _ellipsoid_ab(p) else "merc"
-    if proj == "lcc":
-        return "lcc_ell" if _ellipsoid_ab(p) else "lcc"
-    if proj == "geos":
-        return "geos_ell" if _ellipsoid_ab(p) else "geos"
-    if proj == "sinu":
-        return "sinu"
-    if proj == "cea":
-        return "cea_ell" if _ellipsoid_ab(p) else "cea"
-    if proj == "ortho":
-        return "ortho"
-    if proj in ("tmerc", "utm"):
-        # declared ellipsoid → Redfearn/Thomas series (PROJ's tmerc
-        # default kernel); bare spherical form otherwise (back-compat:
-        # areas that say "+proj=utm +zone=33" with no ellipsoid keep
-        # the Snyder 8-5..8-8 sphere and their existing goldens)
-        return "tmerc_ell" if _ellipsoid_ab(p) else "tmerc"
-    if proj == "omerc":
-        return "omerc"
-    if proj == "aea":
-        return "aea"
-    if proj == "eqdc":
-        return "eqdc"
-    if proj == "moll":
-        return "moll"
-    if proj == "robin":
-        return "robin"
+        if not _ellipsoid_ab(p):
+            return "laea"
+        # EASE-Grid 2.0 north/south (EPSG 6931/6932) take the
+        # polar-aspect forms (Snyder 24-23/24-24); any other lat_0
+        # dispatches to the oblique ellipsoidal family (Snyder
+        # 24-17.., e.g. ETRS89-LAEA EPSG 3035)
+        if abs(float(p.get("lat_0", "0"))) == 90.0:
+            return "laea_ell_polar"
+        return "laea_ell_oblique"
     raise NotImplementedError(
         f"no analytic transform for CRS {crs!r} (pyproj UDF fallback "
         "in operators/proj_udf.py)"
@@ -222,122 +247,6 @@ def _declared_sphere_radius(p: dict) -> float:
     if not r > 0.0:
         raise ValueError(f"sphere radius {r} must be positive")
     return r
-
-
-def tmerc_crs_params(crs: str) -> dict:
-    """+proj=tmerc / +proj=utm token dict → tmerc keyword params
-    (shared by the column builders, the scalar inverse, and the
-    oracle SQL twins)."""
-    p = _params(crs)
-    rad = _declared_sphere_radius(p)
-    if p.get("proj") == "utm":
-        kw = utm_params(int(p["zone"]), south="south" in p)
-        kw["radius"] = rad
-        return kw
-    return {
-        "lat_0": float(p.get("lat_0", "0")),
-        "lon_0": float(p.get("lon_0", "0")),
-        "k": float(p.get("k", p.get("k_0", "1"))),
-        "x_0": float(p.get("x_0", "0")),
-        "y_0": float(p.get("y_0", "0")),
-        "radius": rad,
-    }
-
-
-def cea_ell_crs_params(crs: str) -> dict:
-    p = _params(crs)
-    a, b = _ellipsoid_ab(p)
-    return {
-        "lat_ts": float(p.get("lat_ts", "0")),
-        "a": a,
-        "b": b,
-        "lon_0": float(p.get("lon_0", "0")),
-    }
-
-
-def laea_ell_oblique_crs_params(crs: str) -> dict:
-    p = _params(crs)
-    a, b = _ellipsoid_ab(p)
-    return {
-        "lat_0": float(p.get("lat_0", "0")),
-        "a": a,
-        "b": b,
-        "lon_0": float(p.get("lon_0", "0")),
-    }
-
-
-def laea_ell_polar_crs_params(crs: str) -> dict:
-    p = _params(crs)
-    a, b = _ellipsoid_ab(p)
-    return {
-        "a": a,
-        "b": b,
-        "lon_0": float(p.get("lon_0", "0")),
-        "north": float(p.get("lat_0", "90")) > 0,
-    }
-
-
-def merc_ell_crs_params(crs: str) -> dict:
-    p = _params(crs)
-    a, b = _ellipsoid_ab(p)
-    return {
-        "a": a,
-        "b": b,
-        "lat_ts": float(p["lat_ts"]) if "lat_ts" in p else None,
-        "lon_0": float(p.get("lon_0", "0")),
-        "k": float(p.get("k_0", p.get("k", "1"))),
-    }
-
-
-def krovak_crs_params(crs: str) -> dict:
-    """+proj=krovak (EPSG method 9819 — S-JTSK). PROJ's parameter
-    defaults: centre 49.5°N, origin 24°50'E of Greenwich, cone-axis
-    azimuth 30°17'17.303", scale 0.9999; the pseudo standard parallel
-    is fixed at 78.5° (not a PROJ parameter; +lat_ts overrides here
-    for completeness). Ellipsoid defaults to Bessel 1841 like PROJ."""
-    p = _params(crs)
-    ab = _ellipsoid_ab(p)
-    a, b = ab if ab else _ELLPS["bessel"]
-    return {
-        "a": a,
-        "b": b,
-        "lat_c": float(p.get("lat_0", "49.5")),
-        "lon_0": float(p.get("lon_0", repr(24.833333333333332))),
-        "alpha_c": float(p.get("alpha", repr(30.288139752777778))),
-        "lat_p": float(p.get("lat_ts", "78.5")),
-        "k": float(p.get("k_0", p.get("k", "0.9999"))),
-    }
-
-
-def lcc_ell_crs_params(crs: str) -> dict:
-    p = _params(crs)
-    a, b = _ellipsoid_ab(p)
-    return {
-        "lat_0": float(p.get("lat_0", "0")),
-        "lat_1": float(p.get("lat_1", p.get("lat_0", "33"))),
-        "lat_2": float(p["lat_2"]) if "lat_2" in p else None,
-        "a": a,
-        "b": b,
-        "lon_0": float(p.get("lon_0", "0")),
-        "k0": float(p.get("k_0", p.get("k", "1"))),
-    }
-
-
-def tmerc_ell_crs_params(crs: str) -> dict:
-    """+proj=tmerc/+proj=utm with a declared ellipsoid → keyword
-    params for the ellipsoidal (Redfearn series) twins."""
-    p = _params(crs)
-    a, b = _ellipsoid_ab(p)
-    base = tmerc_crs_params(crs)
-    return {
-        "lat_0": base["lat_0"],
-        "lon_0": base["lon_0"],
-        "a": a,
-        "b": b,
-        "k": base["k"],
-        "x_0": base["x_0"],
-        "y_0": base["y_0"],
-    }
 
 
 # named ellipsoids the registry recognizes (+ellps=..); explicit
@@ -435,49 +344,6 @@ def _ellipsoid_ab(p: dict):
     )
 
 
-def stere_ell_polar_crs_params(crs: str) -> dict:
-    p = _params(crs)
-    a, b = _ellipsoid_ab(p)
-    lat0 = float(p.get("lat_0", "90"))
-    return {
-        "lat_ts": float(p.get("lat_ts", "90")),
-        "a": a,
-        "b": b,
-        "lon_0": float(p.get("lon_0", "0")),
-        "north": lat0 > 0,
-        # +k/+k_0 only matters without a true-scale parallel (PROJ: an
-        # explicit +lat_ts takes precedence and k0 is ignored) — e.g.
-        # UPS, +proj=stere +lat_0=90 +k=0.994 +ellps=WGS84
-        "k0": float(p.get("k_0", p.get("k", "1"))),
-    }
-
-
-def stere_ell_crs_params(crs: str) -> dict:
-    """+proj=stere +a=.. +b=.. oblique token dict → keyword params
-    (+lat_ts is polar-only in PROJ and deliberately ignored here)."""
-    p = _params(crs)
-    a, b = _ellipsoid_ab(p)
-    return {
-        "lat_0": float(p.get("lat_0", "0")),
-        "lon_0": float(p.get("lon_0", "0")),
-        "a": a,
-        "b": b,
-        "k0": float(p.get("k_0", p.get("k", "1"))),
-    }
-
-
-def conic_crs_params(crs: str) -> dict:
-    """+proj=aea / +proj=eqdc token dict → conic keyword params
-    (shared by the column builders and the oracle SQL twins)."""
-    p = _params(crs)
-    return {
-        "lat_1": float(p.get("lat_1", p.get("lat_0", "30"))),
-        "lat_2": float(p["lat_2"]) if "lat_2" in p else None,
-        "lat_0": float(p.get("lat_0", "0")),
-        "lon_0": float(p.get("lon_0", "0")),
-    }
-
-
 def _xy_offsets(fam: str, p: dict):
     """False easting/northing (+x_0/+y_0). tmerc/utm consume them
     inside their own math (tmerc_crs_params); for every other family
@@ -490,25 +356,19 @@ def _xy_offsets(fam: str, p: dict):
     return float(p.get("x_0", "0")), float(p.get("y_0", "0"))
 
 
-# Spherical projections are linear in the earth radius — x = R·g(…) —
-# so a custom sphere (+R=, or +a= with no distinct +b) is honored
-# GENERICALLY by scaling the default-R output by r/R_EARTH (inverse:
-# scale inputs first), identically in the Column, SQL and scalar
-# twins. Families whose math couples R with another length cannot use
-# that output scaling (it would mis-scale the coupled term); laea,
-# tmerc/utm and geos instead consume the radius INSIDE their kernels
-# (laea dispatch; tmerc/utm: _declared_sphere_radius rides the kw so
-# the false easting stays unscaled; geos: rg = 1 + h/R with x = h·…
-# — r17, previously loud). Only the fitted omerc analog (track-fit
-# constants baked into the frame) stays a loud guard.
-_SCALABLE_SPHERICAL = frozenset((
-    "eqc", "stere", "stere_oblique", "aeqd", "gnom", "merc", "lcc",
-    "sinu", "cea", "ortho", "aea", "eqdc", "moll", "robin",
-))
-
-
 def _sphere_scale(fam: str, p: dict) -> float:
     """r / R_EARTH for a declared custom sphere, 1.0 otherwise.
+
+    Spherical projections are linear in the earth radius — x = R·g(…) —
+    so a custom sphere (+R=, or +a= with no distinct +b) is honored
+    generically by scaling the default-R output by r/R_EARTH (inverse:
+    scale inputs first), identically in the Column, SQL and scalar
+    twins. The family row's ``sphere`` says whether that holds
+    ("scale"), whether the kernel takes the radius itself because it
+    couples with another length ("kernel": laea; tmerc/utm, whose false
+    easting stays unscaled; geos, rg = 1 + h/R), or whether a custom
+    radius is refused (the fitted omerc analog, whose track-fit
+    constants are baked into the frame).
 
     Before this helper a spherical CRS with +R= or +a= (e.g. the GRIB
     R=6371229 sphere) SILENTLY projected through the default
@@ -523,11 +383,10 @@ def _sphere_scale(fam: str, p: dict) -> float:
     r = float(r)
     if not r > 0.0:
         raise ValueError(f"sphere radius {r} must be positive")
-    if r == R_EARTH or fam in ("longlat", "laea", "tmerc", "geos"):
-        # laea/tmerc/geos consume the radius inside their own kernels
-        # (laea dispatch, tmerc_crs_params/_declared_sphere_radius)
+    sphere = _FAMILIES[fam].sphere
+    if r == R_EARTH or sphere == "kernel":
         return 1.0
-    if fam not in _SCALABLE_SPHERICAL:
+    if sphere != "scale":
         raise NotImplementedError(
             f"custom sphere radius {r} on +proj family {fam!r}: the "
             "radius couples with other length parameters there "
@@ -703,343 +562,1047 @@ def _frame_params(fam: str, p: dict):
     return pm, to_meter, lon_wrap, axis, geoc_es
 
 
+# ---------------------------------------------------------------------------
+# The family table. Each analytic family is declared once, in _FAMILIES:
+#   params  token dict -> kernel keywords, parsed once per CRS;
+#   fwd     Column forward (lon, lat, **kw) -> (x, y), functions/geo.py;
+#   inv     Column inverse (x, y, **kw) -> (lon, lat), functions/geo.py;
+#   sql     SQL-text forward (lon_sql, lat_sql, **kw) -> (x_sql, y_sql)
+#           for the datum let-chain, or None;
+#   scalar  (**kw) -> driver-side float inverse (x, y) -> (lon, lat) or
+#           None off the projection domain (plan-time geometry);
+#   sphere  how a custom sphere (+R / lone +a) is honored: "scale" (the
+#           output is linear in R, scaled by r/R_EARTH in the frame),
+#           "kernel" (the radius rides the kernel keywords), or None
+#           (refused loudly: the radius couples with another length).
+# forward / inverse / forward_sql / inverse_scalar look the family up and
+# wrap it in the CRS's frame (_Frame).
+# ---------------------------------------------------------------------------
+
+
+class _Family(NamedTuple):
+    params: Callable
+    fwd: Callable
+    inv: Callable
+    sql: Callable | None
+    scalar: Callable
+    sphere: str | None
+
+
+def _no_params(p: dict) -> dict:
+    return {}
+
+
+def _lon0_params(p: dict) -> dict:
+    return {"lon_0": float(p.get("lon_0", "0"))}
+
+
+def _center_params(p: dict) -> dict:
+    return {"lat_0": float(p.get("lat_0", "0")),
+            "lon_0": float(p.get("lon_0", "0"))}
+
+
+def _lat_ts_params(p: dict) -> dict:
+    return {"lat_ts": float(p.get("lat_ts", "0")),
+            "lon_0": float(p.get("lon_0", "0"))}
+
+
+def _stere_params(p: dict) -> dict:
+    lat0 = float(p.get("lat_0", "90"))
+    return {"lat_ts": float(p.get("lat_ts", lat0)),
+            "lon_0": float(p.get("lon_0", "0")), "north": lat0 > 0}
+
+
+def _stere_oblique_params(p: dict) -> dict:
+    return {**_center_params(p), "k0": float(p.get("k_0", p.get("k", "1")))}
+
+
+def _laea_params(p: dict) -> dict:
+    return {"lat_0": float(p.get("lat_0", "90")),
+            "lon_0": float(p.get("lon_0", "0")),
+            # EASE +a; GRIB +R
+            "radius": float(p.get("a", p.get("R", repr(R_EARTH))))}
+
+
+def _lcc_params(p: dict) -> dict:
+    return {"lat_0": float(p.get("lat_0", "0")),
+            "lat_1": float(p.get("lat_1", p.get("lat_0", "33"))),
+            "lat_2": float(p["lat_2"]) if "lat_2" in p else None,
+            "lon_0": float(p.get("lon_0", "0"))}
+
+
+def _conic_params(p: dict) -> dict:
+    return {
+        "lat_1": float(p.get("lat_1", p.get("lat_0", "30"))),
+        "lat_2": float(p["lat_2"]) if "lat_2" in p else None,
+        "lat_0": float(p.get("lat_0", "0")),
+        "lon_0": float(p.get("lon_0", "0")),
+    }
+
+
+def _omerc_params(p: dict) -> dict:
+    return {
+        "frame": omerc_frame(float(p.get("lat_0", "0")),
+                             float(p.get("lonc", "0")),
+                             float(p.get("alpha", "0"))),
+        "cross_track": ("mercator" if p.get("ctrack") == "merc"
+                        else "equidistant"),
+    }
+
+
+def _geos_params(p: dict) -> dict:
+    return {"h": float(p.get("h", "35785831")),
+            "lon_0": float(p.get("lon_0", "0")),
+            "sweep": p.get("sweep", "y"),
+            "radius": _declared_sphere_radius(p)}
+
+
+def _geos_ell_params(p: dict) -> dict:
+    a, b = _ellipsoid_ab(p)
+    return {"h": float(p.get("h", "35785831")), "a": a, "b": b,
+            "lon_0": float(p.get("lon_0", "0")), "sweep": p.get("sweep", "y")}
+
+
+def _tmerc_params(p: dict) -> dict:
+    rad = _declared_sphere_radius(p)
+    if p.get("proj") == "utm":
+        kw = utm_params(int(p["zone"]), south="south" in p)
+        kw["radius"] = rad
+        return kw
+    return {
+        "lat_0": float(p.get("lat_0", "0")),
+        "lon_0": float(p.get("lon_0", "0")),
+        "k": float(p.get("k", p.get("k_0", "1"))),
+        "x_0": float(p.get("x_0", "0")),
+        "y_0": float(p.get("y_0", "0")),
+        "radius": rad,
+    }
+
+
+def _tmerc_ell_params(p: dict) -> dict:
+    a, b = _ellipsoid_ab(p)
+    base = _tmerc_params(p)
+    return {
+        "lat_0": base["lat_0"],
+        "lon_0": base["lon_0"],
+        "a": a,
+        "b": b,
+        "k": base["k"],
+        "x_0": base["x_0"],
+        "y_0": base["y_0"],
+    }
+
+
+def _cea_ell_params(p: dict) -> dict:
+    a, b = _ellipsoid_ab(p)
+    return {**_lat_ts_params(p), "a": a, "b": b}
+
+
+def _laea_ell_oblique_params(p: dict) -> dict:
+    a, b = _ellipsoid_ab(p)
+    return {**_center_params(p), "a": a, "b": b}
+
+
+def _laea_ell_polar_params(p: dict) -> dict:
+    a, b = _ellipsoid_ab(p)
+    return {
+        "a": a,
+        "b": b,
+        "lon_0": float(p.get("lon_0", "0")),
+        "north": float(p.get("lat_0", "90")) > 0,
+    }
+
+
+def _merc_ell_params(p: dict) -> dict:
+    a, b = _ellipsoid_ab(p)
+    return {
+        "a": a,
+        "b": b,
+        "lat_ts": float(p["lat_ts"]) if "lat_ts" in p else None,
+        "lon_0": float(p.get("lon_0", "0")),
+        "k": float(p.get("k_0", p.get("k", "1"))),
+    }
+
+
+def _krovak_params(p: dict) -> dict:
+    # PROJ's defaults: center 49.5°N, origin 24°50'E of Greenwich,
+    # cone-axis azimuth 30°17'17.303", scale 0.9999; the pseudo standard
+    # parallel is fixed at 78.5° (not a PROJ parameter; +lat_ts
+    # overrides here for completeness); Bessel 1841 unless declared
+    ab = _ellipsoid_ab(p)
+    a, b = ab if ab else _ELLPS["bessel"]
+    return {
+        "a": a,
+        "b": b,
+        "lat_c": float(p.get("lat_0", "49.5")),
+        "lon_0": float(p.get("lon_0", repr(24.833333333333332))),
+        "alpha_c": float(p.get("alpha", repr(30.288139752777778))),
+        "lat_p": float(p.get("lat_ts", "78.5")),
+        "k": float(p.get("k_0", p.get("k", "0.9999"))),
+    }
+
+
+def _lcc_ell_params(p: dict) -> dict:
+    a, b = _ellipsoid_ab(p)
+    return {**_lcc_params(p), "a": a, "b": b,
+            "k0": float(p.get("k_0", p.get("k", "1")))}
+
+
+def _stere_ell_polar_params(p: dict) -> dict:
+    a, b = _ellipsoid_ab(p)
+    lat0 = float(p.get("lat_0", "90"))
+    return {
+        "lat_ts": float(p.get("lat_ts", "90")),
+        "a": a,
+        "b": b,
+        "lon_0": float(p.get("lon_0", "0")),
+        "north": lat0 > 0,
+        # +k/+k_0 only matters without a true-scale parallel (PROJ: an
+        # explicit +lat_ts takes precedence and k0 is ignored) — e.g.
+        # UPS, +proj=stere +lat_0=90 +k=0.994 +ellps=WGS84
+        "k0": float(p.get("k_0", p.get("k", "1"))),
+    }
+
+
+def _stere_ell_params(p: dict) -> dict:
+    # +lat_ts is polar-only in PROJ and deliberately ignored here
+    a, b = _ellipsoid_ab(p)
+    return {**_center_params(p), "a": a, "b": b,
+            "k0": float(p.get("k_0", p.get("k", "1")))}
+
+
+# Column adapters for families whose geo.py kernels are not one
+# (lon, lat, **kw) -> (x, y) function
+
+
+def _identity(u, v):
+    # longlat both ways: Columns and column names as Columns, and
+    # floats unchanged for the scalar inverse
+    return _c(u), _c(v)
+
+
+def _pair(fx, fy):
+    return lambda lon, lat, **kw: (fx(lon, lat, **kw), fy(lon, lat, **kw))
+
+
+def _eqc_fwd(lon, lat):
+    return eqc_x(lon), eqc_y(lat)
+
+
+def _eqc_inv(x, y):
+    return F.degrees(_c(x) / R_EARTH), F.degrees(_c(y) / R_EARTH)
+
+
+def _eqc_sql(lon, lat):
+    return f"(radians({lon}) * {R_EARTH!r})", f"(radians({lat}) * {R_EARTH!r})"
+
+
+def _merc_fwd(lon, lat, lat_ts, lon_0):
+    return merc_x(lon, lat_ts=lat_ts, lon_0=lon_0), merc_y(lat, lat_ts=lat_ts)
+
+
+# Scalar inverses: the functions/geo.py inverse formulas in float math,
+# on the default sphere R_EARTH unless the family takes a radius.
+
+
+def _wrap(lon: float) -> float:
+    return ((lon + 540.0) % 360.0) - 180.0
+
+
+def _clamp(v: float) -> float:
+    return max(-1.0, min(1.0, v))
+
+
+def _auth_phi(beta: float, cst: dict) -> float:
+    """Authalic latitude (radians) → geodetic degrees (Snyder 3-18)."""
+    return math.degrees(
+        beta + cst["c2"] * math.sin(2 * beta)
+        + cst["c4"] * math.sin(4 * beta)
+        + cst["c6"] * math.sin(6 * beta))
+
+
+def _phi_from_t(t: float, e: float) -> float:
+    """Geodetic latitude (radians) from the conformal t (Snyder 7-9,
+    eight fixed-point passes like the Column kernels)."""
+    phi = math.pi / 2.0 - 2.0 * math.atan(t)
+    for _ in range(8):
+        phi = math.pi / 2.0 - 2.0 * math.atan(
+            t * ((1.0 - e * math.sin(phi))
+                 / (1.0 + e * math.sin(phi))) ** (e / 2.0))
+    return phi
+
+
+def _azimuthal_scalar(lat_0, lon_0, angle, center=None):
+    """Spherical oblique azimuthal inverse (Snyder 20-14/20-15) given the
+    angular distance ``angle(rho)`` of each family; ``center`` is what
+    rho = 0 maps to."""
+    s1, c1 = math.sin(math.radians(lat_0)), math.cos(math.radians(lat_0))
+    center = center or (lon_0, lat_0)
+
+    def inv(x, y):
+        rho = math.hypot(x, y)
+        if rho == 0.0:
+            return center
+        cc = angle(rho)
+        lat = math.degrees(math.asin(_clamp(
+            math.cos(cc) * s1 + y * math.sin(cc) * c1 / rho)))
+        lon = lon_0 + math.degrees(math.atan2(
+            x * math.sin(cc),
+            rho * c1 * math.cos(cc) - y * s1 * math.sin(cc)))
+        return _wrap(lon), lat
+
+    return inv
+
+
+def _eqc_scalar():
+    return lambda x, y: (math.degrees(x / R_EARTH),
+                         math.degrees(y / R_EARTH))
+
+
+def _stere_scalar(lat_ts, lon_0, north):
+    sign = 1.0 if north else -1.0
+    k0 = (1.0 + math.sin(math.radians(abs(lat_ts)))) / 2.0
+
+    def inv(x, y):
+        rho = math.hypot(x, y)
+        lat_e = math.pi / 2 - 2.0 * math.atan(rho / (2.0 * R_EARTH * k0))
+        lon = math.degrees(math.atan2(x, -y * sign)) + lon_0
+        return _wrap(lon), math.degrees(lat_e) * sign
+
+    return inv
+
+
+def _stere_oblique_scalar(lat_0, lon_0, k0):
+    return _azimuthal_scalar(
+        lat_0, lon_0, lambda rho: 2.0 * math.atan(rho / (2.0 * R_EARTH * k0)))
+
+
+def _aeqd_scalar(lat_0, lon_0):
+    return _azimuthal_scalar(lat_0, lon_0, lambda rho: rho / R_EARTH)
+
+
+def _gnom_scalar(lat_0, lon_0):
+    return _azimuthal_scalar(lat_0, lon_0,
+                             lambda rho: math.atan(rho / R_EARTH))
+
+
+def _laea_scalar(lat_0, lon_0, radius):
+    return _azimuthal_scalar(
+        lat_0, lon_0,
+        lambda rho: 2.0 * math.asin(_clamp(rho / (2.0 * radius))),
+        # laea's center latitude has always round-tripped through
+        # radians, which can move lat_0 by one ulp
+        center=(lon_0, math.degrees(math.radians(lat_0))))
+
+
+def _ortho_scalar(lat_0, lon_0):
+    s1 = math.sin(math.radians(lat_0))
+    c1 = math.cos(math.radians(lat_0))
+
+    def inv(x, y):
+        rho = math.hypot(x, y)
+        if rho > R_EARTH:
+            return None
+        if rho == 0.0:
+            return lon_0, lat_0
+        sin_c = rho / R_EARTH
+        cos_c = math.sqrt(max(0.0, 1.0 - sin_c * sin_c))
+        lat = math.degrees(math.asin(
+            _clamp(cos_c * s1 + y * sin_c * c1 / rho)))
+        lon = lon_0 + math.degrees(math.atan2(
+            x * sin_c, rho * cos_c * c1 - y * sin_c * s1
+        ))
+        return _wrap(lon), lat
+
+    return inv
+
+
+def _merc_scalar(lat_ts, lon_0):
+    rk = R_EARTH * math.cos(math.radians(lat_ts))
+    return lambda x, y: (
+        _wrap(math.degrees(x / rk) + lon_0),
+        90.0 - 2.0 * math.degrees(math.atan(math.exp(-y / rk))),
+    )
+
+
+def _lcc_scalar(lat_0, lat_1, lat_2, lon_0):
+    n, rf, rho0 = lcc_constants(lat_0, lat_1, lat_2, R_EARTH)
+    sgn = 1.0 if n >= 0 else -1.0
+
+    def inv(x, y):
+        xs, ys = x * sgn, (rho0 - y) * sgn
+        rho = sgn * math.hypot(xs, ys)
+        if rho == 0.0:
+            return None
+        lat = 2.0 * math.degrees(math.atan((rf / rho) ** (1.0 / n))) - 90.0
+        lon = math.degrees(math.atan2(xs, ys)) / n + lon_0
+        return _wrap(lon), lat
+
+    return inv
+
+
+def _sinu_scalar(lon_0):
+    def inv(x, y):
+        latr = y / R_EARTH
+        c = math.cos(latr)
+        if c == 0.0:
+            return None
+        lon = lon_0 + math.degrees(x / (R_EARTH * c))
+        return _wrap(lon), math.degrees(latr)
+
+    return inv
+
+
+def _cea_scalar(lat_ts, lon_0):
+    k0 = math.cos(math.radians(lat_ts))
+
+    def inv(x, y):
+        lat = math.degrees(math.asin(_clamp(y * k0 / R_EARTH)))
+        lon = lon_0 + math.degrees(x / (R_EARTH * k0))
+        return _wrap(lon), lat
+
+    return inv
+
+
+def _cea_ell_scalar(lat_ts, a, b, lon_0):
+    cst = authalic_constants(a, b)
+    phits = math.radians(lat_ts)
+    k0e = math.cos(phits) / math.sqrt(1.0 - cst["es"] * math.sin(phits) ** 2)
+
+    def inv(x, y):
+        beta = math.asin(_clamp(y * 2.0 * k0e / (a * cst["qp"])))
+        lon = lon_0 + math.degrees(x / (a * k0e))
+        return _wrap(lon), _auth_phi(beta, cst)
+
+    return inv
+
+
+def _laea_ell_polar_scalar(a, b, lon_0, north):
+    cst = authalic_constants(a, b)
+
+    def inv(x, y):
+        rho2 = x * x + y * y
+        q = (cst["qp"] - rho2 / a ** 2 if north
+             else rho2 / a ** 2 - cst["qp"])
+        beta = math.asin(_clamp(q / cst["qp"]))
+        lam = math.atan2(x, -y) if north else math.atan2(x, y)
+        return _wrap(lon_0 + math.degrees(lam)), _auth_phi(beta, cst)
+
+    return inv
+
+
+def _laea_ell_oblique_scalar(lat_0, a, b, lon_0):
+    cst = laea_ell_oblique_constants(lat_0, a, b)
+
+    def inv(x, y):
+        xs = x / cst["d"]
+        ys = cst["d"] * y
+        rho = math.hypot(xs, ys)
+        if rho == 0.0:
+            return lon_0, _auth_phi(math.asin(cst["sb1"]), cst)
+        ce = 2.0 * math.asin(_clamp(rho / (2.0 * cst["rq"])))
+        beta = math.asin(_clamp(
+            math.cos(ce) * cst["sb1"] + ys * math.sin(ce) * cst["cb1"] / rho))
+        lam = math.atan2(
+            xs * math.sin(ce),
+            rho * cst["cb1"] * math.cos(ce) - ys * cst["sb1"] * math.sin(ce))
+        return _wrap(lon_0 + math.degrees(lam)), _auth_phi(beta, cst)
+
+    return inv
+
+
+def _lcc_ell_scalar(lat_0, lat_1, lat_2, a, b, lon_0, k0):
+    cst = lcc_ell_constants(lat_0, lat_1, lat_2, a, b, k0)
+    n_ = cst["n"]
+    sgn = 1.0 if n_ >= 0 else -1.0
+
+    def inv(x, y):
+        xs = sgn * x
+        ys = sgn * (cst["rho0"] - y)
+        rho = math.hypot(xs, ys)
+        phi = _phi_from_t((sgn * rho / cst["af"]) ** (1.0 / n_), cst["e"])
+        lon = lon_0 + math.degrees(sgn * math.atan2(xs, ys) / n_)
+        return _wrap(lon), math.degrees(phi)
+
+    return inv
+
+
+def _merc_ell_scalar(a, b, lat_ts, lon_0, k):
+    cst = merc_ell_constants(lat_ts, a, b, k)
+    ak = cst["ak"]
+
+    def inv(x, y):
+        phi = _phi_from_t(math.exp(-y / ak), cst["e"])
+        return _wrap(lon_0 + math.degrees(x / ak)), math.degrees(phi)
+
+    return inv
+
+
+def _krovak_scalar(a, b, lat_c, lon_0, alpha_c, lat_p, k):
+    cst = krovak_constants(a, b, lat_c, lon_0, alpha_c, lat_p, k)
+
+    def inv(x, y):
+        X, Y = -y, -x  # southing, westing (PROJ default axes)
+        rp = math.hypot(X, Y)
+        D = math.atan2(Y, X) / cst["n"]
+        T = 2.0 * (math.atan(
+            (cst["r0"] / rp) ** (1.0 / cst["n"]) * cst["tanp"]
+        ) - math.pi / 4.0)
+        U = math.asin(cst["cosa"] * math.sin(T)
+                      - cst["sina"] * math.cos(T) * math.cos(D))
+        V = math.asin(math.cos(T) * math.sin(D) / math.cos(U))
+        lon = cst["lon_0"] - math.degrees(V / cst["B"])
+        base = (cst["t0"] ** (-1.0 / cst["B"])
+                * math.tan(U / 2.0 + math.pi / 4.0) ** (1.0 / cst["B"]))
+        e_ = cst["e"]
+        phi = U
+        for _ in range(8):
+            phi = 2.0 * (math.atan(
+                base * ((1.0 + e_ * math.sin(phi))
+                        / (1.0 - e_ * math.sin(phi))) ** (e_ / 2.0)
+            ) - math.pi / 4.0)
+        return _wrap(lon), math.degrees(phi)
+
+    return inv
+
+
+def _stere_ell_scalar(lat_0, lon_0, a, b, k0):
+    e, sinx1, cosx1, akm1, _es = stere_ell_constants(lat_0, a, b, k0)
+
+    def inv(x, y):
+        xs, ys = x / a, y / a
+        rho = math.hypot(xs, ys)
+        cc = 2.0 * math.atan2(rho * cosx1, akm1)
+        if rho == 0.0:
+            chi = math.asin(_clamp(sinx1))
+            lam = 0.0
+        else:
+            chi = math.asin(_clamp(
+                math.cos(cc) * sinx1 + ys * math.sin(cc) * cosx1 / rho))
+            lam = math.atan2(
+                xs * math.sin(cc),
+                rho * cosx1 * math.cos(cc) - ys * sinx1 * math.sin(cc))
+        tp = math.tan(math.pi / 4.0 + chi / 2.0)
+        phi = chi
+        for _ in range(8):
+            es_ = e * math.sin(phi)
+            phi = 2.0 * math.atan(
+                tp * ((1.0 + es_) / (1.0 - es_)) ** (e / 2.0)
+            ) - math.pi / 2.0
+        return _wrap(lon_0 + math.degrees(lam)), math.degrees(phi)
+
+    return inv
+
+
+def _stere_ell_polar_scalar(lat_ts, a, b, lon_0, north, k0):
+    e, fk = stere_ell_polar_constants(lat_ts, a, b, k0)
+    sgn = 1.0 if north else -1.0
+
+    def inv(x, y):
+        xs, ys = x, -sgn * y
+        phi = _phi_from_t(math.hypot(xs, ys) / (a * fk), e)
+        lon = lon_0 + sgn * math.degrees(math.atan2(xs, ys))
+        return _wrap(lon), sgn * math.degrees(phi)
+
+    return inv
+
+
+def _omerc_scalar(frame, cross_track):
+    e1, e2, e3 = frame
+    ct_merc = cross_track == "mercator"
+
+    def inv(x, y):
+        u, t = x / R_EARTH, y / R_EARTH
+        cu, su = math.cos(u), math.sin(u)
+        if ct_merc:
+            e = math.exp(t)
+            den = e + 1.0 / e
+            cv, sv = 2.0 / den, (e - 1.0 / e) / den
+        else:
+            cv, sv = math.cos(t), math.sin(t)
+        px = cv * (cu * e1[0] + su * e2[0]) + sv * e3[0]
+        py = cv * (cu * e1[1] + su * e2[1]) + sv * e3[1]
+        pz = cv * (cu * e1[2] + su * e2[2]) + sv * e3[2]
+        lon = math.degrees(math.atan2(py, px))
+        lat = math.degrees(math.asin(_clamp(pz)))
+        return _wrap(lon), lat
+
+    return inv
+
+
+def _aea_scalar(lat_1, lat_2, lat_0, lon_0):
+    n, c, rho0 = aea_constants(lat_1, lat_2, lat_0, R_EARTH)
+    sgn = 1.0 if n >= 0 else -1.0
+
+    def inv(x, y):
+        xs, ys = x * sgn, (rho0 - y) * sgn
+        rho = sgn * math.hypot(xs, ys)
+        lat = math.degrees(math.asin(_clamp(
+            (c - (rho * n / R_EARTH) ** 2) / (2.0 * n))))
+        lon = lon_0 + math.degrees(math.atan2(xs, ys)) / n
+        return _wrap(lon), lat
+
+    return inv
+
+
+def _eqdc_scalar(lat_1, lat_2, lat_0, lon_0):
+    n, g, rho0 = eqdc_constants(lat_1, lat_2, lat_0, R_EARTH)
+    sgn = 1.0 if n >= 0 else -1.0
+
+    def inv(x, y):
+        xs, ys = x * sgn, (rho0 - y) * sgn
+        rho = sgn * math.hypot(xs, ys)
+        lat = math.degrees(g - rho / R_EARTH)
+        lon = lon_0 + math.degrees(math.atan2(xs, ys)) / n
+        return _wrap(lon), lat
+
+    return inv
+
+
+def _moll_scalar(lon_0):
+    def inv(x, y):
+        s = y / (_MOLL_CY * R_EARTH)
+        if abs(s) > 1.0:
+            return None
+        theta = math.asin(s)
+        lat = math.degrees(math.asin(_clamp(
+            (2.0 * theta + math.sin(2.0 * theta)) / math.pi)))
+        ct = math.cos(theta)
+        if ct == 0.0:
+            return lon_0, lat
+        lon = lon_0 + math.degrees(x / (_MOLL_CX * R_EARTH * ct))
+        return _wrap(lon), lat
+
+    return inv
+
+
+def _robin_scalar(lon_0):
+    def inv(x, y):
+        v = min(abs(y) / (_ROBIN_CY * R_EARTH), 1.0)
+        i = min(sum(1 for e in _ROBIN_Y if e <= v) - 1, 17)
+        fr = (v - _ROBIN_Y[i]) / (_ROBIN_Y[i + 1] - _ROBIN_Y[i])
+        lat = 5.0 * (i + fr) * (1.0 if y >= 0 else -1.0)
+        bx = _ROBIN_X[i] + (_ROBIN_X[i + 1] - _ROBIN_X[i]) * fr
+        lon = lon_0 + math.degrees(x / (_ROBIN_CX * R_EARTH * bx))
+        return _wrap(lon), lat
+
+    return inv
+
+
+def _tmerc_scalar(lat_0, lon_0, k, x_0, y_0, radius):
+    rk = radius * k
+    lat0r = math.radians(lat_0)
+
+    def inv(x, y):
+        xp = (x - x_0) / rk
+        d = (y - y_0) / rk + lat0r
+        lat = math.degrees(math.asin(math.sin(d) / math.cosh(xp)))
+        lon = lon_0 + math.degrees(math.atan2(math.sinh(xp), math.cos(d)))
+        return _wrap(lon), lat
+
+    return inv
+
+
+def _tmerc_ell_scalar(lat_0, lon_0, a, b, k, x_0, y_0):
+    cst = tmerc_ell_constants(a, b, lat_0)
+    es, ep2, e1 = cst["es"], cst["ep2"], cst["e1"]
+
+    def inv(x, y):
+        m = cst["M0"] + (y - y_0) / k
+        mu = m / (a * cst["m0c"])
+        phi1 = (mu
+                + (3 * e1 / 2 - 27 * e1 ** 3 / 32) * math.sin(2 * mu)
+                + (21 * e1 ** 2 / 16 - 55 * e1 ** 4 / 32) * math.sin(4 * mu)
+                + (151 * e1 ** 3 / 96) * math.sin(6 * mu)
+                + (1097 * e1 ** 4 / 512) * math.sin(8 * mu))
+        s1, c1, t1 = math.sin(phi1), math.cos(phi1), math.tan(phi1)
+        cc1, tt1 = ep2 * c1 * c1, t1 * t1
+        n1 = a / math.sqrt(1 - es * s1 * s1)
+        r1 = a * (1 - es) / (1 - es * s1 * s1) ** 1.5
+        d = (x - x_0) / (n1 * k)
+        d2 = d * d
+        lat = math.degrees(phi1 - (n1 * t1 / r1) * (d2 / 2.0) * (
+            1.0 - d2 / 12.0 * ((5 + 3 * tt1 + 10 * cc1 - 4 * cc1 * cc1
+                                - 9 * ep2)
+                               - d2 / 30.0 * (61 + 90 * tt1 + 298 * cc1
+                                              + 45 * tt1 * tt1 - 252 * ep2
+                                              - 3 * cc1 * cc1))))
+        lon = lon_0 + math.degrees(d * (
+            1.0 - d2 / 6.0 * ((1 + 2 * tt1 + cc1)
+                              - d2 / 20.0 * (5 - 2 * cc1 + 28 * tt1
+                                             - 3 * cc1 * cc1 + 8 * ep2
+                                             + 24 * tt1 * tt1))) / c1)
+        return _wrap(lon), lat
+
+    return inv
+
+
+def _geos_scalar(h, lon_0, sweep, radius):
+    rg = 1.0 + h / radius
+
+    def inv(x, y):
+        if sweep == "x":
+            vz = math.tan(y / h)
+            vy = math.tan(x / h) * math.hypot(1.0, vz)
+        else:
+            vy = math.tan(x / h)
+            vz = math.tan(y / h) * math.hypot(1.0, vy)
+        a = vy * vy + vz * vz + 1.0
+        b = -2.0 * rg
+        det = b * b - 4.0 * a * (rg * rg - 1.0)
+        if det < 0.0:
+            return None
+        k = (-b - math.sqrt(det)) / (2.0 * a)
+        wx, wy, wz = rg - k, vy * k, vz * k
+        lam = math.atan2(wy, wx)
+        lon = _wrap(math.degrees(lam) + lon_0)
+        return lon, math.degrees(math.atan(wz * math.cos(lam) / wx))
+
+    return inv
+
+
+def _geos_ell_scalar(h, a, b, lon_0, sweep):
+    rp, _rp2, rpi2, rg, rg1, cc = geos_ell_constants(h, a, b)
+
+    def inv(x, y):
+        xs, ys = x / (a * rg1), y / (a * rg1)
+        if sweep == "x":
+            vz = math.tan(ys)
+            vy = math.tan(xs) * math.hypot(1.0, vz)
+        else:
+            vy = math.tan(xs)
+            vz = math.tan(ys) * math.hypot(1.0, vy)
+        az = vz / rp
+        aa = vy * vy + az * az + 1.0
+        det = 4.0 * rg * rg - 4.0 * aa * cc
+        if det < 0.0:
+            return None
+        k = (2.0 * rg - math.sqrt(det)) / (2.0 * aa)
+        wx, wy, wz = rg - k, vy * k, vz * k
+        lam = math.atan2(wy, wx)
+        phi = math.atan(wz * math.cos(lam) / wx)
+        lon = _wrap(math.degrees(lam) + lon_0)
+        return lon, math.degrees(math.atan(rpi2 * math.tan(phi)))
+
+    return inv
+
+
+_FAMILIES = {
+    # key: _Family(params, fwd, inv, sql, scalar, sphere)
+    "longlat": _Family(
+        _no_params, _identity, _identity, None, lambda: _identity, "kernel"),
+    "eqc": _Family(
+        _no_params, _eqc_fwd, _eqc_inv, _eqc_sql, _eqc_scalar, "scale"),
+    "stere": _Family(
+        _stere_params, _pair(stere_polar_x, stere_polar_y),
+        stere_polar_inverse, None, _stere_scalar, "scale"),
+    "stere_oblique": _Family(
+        _stere_oblique_params, stere_oblique_xy, stere_oblique_inverse,
+        stere_oblique_sql, _stere_oblique_scalar, "scale"),
+    "stere_ell": _Family(
+        _stere_ell_params, stere_ell_xy, stere_ell_inverse, stere_ell_sql,
+        _stere_ell_scalar, None),
+    "stere_ell_polar": _Family(
+        _stere_ell_polar_params, stere_ell_polar_xy, stere_ell_polar_inverse,
+        stere_ell_polar_sql, _stere_ell_polar_scalar, None),
+    "aeqd": _Family(
+        _center_params, aeqd_xy, aeqd_inverse, None, _aeqd_scalar, "scale"),
+    "gnom": _Family(
+        _center_params, gnom_xy, gnom_inverse, None, _gnom_scalar, "scale"),
+    "ortho": _Family(
+        _center_params, ortho_xy, ortho_inverse, None, _ortho_scalar, "scale"),
+    "laea": _Family(
+        _laea_params, _pair(laea_x, laea_y), laea_inverse, laea_sql,
+        _laea_scalar, "kernel"),
+    "laea_ell_polar": _Family(
+        _laea_ell_polar_params, laea_ell_polar_xy, laea_ell_polar_inverse,
+        laea_ell_polar_sql, _laea_ell_polar_scalar, None),
+    "laea_ell_oblique": _Family(
+        _laea_ell_oblique_params, laea_ell_oblique_xy,
+        laea_ell_oblique_inverse, laea_ell_oblique_sql,
+        _laea_ell_oblique_scalar, None),
+    "merc": _Family(
+        _lat_ts_params, _merc_fwd, merc_inverse, merc_sql, _merc_scalar,
+        "scale"),
+    "merc_ell": _Family(
+        _merc_ell_params, merc_ell_xy, merc_ell_inverse, merc_ell_sql,
+        _merc_ell_scalar, None),
+    "lcc": _Family(
+        _lcc_params, _pair(lcc_x, lcc_y), lcc_inverse, None, _lcc_scalar,
+        "scale"),
+    "lcc_ell": _Family(
+        _lcc_ell_params, lcc_ell_xy, lcc_ell_inverse, lcc_ell_sql,
+        _lcc_ell_scalar, None),
+    "cea": _Family(
+        _lat_ts_params, cea_xy, cea_inverse, None, _cea_scalar, "scale"),
+    "cea_ell": _Family(
+        _cea_ell_params, cea_ell_xy, cea_ell_inverse, cea_ell_sql,
+        _cea_ell_scalar, None),
+    "sinu": _Family(
+        _lon0_params, sinu_xy, sinu_inverse, None, _sinu_scalar, "scale"),
+    "moll": _Family(
+        _lon0_params, moll_xy, moll_inverse, None, _moll_scalar, "scale"),
+    "robin": _Family(
+        _lon0_params, robin_xy, robin_inverse, None, _robin_scalar, "scale"),
+    "aea": _Family(
+        _conic_params, aea_xy, aea_inverse, None, _aea_scalar, "scale"),
+    "eqdc": _Family(
+        _conic_params, eqdc_xy, eqdc_inverse, None, _eqdc_scalar, "scale"),
+    "tmerc": _Family(
+        _tmerc_params, tmerc_xy, tmerc_inverse, tmerc_sql, _tmerc_scalar,
+        "kernel"),
+    "tmerc_ell": _Family(
+        _tmerc_ell_params, tmerc_ell_xy, tmerc_ell_inverse, tmerc_ell_sql,
+        _tmerc_ell_scalar, None),
+    "krovak": _Family(
+        _krovak_params, krovak_xy, krovak_inverse, krovak_sql, _krovak_scalar,
+        None),
+    "omerc": _Family(
+        _omerc_params, omerc_xy, omerc_inverse, None, _omerc_scalar, None),
+    "geos": _Family(
+        _geos_params, geos_xy, geos_inverse, None, _geos_scalar, "kernel"),
+    "geos_ell": _Family(
+        _geos_ell_params, geos_ell_xy, geos_ell_inverse, None,
+        _geos_ell_scalar, None),
+}
+
+
+def tmerc_crs_params(crs: str) -> dict:
+    """+proj=tmerc / +proj=utm → kernel keywords: the ``params`` of the
+    ``tmerc`` row of the family table (``_FAMILIES``)."""
+    return _FAMILIES["tmerc"].params(_params(crs))
+
+
+def tmerc_ell_crs_params(crs: str) -> dict:
+    """+proj=tmerc/+proj=utm with a declared ellipsoid → the ``params``
+    of the ``tmerc_ell`` row of ``_FAMILIES`` (Redfearn series)."""
+    return _FAMILIES["tmerc_ell"].params(_params(crs))
+
+
+def cea_ell_crs_params(crs: str) -> dict:
+    """The ``params`` of the ``cea_ell`` row of ``_FAMILIES``."""
+    return _FAMILIES["cea_ell"].params(_params(crs))
+
+
+def laea_ell_oblique_crs_params(crs: str) -> dict:
+    """The ``params`` of the ``laea_ell_oblique`` row of ``_FAMILIES``."""
+    return _FAMILIES["laea_ell_oblique"].params(_params(crs))
+
+
+def laea_ell_polar_crs_params(crs: str) -> dict:
+    """The ``params`` of the ``laea_ell_polar`` row of ``_FAMILIES``."""
+    return _FAMILIES["laea_ell_polar"].params(_params(crs))
+
+
+def merc_ell_crs_params(crs: str) -> dict:
+    """The ``params`` of the ``merc_ell`` row of ``_FAMILIES``."""
+    return _FAMILIES["merc_ell"].params(_params(crs))
+
+
+def krovak_crs_params(crs: str) -> dict:
+    """+proj=krovak (EPSG method 9819 — S-JTSK) → the ``params`` of the
+    ``krovak`` row of ``_FAMILIES`` (PROJ's defaults, Bessel 1841)."""
+    return _FAMILIES["krovak"].params(_params(crs))
+
+
+def lcc_ell_crs_params(crs: str) -> dict:
+    """The ``params`` of the ``lcc_ell`` row of ``_FAMILIES``."""
+    return _FAMILIES["lcc_ell"].params(_params(crs))
+
+
+def stere_ell_polar_crs_params(crs: str) -> dict:
+    """The ``params`` of the ``stere_ell_polar`` row of ``_FAMILIES``."""
+    return _FAMILIES["stere_ell_polar"].params(_params(crs))
+
+
+def stere_ell_crs_params(crs: str) -> dict:
+    """+proj=stere +a=.. +b=.. oblique → the ``params`` of the
+    ``stere_ell`` row of ``_FAMILIES``."""
+    return _FAMILIES["stere_ell"].params(_params(crs))
+
+
+def conic_crs_params(crs: str) -> dict:
+    """+proj=aea / +proj=eqdc → the ``params`` shared by their rows of
+    ``_FAMILIES``."""
+    return _FAMILIES["aea"].params(_params(crs))
+
+
+class _Frame(NamedTuple):
+    """The generic frame around a family's centered math, read once per
+    CRS: false easting/northing, custom-sphere scale, prime meridian,
+    unit, longitude wrap, axis order and the +geoc e²."""
+    x0: float
+    y0: float
+    scale: float
+    pm: float
+    to_m: float
+    lon_wrap: float | None
+    axis: str
+    geoc_es: float | None
+
+    def is_identity(self, inverse: bool) -> bool:
+        """True when the frame changes nothing, so the centered builder
+        is returned bare and plans keep no identity arithmetic.
+        +lon_wrap re-centers inverse output only."""
+        return not (self.x0 or self.y0 or self.scale != 1.0
+                    or self.pm != 0.0 or self.to_m != 1.0
+                    or self.axis != "enu" or self.geoc_es is not None
+                    or (inverse and self.lon_wrap is not None))
+
+
+def _resolve(crs: str):
+    """(family row, token dict, frame) of ``crs``; frame guards raise
+    before any family parameter is parsed."""
+    fam, p = _family(crs), _params(crs)
+    frame = _Frame(*_xy_offsets(fam, p), _sphere_scale(fam, p),
+                   *_frame_params(fam, p))
+    return _FAMILIES[fam], p, frame
+
+
 def forward(crs: str):
     """(lon, lat) → (x, y) column builder for an analytic CRS.
     Honors +x_0/+y_0 (false easting/northing) for every family and
     custom sphere radii (+R/+a) for the linear spherical families."""
-    fam, p = _family(crs), _params(crs)
-    x0, y0 = _xy_offsets(fam, p)
-    s = _sphere_scale(fam, p)
-    pm, to_m, _, ax, gc = _frame_params(fam, p)
-    if (x0 or y0 or s != 1.0 or pm != 0.0 or to_m != 1.0
-            or ax != "enu" or gc is not None):
-        fwd = _forward_centered(crs)
+    row, p, fr = _resolve(crs)
+    kw = row.params(p)
 
-        def _shifted(lon, lat):
-            if pm != 0.0:
-                lon = (F.col(lon) if isinstance(lon, str) else lon
-                       ) - F.lit(pm)
-            if gc is not None:
-                # +geoc: input latitude is geocentric; the kernels
-                # take geodetic — PROJ pj_fwd: φ ← atan(tanφ/(1−e²))
-                lat = F.degrees(F.atan(
-                    F.tan(F.radians(
-                        F.col(lat) if isinstance(lat, str) else lat
-                    )) / F.lit(1.0 - gc)))
-            x, y = fwd(lon, lat)
-            if s != 1.0:
-                x, y = x * F.lit(s), y * F.lit(s)
-            x, y = x + F.lit(float(x0)), y + F.lit(float(y0))
-            if to_m != 1.0:
-                x, y = x / F.lit(to_m), y / F.lit(to_m)
-            if ax != "enu":
-                x, y = _axis_fwd(ax, x, y, lambda v: -v)
-            return x, y
+    def centered(lon, lat):
+        return row.fwd(lon, lat, **kw)
 
-        return _shifted
-    return _forward_centered(crs)
+    if fr.is_identity(inverse=False):
+        return centered
 
+    def _shifted(lon, lat):
+        if fr.pm != 0.0:
+            lon = _c(lon) - F.lit(fr.pm)
+        if fr.geoc_es is not None:
+            # +geoc: input latitude is geocentric; the kernels
+            # take geodetic — PROJ pj_fwd: φ ← atan(tanφ/(1−e²))
+            lat = F.degrees(F.atan(
+                F.tan(F.radians(_c(lat))) / F.lit(1.0 - fr.geoc_es)))
+        x, y = centered(lon, lat)
+        if fr.scale != 1.0:
+            x, y = x * F.lit(fr.scale), y * F.lit(fr.scale)
+        x, y = x + F.lit(float(fr.x0)), y + F.lit(float(fr.y0))
+        if fr.to_m != 1.0:
+            x, y = x / F.lit(fr.to_m), y / F.lit(fr.to_m)
+        if fr.axis != "enu":
+            x, y = _axis_fwd(fr.axis, x, y, lambda v: -v)
+        return x, y
 
-def _forward_centered(crs: str):
-    fam, p = _family(crs), _params(crs)
-    if fam == "longlat":
-        return lambda lon, lat: (F.col(lon) if isinstance(lon, str) else lon,
-                                 F.col(lat) if isinstance(lat, str) else lat)
-    if fam == "eqc":
-        return lambda lon, lat: (eqc_x(lon), eqc_y(lat))
-    if fam == "stere":
-        lat0 = float(p.get("lat_0", "90"))
-        lat_ts = float(p.get("lat_ts", lat0))
-        lon_0 = float(p.get("lon_0", "0"))
-        north = lat0 > 0
-        return lambda lon, lat: (
-            stere_polar_x(lon, lat, lat_ts=lat_ts, lon_0=lon_0, north=north),
-            stere_polar_y(lon, lat, lat_ts=lat_ts, lon_0=lon_0, north=north),
-        )
-    if fam == "stere_oblique":
-        lat_0 = float(p.get("lat_0", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        k0 = float(p.get("k_0", p.get("k", "1")))
-        return lambda lon, lat: stere_oblique_xy(
-            lon, lat, lat_0=lat_0, lon_0=lon_0, k0=k0
-        )
-    if fam == "stere_ell":
-        kw = stere_ell_crs_params(crs)
-        return lambda lon, lat: stere_ell_xy(lon, lat, **kw)
-    if fam == "stere_ell_polar":
-        kw = stere_ell_polar_crs_params(crs)
-        return lambda lon, lat: stere_ell_polar_xy(lon, lat, **kw)
-    if fam == "aeqd":
-        lat_0 = float(p.get("lat_0", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda lon, lat: aeqd_xy(lon, lat, lat_0=lat_0, lon_0=lon_0)
-    if fam == "gnom":
-        lat_0 = float(p.get("lat_0", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda lon, lat: gnom_xy(lon, lat, lat_0=lat_0, lon_0=lon_0)
-    if fam == "laea":
-        lat0 = float(p.get("lat_0", "90"))
-        lon_0 = float(p.get("lon_0", "0"))
-        r = float(p.get("a", p.get("R", repr(R_EARTH))))  # EASE +a; GRIB +R
-        return lambda lon, lat: (
-            laea_x(lon, lat, lat_0=lat0, lon_0=lon_0, radius=r),
-            laea_y(lon, lat, lat_0=lat0, lon_0=lon_0, radius=r),
-        )
-    if fam == "merc":
-        lat_ts = float(p.get("lat_ts", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda lon, lat: (
-            merc_x(lon, lat_ts=lat_ts, lon_0=lon_0),
-            merc_y(lat, lat_ts=lat_ts),
-        )
-    if fam == "lcc":
-        lat0 = float(p.get("lat_0", "0"))
-        lat1 = float(p.get("lat_1", p.get("lat_0", "33")))
-        lat2 = float(p["lat_2"]) if "lat_2" in p else None
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda lon, lat: (
-            lcc_x(lon, lat, lat_0=lat0, lat_1=lat1, lat_2=lat2, lon_0=lon_0),
-            lcc_y(lon, lat, lat_0=lat0, lat_1=lat1, lat_2=lat2, lon_0=lon_0),
-        )
-    if fam == "sinu":
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda lon, lat: sinu_xy(lon, lat, lon_0=lon_0)
-    if fam == "cea":
-        lat_ts = float(p.get("lat_ts", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda lon, lat: cea_xy(lon, lat, lat_ts=lat_ts, lon_0=lon_0)
-    if fam == "cea_ell":
-        kw = cea_ell_crs_params(crs)
-        return lambda lon, lat: cea_ell_xy(lon, lat, **kw)
-    if fam == "lcc_ell":
-        kw = lcc_ell_crs_params(crs)
-        return lambda lon, lat: lcc_ell_xy(lon, lat, **kw)
-    if fam == "merc_ell":
-        kw = merc_ell_crs_params(crs)
-        return lambda lon, lat: merc_ell_xy(lon, lat, **kw)
-    if fam == "krovak":
-        kw = krovak_crs_params(crs)
-        return lambda lon, lat: krovak_xy(lon, lat, **kw)
-    if fam == "laea_ell_polar":
-        kw = laea_ell_polar_crs_params(crs)
-        return lambda lon, lat: laea_ell_polar_xy(lon, lat, **kw)
-    if fam == "laea_ell_oblique":
-        kw = laea_ell_oblique_crs_params(crs)
-        return lambda lon, lat: laea_ell_oblique_xy(lon, lat, **kw)
-    if fam == "ortho":
-        lat_0 = float(p.get("lat_0", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda lon, lat: ortho_xy(lon, lat, lat_0=lat_0, lon_0=lon_0)
-    if fam == "tmerc":
-        kw = tmerc_crs_params(crs)
-        return lambda lon, lat: tmerc_xy(lon, lat, **kw)
-    if fam == "tmerc_ell":
-        kw = tmerc_ell_crs_params(crs)
-        return lambda lon, lat: tmerc_ell_xy(lon, lat, **kw)
-    if fam == "aea":
-        kw = conic_crs_params(crs)
-        return lambda lon, lat: aea_xy(lon, lat, **kw)
-    if fam == "eqdc":
-        kw = conic_crs_params(crs)
-        return lambda lon, lat: eqdc_xy(lon, lat, **kw)
-    if fam == "moll":
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda lon, lat: moll_xy(lon, lat, lon_0=lon_0)
-    if fam == "robin":
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda lon, lat: robin_xy(lon, lat, lon_0=lon_0)
-    if fam == "omerc":
-        frame = omerc_frame(
-            float(p.get("lat_0", "0")), float(p.get("lonc", "0")),
-            float(p.get("alpha", "0")),
-        )
-        ct = "mercator" if p.get("ctrack") == "merc" else "equidistant"
-        return lambda lon, lat: omerc_xy(lon, lat, frame, cross_track=ct)
-    if fam == "geos_ell":
-        a, b = _ellipsoid_ab(p)
-        h = float(p.get("h", "35785831"))
-        lon_0 = float(p.get("lon_0", "0"))
-        sweep = p.get("sweep", "y")
-        return lambda lon, lat: geos_ell_xy(
-            lon, lat, h=h, a=a, b=b, lon_0=lon_0, sweep=sweep
-        )
-    # geos
-    h = float(p.get("h", "35785831"))
-    lon_0 = float(p.get("lon_0", "0"))
-    sweep = p.get("sweep", "y")
-    rad = _declared_sphere_radius(p)
-    return lambda lon, lat: geos_xy(lon, lat, h=h, lon_0=lon_0,
-                                    sweep=sweep, radius=rad)
+    return _shifted
 
 
 def inverse(crs: str):
     """(x, y) → (lon, lat) column builder for an analytic CRS.
     Honors +x_0/+y_0 (false easting/northing) for every family and
     custom sphere radii (+R/+a) for the linear spherical families."""
-    fam, p = _family(crs), _params(crs)
-    x0, y0 = _xy_offsets(fam, p)
-    s = _sphere_scale(fam, p)
-    pm, to_m, lon_wrap, ax, gc = _frame_params(fam, p)
-    if x0 or y0 or s != 1.0 or pm != 0.0 or to_m != 1.0 \
-            or lon_wrap is not None or ax != "enu" or gc is not None:
-        inv = _inverse_centered(crs)
+    row, p, fr = _resolve(crs)
+    kw = row.params(p)
 
-        def _shifted(x, y):
-            x = F.col(x) if isinstance(x, str) else x
-            y = F.col(y) if isinstance(y, str) else y
-            if ax != "enu":
-                x, y = _axis_inv(ax, x, y, lambda v: -v)
-            if to_m != 1.0:
-                x, y = x * F.lit(to_m), y * F.lit(to_m)
-            x = x - F.lit(float(x0))
-            y = y - F.lit(float(y0))
-            if s != 1.0:
-                x, y = x / F.lit(s), y / F.lit(s)
-            lon, lat = inv(x, y)
-            if pm != 0.0 or lon_wrap is not None:
-                lon = lon + F.lit(pm) if pm != 0.0 else lon
-                lo = F.lit((lon_wrap if lon_wrap is not None else 0.0)
-                           - 180.0)
-                lon = ((lon - lo) % F.lit(360.0) + F.lit(360.0)) \
-                    % F.lit(360.0) + lo
-            if gc is not None:
-                # +geoc: output latitude is geocentric — PROJ pj_inv:
-                # φ ← atan((1−e²)·tanφ)
-                lat = F.degrees(F.atan(
-                    F.lit(1.0 - gc) * F.tan(F.radians(lat))))
-            return lon, lat
+    def centered(x, y):
+        return row.inv(x, y, **kw)
 
-        return _shifted
-    return _inverse_centered(crs)
+    if fr.is_identity(inverse=True):
+        return centered
+
+    def _shifted(x, y):
+        x, y = _c(x), _c(y)
+        if fr.axis != "enu":
+            x, y = _axis_inv(fr.axis, x, y, lambda v: -v)
+        if fr.to_m != 1.0:
+            x, y = x * F.lit(fr.to_m), y * F.lit(fr.to_m)
+        x = x - F.lit(float(fr.x0))
+        y = y - F.lit(float(fr.y0))
+        if fr.scale != 1.0:
+            x, y = x / F.lit(fr.scale), y / F.lit(fr.scale)
+        lon, lat = centered(x, y)
+        if fr.pm != 0.0 or fr.lon_wrap is not None:
+            lon = lon + F.lit(fr.pm) if fr.pm != 0.0 else lon
+            lo = F.lit((fr.lon_wrap if fr.lon_wrap is not None else 0.0)
+                       - 180.0)
+            lon = ((lon - lo) % F.lit(360.0) + F.lit(360.0)) \
+                % F.lit(360.0) + lo
+        if fr.geoc_es is not None:
+            # +geoc: output latitude is geocentric — PROJ pj_inv:
+            # φ ← atan((1−e²)·tanφ)
+            lat = F.degrees(F.atan(
+                F.lit(1.0 - fr.geoc_es) * F.tan(F.radians(lat))))
+        return lon, lat
+
+    return _shifted
 
 
-def _inverse_centered(crs: str):
-    fam, p = _family(crs), _params(crs)
-    if fam == "longlat":
-        return lambda x, y: (F.col(x) if isinstance(x, str) else x,
-                             F.col(y) if isinstance(y, str) else y)
-    if fam == "eqc":
-        return lambda x, y: (
-            F.degrees((F.col(x) if isinstance(x, str) else x) / R_EARTH),
-            F.degrees((F.col(y) if isinstance(y, str) else y) / R_EARTH),
-        )
-    if fam == "stere":
-        lat0 = float(p.get("lat_0", "90"))
-        lat_ts = float(p.get("lat_ts", lat0))
-        lon_0 = float(p.get("lon_0", "0"))
-        north = lat0 > 0
-        return lambda x, y: stere_polar_inverse(
-            x, y, lat_ts=lat_ts, lon_0=lon_0, north=north
-        )
-    if fam == "stere_oblique":
-        lat_0 = float(p.get("lat_0", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        k0 = float(p.get("k_0", p.get("k", "1")))
-        return lambda x, y: stere_oblique_inverse(
-            x, y, lat_0=lat_0, lon_0=lon_0, k0=k0
-        )
-    if fam == "stere_ell":
-        kw = stere_ell_crs_params(crs)
-        return lambda x, y: stere_ell_inverse(x, y, **kw)
-    if fam == "stere_ell_polar":
-        kw = stere_ell_polar_crs_params(crs)
-        return lambda x, y: stere_ell_polar_inverse(x, y, **kw)
-    if fam == "aeqd":
-        lat_0 = float(p.get("lat_0", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda x, y: aeqd_inverse(x, y, lat_0=lat_0, lon_0=lon_0)
-    if fam == "gnom":
-        lat_0 = float(p.get("lat_0", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda x, y: gnom_inverse(x, y, lat_0=lat_0, lon_0=lon_0)
-    if fam == "laea":
-        lat0 = float(p.get("lat_0", "90"))
-        lon_0 = float(p.get("lon_0", "0"))
-        r = float(p.get("a", p.get("R", repr(R_EARTH))))
-        return lambda x, y: laea_inverse(
-            x, y, lat_0=lat0, lon_0=lon_0, radius=r
-        )
-    if fam == "merc":
-        lat_ts = float(p.get("lat_ts", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda x, y: merc_inverse(x, y, lat_ts=lat_ts, lon_0=lon_0)
-    if fam == "lcc":
-        lat0 = float(p.get("lat_0", "0"))
-        lat1 = float(p.get("lat_1", p.get("lat_0", "33")))
-        lat2 = float(p["lat_2"]) if "lat_2" in p else None
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda x, y: lcc_inverse(
-            x, y, lat_0=lat0, lat_1=lat1, lat_2=lat2, lon_0=lon_0
-        )
-    if fam == "sinu":
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda x, y: sinu_inverse(x, y, lon_0=lon_0)
-    if fam == "cea":
-        lat_ts = float(p.get("lat_ts", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda x, y: cea_inverse(x, y, lat_ts=lat_ts, lon_0=lon_0)
-    if fam == "cea_ell":
-        kw = cea_ell_crs_params(crs)
-        return lambda x, y: cea_ell_inverse(x, y, **kw)
-    if fam == "lcc_ell":
-        kw = lcc_ell_crs_params(crs)
-        return lambda x, y: lcc_ell_inverse(x, y, **kw)
-    if fam == "merc_ell":
-        kw = merc_ell_crs_params(crs)
-        return lambda x, y: merc_ell_inverse(x, y, **kw)
-    if fam == "krovak":
-        kw = krovak_crs_params(crs)
-        return lambda x, y: krovak_inverse(x, y, **kw)
-    if fam == "laea_ell_polar":
-        kw = laea_ell_polar_crs_params(crs)
-        return lambda x, y: laea_ell_polar_inverse(x, y, **kw)
-    if fam == "laea_ell_oblique":
-        kw = laea_ell_oblique_crs_params(crs)
-        return lambda x, y: laea_ell_oblique_inverse(x, y, **kw)
-    if fam == "ortho":
-        lat_0 = float(p.get("lat_0", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda x, y: ortho_inverse(x, y, lat_0=lat_0, lon_0=lon_0)
-    if fam == "tmerc":
-        kw = tmerc_crs_params(crs)
-        return lambda x, y: tmerc_inverse(x, y, **kw)
-    if fam == "tmerc_ell":
-        kw = tmerc_ell_crs_params(crs)
-        return lambda x, y: tmerc_ell_inverse(x, y, **kw)
-    if fam == "aea":
-        kw = conic_crs_params(crs)
-        return lambda x, y: aea_inverse(x, y, **kw)
-    if fam == "eqdc":
-        kw = conic_crs_params(crs)
-        return lambda x, y: eqdc_inverse(x, y, **kw)
-    if fam == "moll":
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda x, y: moll_inverse(x, y, lon_0=lon_0)
-    if fam == "robin":
-        lon_0 = float(p.get("lon_0", "0"))
-        return lambda x, y: robin_inverse(x, y, lon_0=lon_0)
-    if fam == "omerc":
-        frame = omerc_frame(
-            float(p.get("lat_0", "0")), float(p.get("lonc", "0")),
-            float(p.get("alpha", "0")),
-        )
-        ct = "mercator" if p.get("ctrack") == "merc" else "equidistant"
-        return lambda x, y: omerc_inverse(x, y, frame, cross_track=ct)
-    if fam == "geos_ell":
-        a, b = _ellipsoid_ab(p)
-        h = float(p.get("h", "35785831"))
-        lon_0 = float(p.get("lon_0", "0"))
-        sweep = p.get("sweep", "y")
-        return lambda x, y: geos_ell_inverse(
-            x, y, h=h, a=a, b=b, lon_0=lon_0, sweep=sweep
-        )
-    # geos
-    h = float(p.get("h", "35785831"))
-    lon_0 = float(p.get("lon_0", "0"))
-    sweep = p.get("sweep", "y")
-    rad = _declared_sphere_radius(p)
-    return lambda x, y: geos_inverse(x, y, h=h, lon_0=lon_0,
-                                     sweep=sweep, radius=rad)
+def forward_sql(crs: str):
+    """Engine-shared SQL forward emitter: ``f(lon_sql, lat_sql) ->
+    (x_sql, y_sql)`` built from the functions/geo.py ``*_sql`` twins
+    (pure sin/cos/pow/atan text — parses identically in Spark SQL and
+    DuckDB). Returns None for families whose ``_FAMILIES`` row has no
+    ``sql``; callers fall back to the Column builders. Used by the datum
+    pipeline to keep the shift+forward in ONE let_expr chain (a
+    Column-composed forward would re-substitute the shifted lon/lat
+    10+ times through CollapseProject)."""
+    row, p, fr = _resolve(crs)
+    if row.sql is None:
+        return None
+    kw = row.params(p)
+
+    def centered(lon, lat):
+        return row.sql(lon, lat, **kw)
+
+    if fr.is_identity(inverse=False):
+        return centered
+
+    def _shifted(lon, lat):
+        if fr.pm != 0.0:
+            lon = f"(({lon}) - {fr.pm!r})"
+        if fr.geoc_es is not None:
+            lat = (f"(degrees(atan(tan(radians({lat})) / "
+                   f"{1.0 - fr.geoc_es!r})))")
+        x, y = centered(lon, lat)
+        if fr.scale != 1.0:
+            x, y = f"({x} * {fr.scale!r})", f"({y} * {fr.scale!r})"
+        x, y = f"({x} + {fr.x0!r})", f"({y} + {fr.y0!r})"
+        if fr.to_m != 1.0:
+            x, y = f"({x} / {fr.to_m!r})", f"({y} / {fr.to_m!r})"
+        if fr.axis != "enu":
+            x, y = _axis_fwd(fr.axis, x, y, lambda v: f"(-({v}))")
+        return x, y
+
+    return _shifted
+
+
+def inverse_scalar(crs: str):
+    """Driver-side scalar twin of :func:`inverse` — (x, y) floats →
+    (lon, lat) floats — for plan-time geometry (boundary polygons,
+    overlap tests; tens of points). Mirrors functions/geo.py formulas
+    exactly; returns None for points outside the projection domain
+    (e.g. off-disc geos pixels). Honors +x_0/+y_0 and custom sphere
+    radii like the column twins."""
+    row, p, fr = _resolve(crs)
+    inv = row.scalar(**row.params(p))
+    if fr.is_identity(inverse=True):
+        return inv
+
+    def _shifted(x, y):
+        if fr.axis != "enu":
+            x, y = _axis_inv(fr.axis, x, y, lambda v: -v)
+        out = inv((x * fr.to_m - fr.x0) / fr.scale,
+                  (y * fr.to_m - fr.y0) / fr.scale)
+        if out is None or (fr.pm == 0.0 and fr.lon_wrap is None
+                           and fr.geoc_es is None):
+            return out
+        lon, lat = out
+        if fr.pm != 0.0 or fr.lon_wrap is not None:
+            lon += fr.pm
+            lo = (fr.lon_wrap if fr.lon_wrap is not None else 0.0) - 180.0
+            lon = ((lon - lo) % 360.0 + 360.0) % 360.0 + lo
+        if fr.geoc_es is not None:
+            lat = math.degrees(math.atan(
+                (1.0 - fr.geoc_es) * math.tan(math.radians(lat))))
+        return lon, lat
+
+    return _shifted
 
 
 def crs_datum_spec(crs: str):
@@ -1106,105 +1669,6 @@ def datum_specs_between(src_crs: str, dst_crs: str):
     return s, d
 
 
-def forward_sql(crs: str):
-    """Engine-shared SQL forward emitter: ``f(lon_sql, lat_sql) ->
-    (x_sql, y_sql)`` built from the functions/geo.py ``*_sql`` twins
-    (pure sin/cos/pow/atan text — parses identically in Spark SQL and
-    DuckDB). Returns None for families without a forward SQL twin;
-    callers fall back to the Column builders. Used by the datum
-    pipeline to keep the shift+forward in ONE let_expr chain (a
-    Column-composed forward would re-substitute the shifted lon/lat
-    10+ times through CollapseProject)."""
-    from pyresample_spark.functions import geo as G
-
-    fam, p = _family(crs), _params(crs)
-    x0, y0 = _xy_offsets(fam, p)
-    s = _sphere_scale(fam, p)
-    pm, to_m, _, ax, gc = _frame_params(fam, p)
-
-    def offset(fn):
-        if not (x0 or y0 or s != 1.0 or pm != 0.0 or to_m != 1.0
-                or ax != "enu" or gc is not None):
-            return fn
-
-        def _sh(lon, lat):
-            if pm != 0.0:
-                lon = f"(({lon}) - {pm!r})"
-            if gc is not None:
-                lat = (f"(degrees(atan(tan(radians({lat})) / "
-                       f"{1.0 - gc!r})))")
-            x, y = fn(lon, lat)
-            if s != 1.0:
-                x, y = f"({x} * {s!r})", f"({y} * {s!r})"
-            x, y = f"({x} + {x0!r})", f"({y} + {y0!r})"
-            if to_m != 1.0:
-                x, y = f"({x} / {to_m!r})", f"({y} / {to_m!r})"
-            if ax != "enu":
-                x, y = _axis_fwd(ax, x, y, lambda v: f"(-({v}))")
-            return x, y
-
-        return _sh
-
-    if fam == "eqc":
-        return offset(lambda lon, lat: (
-            f"(radians({lon}) * {R_EARTH!r})",
-            f"(radians({lat}) * {R_EARTH!r})",
-        ))
-    if fam == "stere_ell":
-        kw = stere_ell_crs_params(crs)
-        return offset(lambda lon, lat: G.stere_ell_sql(lon, lat, **kw))
-    if fam == "stere_ell_polar":
-        kw = stere_ell_polar_crs_params(crs)
-        return offset(lambda lon, lat: G.stere_ell_polar_sql(lon, lat, **kw))
-    if fam == "stere_oblique":
-        return offset(lambda lon, lat: G.stere_oblique_sql(
-            lon, lat, lat_0=float(p.get("lat_0", "0")),
-            lon_0=float(p.get("lon_0", "0")),
-            k0=float(p.get("k_0", p.get("k", "1"))),
-        ))
-    if fam == "tmerc":
-        # x0/y0 live inside kw (and _xy_offsets reports 0 for tmerc),
-        # so offset() here applies only pm/units/axis — previously
-        # these were silently dropped on the SQL twin (r17)
-        kw = tmerc_crs_params(crs)
-        return offset(lambda lon, lat: G.tmerc_sql(lon, lat, **kw))
-    if fam == "tmerc_ell":
-        kw = tmerc_ell_crs_params(crs)
-        return offset(lambda lon, lat: G.tmerc_ell_sql(lon, lat, **kw))
-    if fam == "cea_ell":
-        kw = cea_ell_crs_params(crs)
-        return offset(lambda lon, lat: G.cea_ell_sql(lon, lat, **kw))
-    if fam == "lcc_ell":
-        kw = lcc_ell_crs_params(crs)
-        return offset(lambda lon, lat: G.lcc_ell_sql(lon, lat, **kw))
-    if fam == "merc_ell":
-        kw = merc_ell_crs_params(crs)
-        return offset(lambda lon, lat: G.merc_ell_sql(lon, lat, **kw))
-    if fam == "krovak":
-        kw = krovak_crs_params(crs)
-        return offset(lambda lon, lat: G.krovak_sql(lon, lat, **kw))
-    if fam == "laea_ell_polar":
-        kw = laea_ell_polar_crs_params(crs)
-        return offset(
-            lambda lon, lat: G.laea_ell_polar_sql(lon, lat, **kw))
-    if fam == "laea_ell_oblique":
-        kw = laea_ell_oblique_crs_params(crs)
-        return offset(
-            lambda lon, lat: G.laea_ell_oblique_sql(lon, lat, **kw))
-    if fam == "merc":
-        return offset(lambda lon, lat: G.merc_sql(
-            lon, lat, lat_ts=float(p.get("lat_ts", "0")),
-            lon_0=float(p.get("lon_0", "0")),
-        ))
-    if fam == "laea":
-        return offset(lambda lon, lat: G.laea_sql(
-            lon, lat, lat_0=float(p.get("lat_0", "90")),
-            lon_0=float(p.get("lon_0", "0")),
-            radius=float(p.get("a", p.get("R", repr(R_EARTH)))),
-        ))
-    return None
-
-
 def datum_shift_between(src_crs: str, dst_crs: str):
     """(lon, lat column names) -> shifted (lon, lat) columns moving
     geodetic coordinates from ``src_crs``'s datum to ``dst_crs``'s, or
@@ -1260,6 +1724,15 @@ def regrid_nearest(tgt_area, src_area, src_img, value_col: str = "value"):
     join, no UDF, whole plan codegen'd.
     """
     spark = src_img.sparkSession
+
+    def src_pixel():
+        # source (row, col) of the frame's lon/lat columns, Column form
+        sx, sy = forward(src_area.crs)("lon", "lat")
+        return (F.floor(F.round((F.lit(src_area.area_extent[3]) - sy)
+                                / src_area.pixel_size_y, 9)),
+                F.floor(F.round((sx - F.lit(src_area.area_extent[0]))
+                                / src_area.pixel_size_x, 9)))
+
     gs = gridshift_pipeline(tgt_area.crs, src_area.crs)
     if gs is not None:
         # NTv2 grid-shift datum path (NAD27 & friends): bilinear
@@ -1269,14 +1742,7 @@ def regrid_nearest(tgt_area, src_area, src_img, value_col: str = "value"):
         # legs' bbox filters and lookup keys read the target lon/lat,
         # so the inverse sits behind its own barrier.
         t = _apply_gridshift_pipeline(grid_lonlat(tgt_area, spark), gs)
-        fwd = forward(src_area.crs)
-        sx, sy = fwd("lon", "lat")
-        src_row = F.floor(F.round(
-            (F.lit(src_area.area_extent[3]) - sy) / src_area.pixel_size_y, 9))
-        src_col = F.floor(F.round(
-            (sx - F.lit(src_area.area_extent[0])) / src_area.pixel_size_x, 9))
-        return _regrid_gather(t, src_row, src_col, src_area, src_img,
-                              value_col)
+        return _regrid_gather(t, *src_pixel(), src_area, src_img, value_col)
     lon, lat = inverse(tgt_area.crs)("cx", "cy")
     t = tgt_area.grid(spark).select(
         "cell_id", lon.alias("lon"), lat.alias("lat"))
@@ -1307,18 +1773,7 @@ def regrid_nearest(tgt_area, src_area, src_img, value_col: str = "value"):
             shift = datum_shift_between(tgt_area.crs, src_area.crs)
             slon, slat = shift("lon", "lat")
             t = t.select("cell_id", slon.alias("lon"), slat.alias("lat"))
-        fwd = forward(src_area.crs)
-        sx, sy = fwd("lon", "lat")
-        src_row = F.floor(
-            F.round(
-                (F.lit(src_area.area_extent[3]) - sy) / src_area.pixel_size_y, 9
-            )
-        )
-        src_col = F.floor(
-            F.round(
-                (sx - F.lit(src_area.area_extent[0])) / src_area.pixel_size_x, 9
-            )
-        )
+        src_row, src_col = src_pixel()
     return _regrid_gather(t, src_row, src_col, src_area, src_img, value_col)
 
 
@@ -1490,635 +1945,3 @@ def _apply_gridshift_pipeline(t, gs):
         lon2, lat2 = datum_shift("lon", "lat", wgs84, gs["src_helmert"])
         t = t.select("cell_id", lon2.alias("lon"), lat2.alias("lat"))
     return t
-
-
-def inverse_scalar(crs: str):
-    """Driver-side scalar twin of :func:`inverse` — (x, y) floats →
-    (lon, lat) floats — for plan-time geometry (boundary polygons,
-    overlap tests; tens of points). Mirrors functions/geo.py formulas
-    exactly; returns None for points outside the projection domain
-    (e.g. off-disc geos pixels). Honors +x_0/+y_0 and custom sphere
-    radii like the column twins."""
-    fam, p = _family(crs), _params(crs)
-    x0, y0 = _xy_offsets(fam, p)
-    s = _sphere_scale(fam, p)
-    pm, to_m, lon_wrap, ax, gc = _frame_params(fam, p)
-    if x0 or y0 or s != 1.0 or pm != 0.0 or to_m != 1.0 \
-            or lon_wrap is not None or ax != "enu" or gc is not None:
-        import math as _math
-
-        inv = _inverse_scalar_centered(crs)
-
-        def _scalar_shifted(x, y):
-            if ax != "enu":
-                x, y = _axis_inv(ax, x, y, lambda v: -v)
-            out = inv((x * to_m - x0) / s, (y * to_m - y0) / s)
-            if out is None or (pm == 0.0 and lon_wrap is None
-                               and gc is None):
-                return out
-            lon, lat = out
-            if pm != 0.0 or lon_wrap is not None:
-                lon += pm
-                lo = (lon_wrap if lon_wrap is not None else 0.0) - 180.0
-                lon = ((lon - lo) % 360.0 + 360.0) % 360.0 + lo
-            if gc is not None:
-                lat = _math.degrees(_math.atan(
-                    (1.0 - gc) * _math.tan(_math.radians(lat))))
-            return lon, lat
-
-        return _scalar_shifted
-    return _inverse_scalar_centered(crs)
-
-
-def _inverse_scalar_centered(crs: str):
-    import math
-
-    fam, p = _family(crs), _params(crs)
-    R = R_EARTH
-    if fam == "longlat":
-        return lambda x, y: (x, y)
-    if fam == "eqc":
-        return lambda x, y: (math.degrees(x / R), math.degrees(y / R))
-    if fam == "sinu":
-        lon_0 = float(p.get("lon_0", "0"))
-
-        def _sinu_inv(x, y):
-            latr = y / R
-            c = math.cos(latr)
-            if c == 0.0:
-                return None
-            lon = lon_0 + math.degrees(x / (R * c))
-            return ((lon + 540.0) % 360.0) - 180.0, math.degrees(latr)
-
-        return _sinu_inv
-    if fam == "cea":
-        lat_ts = float(p.get("lat_ts", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        k0 = math.cos(math.radians(lat_ts))
-
-        def _cea_inv(x, y):
-            lat = math.degrees(
-                math.asin(max(-1.0, min(1.0, y * k0 / R)))
-            )
-            lon = lon_0 + math.degrees(x / (R * k0))
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _cea_inv
-    if fam == "cea_ell":
-        from pyresample_spark.functions.geo import authalic_constants
-
-        kw = cea_ell_crs_params(crs)
-        cst = authalic_constants(kw["a"], kw["b"])
-        phits = math.radians(kw["lat_ts"])
-        k0e = math.cos(phits) / math.sqrt(
-            1.0 - cst["es"] * math.sin(phits) ** 2)
-
-        def _auth_phi(beta):
-            return math.degrees(
-                beta + cst["c2"] * math.sin(2 * beta)
-                + cst["c4"] * math.sin(4 * beta)
-                + cst["c6"] * math.sin(6 * beta))
-
-        def _cea_ell_inv(x, y):
-            beta = math.asin(max(-1.0, min(1.0,
-                y * 2.0 * k0e / (kw["a"] * cst["qp"]))))
-            lon = kw["lon_0"] + math.degrees(x / (kw["a"] * k0e))
-            return ((lon + 540.0) % 360.0) - 180.0, _auth_phi(beta)
-
-        return _cea_ell_inv
-    if fam == "laea_ell_polar":
-        from pyresample_spark.functions.geo import authalic_constants
-
-        kw = laea_ell_polar_crs_params(crs)
-        cst = authalic_constants(kw["a"], kw["b"])
-
-        def _auth_phi2(beta):
-            return math.degrees(
-                beta + cst["c2"] * math.sin(2 * beta)
-                + cst["c4"] * math.sin(4 * beta)
-                + cst["c6"] * math.sin(6 * beta))
-
-        def _laea_ellp_inv(x, y):
-            rho2 = x * x + y * y
-            q = (cst["qp"] - rho2 / kw["a"] ** 2 if kw["north"]
-                 else rho2 / kw["a"] ** 2 - cst["qp"])
-            beta = math.asin(max(-1.0, min(1.0, q / cst["qp"])))
-            lam = (math.atan2(x, -y) if kw["north"]
-                   else math.atan2(x, y))
-            lon = kw["lon_0"] + math.degrees(lam)
-            return ((lon + 540.0) % 360.0) - 180.0, _auth_phi2(beta)
-
-        return _laea_ellp_inv
-    if fam == "laea_ell_oblique":
-        from pyresample_spark.functions.geo import (
-            laea_ell_oblique_constants,
-        )
-
-        kw = laea_ell_oblique_crs_params(crs)
-        cst = laea_ell_oblique_constants(kw["lat_0"], kw["a"], kw["b"])
-
-        def _auth_phi3(beta):
-            return math.degrees(
-                beta + cst["c2"] * math.sin(2 * beta)
-                + cst["c4"] * math.sin(4 * beta)
-                + cst["c6"] * math.sin(6 * beta))
-
-        def _laea_ello_inv(x, y):
-            xs = x / cst["d"]
-            ys = cst["d"] * y
-            rho = math.hypot(xs, ys)
-            if rho == 0.0:
-                return kw["lon_0"], _auth_phi3(math.asin(cst["sb1"]))
-            ce = 2.0 * math.asin(max(-1.0, min(1.0,
-                rho / (2.0 * cst["rq"]))))
-            beta = math.asin(max(-1.0, min(1.0,
-                math.cos(ce) * cst["sb1"]
-                + ys * math.sin(ce) * cst["cb1"] / rho)))
-            lam = math.atan2(
-                xs * math.sin(ce),
-                rho * cst["cb1"] * math.cos(ce)
-                - ys * cst["sb1"] * math.sin(ce))
-            lon = kw["lon_0"] + math.degrees(lam)
-            return ((lon + 540.0) % 360.0) - 180.0, _auth_phi3(beta)
-
-        return _laea_ello_inv
-    if fam == "lcc_ell":
-        from pyresample_spark.functions.geo import lcc_ell_constants
-
-        kw = lcc_ell_crs_params(crs)
-        cst = lcc_ell_constants(kw["lat_0"], kw["lat_1"], kw["lat_2"],
-                                kw["a"], kw["b"], kw["k0"])
-        e_, n_ = cst["e"], cst["n"]
-        sgn = 1.0 if n_ >= 0 else -1.0
-
-        def _lcc_ell_inv(x, y):
-            xs = sgn * x
-            ys = sgn * (cst["rho0"] - y)
-            rho = math.hypot(xs, ys)
-            t = (sgn * rho / cst["af"]) ** (1.0 / n_)
-            phi = math.pi / 2.0 - 2.0 * math.atan(t)
-            for _ in range(8):
-                phi = math.pi / 2.0 - 2.0 * math.atan(
-                    t * ((1.0 - e_ * math.sin(phi))
-                         / (1.0 + e_ * math.sin(phi))) ** (e_ / 2.0))
-            lon = kw["lon_0"] + math.degrees(
-                sgn * math.atan2(xs, ys) / n_)
-            return ((lon + 540.0) % 360.0) - 180.0, math.degrees(phi)
-
-        return _lcc_ell_inv
-    if fam == "merc_ell":
-        from pyresample_spark.functions.geo import merc_ell_constants
-
-        kw = merc_ell_crs_params(crs)
-        cst = merc_ell_constants(kw["lat_ts"], kw["a"], kw["b"],
-                                 kw["k"])
-        e_, ak = cst["e"], cst["ak"]
-
-        def _merc_ell_inv(x, y):
-            t = math.exp(-y / ak)
-            phi = math.pi / 2.0 - 2.0 * math.atan(t)
-            for _ in range(8):
-                phi = math.pi / 2.0 - 2.0 * math.atan(
-                    t * ((1.0 - e_ * math.sin(phi))
-                         / (1.0 + e_ * math.sin(phi))) ** (e_ / 2.0))
-            lon = kw["lon_0"] + math.degrees(x / ak)
-            return ((lon + 540.0) % 360.0) - 180.0, math.degrees(phi)
-
-        return _merc_ell_inv
-    if fam == "krovak":
-        from pyresample_spark.functions.geo import krovak_constants
-
-        kw = krovak_crs_params(crs)
-        cst = krovak_constants(kw["a"], kw["b"], kw["lat_c"],
-                               kw["lon_0"], kw["alpha_c"], kw["lat_p"],
-                               kw["k"])
-
-        def _krovak_inv(x, y):
-            X, Y = -y, -x  # southing, westing (PROJ default axes)
-            rp = math.hypot(X, Y)
-            D = math.atan2(Y, X) / cst["n"]
-            T = 2.0 * (math.atan(
-                (cst["r0"] / rp) ** (1.0 / cst["n"]) * cst["tanp"]
-            ) - math.pi / 4.0)
-            U = math.asin(cst["cosa"] * math.sin(T)
-                          - cst["sina"] * math.cos(T) * math.cos(D))
-            V = math.asin(math.cos(T) * math.sin(D) / math.cos(U))
-            lon = cst["lon_0"] - math.degrees(V / cst["B"])
-            base = (cst["t0"] ** (-1.0 / cst["B"])
-                    * math.tan(U / 2.0 + math.pi / 4.0)
-                    ** (1.0 / cst["B"]))
-            e_ = cst["e"]
-            phi = U
-            for _ in range(8):
-                phi = 2.0 * (math.atan(
-                    base * ((1.0 + e_ * math.sin(phi))
-                            / (1.0 - e_ * math.sin(phi))) ** (e_ / 2.0)
-                ) - math.pi / 4.0)
-            return ((lon + 540.0) % 360.0) - 180.0, math.degrees(phi)
-
-        return _krovak_inv
-    if fam == "ortho":
-        lat_0 = float(p.get("lat_0", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        s1 = math.sin(math.radians(lat_0))
-        c1 = math.cos(math.radians(lat_0))
-
-        def _ortho_inv(x, y):
-            rho = math.hypot(x, y)
-            if rho > R:
-                return None
-            if rho == 0.0:
-                return lon_0, lat_0
-            sin_c = rho / R
-            cos_c = math.sqrt(max(0.0, 1.0 - sin_c * sin_c))
-            lat = math.degrees(math.asin(
-                max(-1.0, min(1.0, cos_c * s1 + y * sin_c * c1 / rho))
-            ))
-            lon = lon_0 + math.degrees(math.atan2(
-                x * sin_c, rho * cos_c * c1 - y * sin_c * s1
-            ))
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _ortho_inv
-    if fam == "stere_oblique":
-        lat_0 = float(p.get("lat_0", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        k0 = float(p.get("k_0", p.get("k", "1")))
-        s1, c1 = math.sin(math.radians(lat_0)), math.cos(math.radians(lat_0))
-
-        def _stere_ob_inv(x, y):
-            rho = math.hypot(x, y)
-            if rho == 0.0:
-                return lon_0, lat_0
-            cc = 2.0 * math.atan(rho / (2.0 * R * k0))
-            lat = math.degrees(math.asin(max(-1.0, min(1.0,
-                math.cos(cc) * s1 + y * math.sin(cc) * c1 / rho))))
-            lon = lon_0 + math.degrees(math.atan2(
-                x * math.sin(cc),
-                rho * c1 * math.cos(cc) - y * s1 * math.sin(cc)))
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _stere_ob_inv
-    if fam == "aeqd":
-        lat_0 = float(p.get("lat_0", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        s1, c1 = math.sin(math.radians(lat_0)), math.cos(math.radians(lat_0))
-
-        def _aeqd_inv(x, y):
-            rho = math.hypot(x, y)
-            if rho == 0.0:
-                return lon_0, lat_0
-            cc = rho / R
-            lat = math.degrees(math.asin(max(-1.0, min(1.0,
-                math.cos(cc) * s1 + y * math.sin(cc) * c1 / rho))))
-            lon = lon_0 + math.degrees(math.atan2(
-                x * math.sin(cc),
-                rho * c1 * math.cos(cc) - y * s1 * math.sin(cc)))
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _aeqd_inv
-    if fam == "gnom":
-        lat_0 = float(p.get("lat_0", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        s1, c1 = math.sin(math.radians(lat_0)), math.cos(math.radians(lat_0))
-
-        def _gnom_inv(x, y):
-            rho = math.hypot(x, y)
-            if rho == 0.0:
-                return lon_0, lat_0
-            cc = math.atan(rho / R)
-            lat = math.degrees(math.asin(max(-1.0, min(1.0,
-                math.cos(cc) * s1 + y * math.sin(cc) * c1 / rho))))
-            lon = lon_0 + math.degrees(math.atan2(
-                x * math.sin(cc),
-                rho * c1 * math.cos(cc) - y * s1 * math.sin(cc)))
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _gnom_inv
-    if fam == "stere_ell":
-        kw = stere_ell_crs_params(crs)
-        e, sinx1, cosx1, akm1, _es = stere_ell_constants(
-            kw["lat_0"], kw["a"], kw["b"], kw["k0"]
-        )
-        a_, lon_0 = kw["a"], kw["lon_0"]
-
-        def _stere_ell_inv(x, y):
-            xs, ys = x / a_, y / a_
-            rho = math.hypot(xs, ys)
-            cc = 2.0 * math.atan2(rho * cosx1, akm1)
-            if rho == 0.0:
-                chi = math.asin(max(-1.0, min(1.0, sinx1)))
-                lam = 0.0
-            else:
-                chi = math.asin(max(-1.0, min(1.0,
-                    math.cos(cc) * sinx1
-                    + ys * math.sin(cc) * cosx1 / rho)))
-                lam = math.atan2(
-                    xs * math.sin(cc),
-                    rho * cosx1 * math.cos(cc)
-                    - ys * sinx1 * math.sin(cc))
-            tp = math.tan(math.pi / 4.0 + chi / 2.0)
-            phi = chi
-            for _ in range(8):
-                es_ = e * math.sin(phi)
-                phi = 2.0 * math.atan(
-                    tp * ((1.0 + es_) / (1.0 - es_)) ** (e / 2.0)
-                ) - math.pi / 2.0
-            lon = lon_0 + math.degrees(lam)
-            return ((lon + 540.0) % 360.0) - 180.0, math.degrees(phi)
-
-        return _stere_ell_inv
-    if fam == "stere_ell_polar":
-        kw = stere_ell_polar_crs_params(crs)
-        e, fk = stere_ell_polar_constants(
-            kw["lat_ts"], kw["a"], kw["b"], kw["k0"]
-        )
-        a_, lon_0 = kw["a"], kw["lon_0"]
-        sgn = 1.0 if kw["north"] else -1.0
-
-        def _stere_ell_polar_inv(x, y):
-            xs, ys = x, -sgn * y
-            rho = math.hypot(xs, ys)
-            t = rho / (a_ * fk)
-            phi = math.pi / 2.0 - 2.0 * math.atan(t)
-            for _ in range(8):
-                es_ = e * math.sin(phi)
-                phi = math.pi / 2.0 - 2.0 * math.atan(
-                    t * ((1.0 - es_) / (1.0 + es_)) ** (e / 2.0)
-                )
-            lon = lon_0 + sgn * math.degrees(math.atan2(xs, ys))
-            return ((lon + 540.0) % 360.0) - 180.0, sgn * math.degrees(phi)
-
-        return _stere_ell_polar_inv
-    if fam == "stere":
-        lat0 = float(p.get("lat_0", "90"))
-        lat_ts = float(p.get("lat_ts", lat0))
-        lon_0 = float(p.get("lon_0", "0"))
-        sign = 1.0 if lat0 > 0 else -1.0
-        k0 = (1.0 + math.sin(math.radians(abs(lat_ts)))) / 2.0
-
-        def _stere_inv(x, y):
-            rho = math.hypot(x, y)
-            lat_e = math.pi / 2 - 2.0 * math.atan(rho / (2.0 * R * k0))
-            lon = math.degrees(math.atan2(x, -y * sign)) + lon_0
-            return ((lon + 540.0) % 360.0) - 180.0, math.degrees(lat_e) * sign
-
-        return _stere_inv
-    if fam == "laea":
-        lat0 = math.radians(float(p.get("lat_0", "90")))
-        lon_0 = float(p.get("lon_0", "0"))
-        r_laea = float(p.get("a", p.get("R", repr(R_EARTH))))  # +a or +R
-        s0, c0 = math.sin(lat0), math.cos(lat0)
-
-        def _laea_inv(x, y):
-            rho = math.hypot(x, y)
-            if rho == 0.0:
-                return lon_0, math.degrees(lat0)
-            c = 2.0 * math.asin(max(-1.0, min(1.0, rho / (2.0 * r_laea))))
-            lat = math.degrees(
-                math.asin(max(-1.0, min(1.0,
-                    math.cos(c) * s0 + y * math.sin(c) * c0 / rho)))
-            )
-            lon = lon_0 + math.degrees(
-                math.atan2(x * math.sin(c),
-                           rho * c0 * math.cos(c) - y * s0 * math.sin(c))
-            )
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _laea_inv
-    if fam == "merc":
-        lat_ts = float(p.get("lat_ts", "0"))
-        lon_0 = float(p.get("lon_0", "0"))
-        rk = R * math.cos(math.radians(lat_ts))
-        return lambda x, y: (
-            ((math.degrees(x / rk) + lon_0 + 540.0) % 360.0) - 180.0,
-            90.0 - 2.0 * math.degrees(math.atan(math.exp(-y / rk))),
-        )
-    if fam == "lcc":
-        from pyresample_spark.functions.geo import lcc_constants
-
-        lat0 = float(p.get("lat_0", "0"))
-        lat1 = float(p.get("lat_1", p.get("lat_0", "33")))
-        lat2 = float(p["lat_2"]) if "lat_2" in p else None
-        lon_0 = float(p.get("lon_0", "0"))
-        n, rf, rho0 = lcc_constants(lat0, lat1, lat2, R)
-        sgn = 1.0 if n >= 0 else -1.0
-
-        def _lcc_inv(x, y):
-            xs, ys = x * sgn, (rho0 - y) * sgn
-            rho = sgn * math.hypot(xs, ys)
-            if rho == 0.0:
-                return None
-            lat = 2.0 * math.degrees(math.atan((rf / rho) ** (1.0 / n))) - 90.0
-            lon = math.degrees(math.atan2(xs, ys)) / n + lon_0
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _lcc_inv
-    if fam == "omerc":
-        e1, e2, e3 = omerc_frame(
-            float(p.get("lat_0", "0")), float(p.get("lonc", "0")),
-            float(p.get("alpha", "0")),
-        )
-
-        ct_merc = p.get("ctrack") == "merc"
-
-        def _omerc_inv(x, y):
-            u, t = x / R, y / R
-            cu, su = math.cos(u), math.sin(u)
-            if ct_merc:
-                e = math.exp(t)
-                den = e + 1.0 / e
-                cv, sv = 2.0 / den, (e - 1.0 / e) / den
-            else:
-                cv, sv = math.cos(t), math.sin(t)
-            px = cv * (cu * e1[0] + su * e2[0]) + sv * e3[0]
-            py = cv * (cu * e1[1] + su * e2[1]) + sv * e3[1]
-            pz = cv * (cu * e1[2] + su * e2[2]) + sv * e3[2]
-            lon = math.degrees(math.atan2(py, px))
-            lat = math.degrees(math.asin(max(-1.0, min(1.0, pz))))
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _omerc_inv
-    if fam == "aea":
-        from pyresample_spark.functions.geo import aea_constants
-
-        kw = conic_crs_params(crs)
-        n, c, rho0 = aea_constants(
-            kw["lat_1"], kw["lat_2"], kw["lat_0"], R
-        )
-        sgn = 1.0 if n >= 0 else -1.0
-
-        def _aea_inv(x, y):
-            xs, ys = x * sgn, (rho0 - y) * sgn
-            rho = sgn * math.hypot(xs, ys)
-            lat = math.degrees(math.asin(max(-1.0, min(1.0,
-                (c - (rho * n / R) ** 2) / (2.0 * n)))))
-            lon = kw["lon_0"] + math.degrees(math.atan2(xs, ys)) / n
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _aea_inv
-    if fam == "eqdc":
-        from pyresample_spark.functions.geo import eqdc_constants
-
-        kw = conic_crs_params(crs)
-        n, g, rho0 = eqdc_constants(
-            kw["lat_1"], kw["lat_2"], kw["lat_0"], R
-        )
-        sgn = 1.0 if n >= 0 else -1.0
-
-        def _eqdc_inv(x, y):
-            xs, ys = x * sgn, (rho0 - y) * sgn
-            rho = sgn * math.hypot(xs, ys)
-            lat = math.degrees(g - rho / R)
-            lon = kw["lon_0"] + math.degrees(math.atan2(xs, ys)) / n
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _eqdc_inv
-    if fam == "moll":
-        from pyresample_spark.functions.geo import _MOLL_CX, _MOLL_CY
-
-        lon_0 = float(p.get("lon_0", "0"))
-
-        def _moll_inv(x, y):
-            s = y / (_MOLL_CY * R)
-            if abs(s) > 1.0:
-                return None
-            theta = math.asin(s)
-            lat = math.degrees(math.asin(max(-1.0, min(1.0,
-                (2.0 * theta + math.sin(2.0 * theta)) / math.pi))))
-            ct = math.cos(theta)
-            if ct == 0.0:
-                return lon_0, lat
-            lon = lon_0 + math.degrees(x / (_MOLL_CX * R * ct))
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _moll_inv
-    if fam == "robin":
-        from pyresample_spark.functions.geo import (
-            _ROBIN_CX,
-            _ROBIN_CY,
-            _ROBIN_X,
-            _ROBIN_Y,
-        )
-
-        lon_0 = float(p.get("lon_0", "0"))
-
-        def _robin_inv(x, y):
-            v = min(abs(y) / (_ROBIN_CY * R), 1.0)
-            i = min(sum(1 for e in _ROBIN_Y if e <= v) - 1, 17)
-            fr = (v - _ROBIN_Y[i]) / (_ROBIN_Y[i + 1] - _ROBIN_Y[i])
-            lat = 5.0 * (i + fr) * (1.0 if y >= 0 else -1.0)
-            bx = _ROBIN_X[i] + (_ROBIN_X[i + 1] - _ROBIN_X[i]) * fr
-            lon = lon_0 + math.degrees(x / (_ROBIN_CX * R * bx))
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _robin_inv
-    if fam == "tmerc":
-        kw = tmerc_crs_params(crs)
-        rk = kw["radius"] * kw["k"]
-        lat0r = math.radians(kw["lat_0"])
-
-        def _tmerc_inv(x, y):
-            xp = (x - kw["x_0"]) / rk
-            d = (y - kw["y_0"]) / rk + lat0r
-            lat = math.degrees(math.asin(math.sin(d) / math.cosh(xp)))
-            lon = kw["lon_0"] + math.degrees(
-                math.atan2(math.sinh(xp), math.cos(d))
-            )
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _tmerc_inv
-    if fam == "tmerc_ell":
-        from pyresample_spark.functions.geo import tmerc_ell_constants
-
-        kw = tmerc_ell_crs_params(crs)
-        cst = tmerc_ell_constants(kw["a"], kw["b"], kw["lat_0"])
-        a_, es, ep2, e1 = kw["a"], cst["es"], cst["ep2"], cst["e1"]
-
-        def _tmerc_ell_inv(x, y):
-            m = cst["M0"] + (y - kw["y_0"]) / kw["k"]
-            mu = m / (a_ * cst["m0c"])
-            phi1 = (mu
-                    + (3 * e1 / 2 - 27 * e1 ** 3 / 32) * math.sin(2 * mu)
-                    + (21 * e1 ** 2 / 16 - 55 * e1 ** 4 / 32)
-                    * math.sin(4 * mu)
-                    + (151 * e1 ** 3 / 96) * math.sin(6 * mu)
-                    + (1097 * e1 ** 4 / 512) * math.sin(8 * mu))
-            s1, c1, t1 = math.sin(phi1), math.cos(phi1), math.tan(phi1)
-            cc1, tt1 = ep2 * c1 * c1, t1 * t1
-            n1 = a_ / math.sqrt(1 - es * s1 * s1)
-            r1 = a_ * (1 - es) / (1 - es * s1 * s1) ** 1.5
-            d = (x - kw["x_0"]) / (n1 * kw["k"])
-            d2 = d * d
-            lat = math.degrees(phi1 - (n1 * t1 / r1) * (d2 / 2.0) * (
-                1.0 - d2 / 12.0 * ((5 + 3 * tt1 + 10 * cc1
-                                    - 4 * cc1 * cc1 - 9 * ep2)
-                                   - d2 / 30.0 * (61 + 90 * tt1
-                                                  + 298 * cc1
-                                                  + 45 * tt1 * tt1
-                                                  - 252 * ep2
-                                                  - 3 * cc1 * cc1))))
-            lon = kw["lon_0"] + math.degrees(d * (
-                1.0 - d2 / 6.0 * ((1 + 2 * tt1 + cc1)
-                                  - d2 / 20.0 * (5 - 2 * cc1 + 28 * tt1
-                                                 - 3 * cc1 * cc1
-                                                 + 8 * ep2
-                                                 + 24 * tt1 * tt1))) / c1)
-            return ((lon + 540.0) % 360.0) - 180.0, lat
-
-        return _tmerc_ell_inv
-    if fam == "geos_ell":
-        from pyresample_spark.functions.geo import geos_ell_constants
-
-        a_, b_ = _ellipsoid_ab(p)
-        h = float(p.get("h", "35785831"))
-        lon_0 = float(p.get("lon_0", "0"))
-        sweep = p.get("sweep", "y")
-        rp, _rp2, rpi2, rg, rg1, cc = geos_ell_constants(h, a_, b_)
-
-        def _geos_ell_inv(x, y):
-            xs, ys = x / (a_ * rg1), y / (a_ * rg1)
-            if sweep == "x":
-                vz = math.tan(ys)
-                vy = math.tan(xs) * math.hypot(1.0, vz)
-            else:
-                vy = math.tan(xs)
-                vz = math.tan(ys) * math.hypot(1.0, vy)
-            az = vz / rp
-            aa = vy * vy + az * az + 1.0
-            det = 4.0 * rg * rg - 4.0 * aa * cc
-            if det < 0.0:
-                return None
-            k = (2.0 * rg - math.sqrt(det)) / (2.0 * aa)
-            wx, wy, wz = rg - k, vy * k, vz * k
-            lam = math.atan2(wy, wx)
-            phi = math.atan(wz * math.cos(lam) / wx)
-            lon = ((math.degrees(lam) + lon_0 + 540.0) % 360.0) - 180.0
-            return lon, math.degrees(math.atan(rpi2 * math.tan(phi)))
-
-        return _geos_ell_inv
-    # geos
-    h = float(p.get("h", "35785831"))
-    lon_0 = float(p.get("lon_0", "0"))
-    sweep = p.get("sweep", "y")
-    rg = 1.0 + h / _declared_sphere_radius(p)
-
-    def _geos_inv(x, y):
-        if sweep == "x":
-            vz = math.tan(y / h)
-            vy = math.tan(x / h) * math.hypot(1.0, vz)
-        else:
-            vy = math.tan(x / h)
-            vz = math.tan(y / h) * math.hypot(1.0, vy)
-        a = vy * vy + vz * vz + 1.0
-        b = -2.0 * rg
-        det = b * b - 4.0 * a * (rg * rg - 1.0)
-        if det < 0.0:
-            return None
-        k = (-b - math.sqrt(det)) / (2.0 * a)
-        wx, wy, wz = rg - k, vy * k, vz * k
-        lam = math.atan2(wy, wx)
-        lon = ((math.degrees(lam) + lon_0 + 540.0) % 360.0) - 180.0
-        return lon, math.degrees(math.atan(wz * math.cos(lam) / wx))
-
-    return _geos_inv

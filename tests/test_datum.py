@@ -234,25 +234,54 @@ def test_parse_towgs84_rejects_bad_arity():
         parse_towgs84("1,2,3,4")
 
 
+# one CRS per family with a SQL forward twin (operators/crs.py
+# _FAMILIES rows whose sql is set)
+SQL_FAMILY_SAMPLES = {
+    "eqc": "+proj=eqc",
+    "stere_oblique": "+proj=stere +lat_0=52 +lon_0=10 +k_0=0.9999",
+    "stere_ell": "+proj=stere +lat_0=52.0 +lon_0=10.0 +ellps=bessel",
+    "stere_ell_polar": "+proj=stere +lat_0=90 +lat_ts=70 +ellps=WGS84",
+    "laea": "+proj=laea +lat_0=45 +lon_0=10",
+    "laea_ell_polar": "+proj=laea +lat_0=90 +ellps=WGS84",
+    "laea_ell_oblique": "+proj=laea +lat_0=52 +lon_0=10 +ellps=GRS80",
+    "merc": "+proj=merc +lat_ts=20",
+    "merc_ell": "+proj=merc +lat_ts=20 +ellps=WGS84",
+    "lcc_ell": ("+proj=lcc +lat_0=46.5 +lat_1=49 +lat_2=44 +lon_0=3 "
+                "+ellps=GRS80"),
+    "cea_ell": "+proj=cea +lat_ts=30 +ellps=WGS84",
+    "tmerc": "+proj=tmerc +lon_0=9 +k=0.9996",
+    "tmerc_ell": ("+proj=tmerc +lat_0=49 +lon_0=-2 +k=0.9996012717 "
+                  "+ellps=airy"),
+    "krovak": "+proj=krovak",
+}
+
+
 def test_forward_sql_twin_matches_column(spark):
     # the engine-shared SQL forward used inside the datum let chain
-    # must agree with the Column forward builder bit-for-bit
+    # must agree with the Column forward builder bit-for-bit, for every
+    # family that has one, bare and inside a non-trivial frame (false
+    # origin, unit, prime meridian)
     from pyspark.sql import functions as F
 
-    from pyresample_spark.operators.crs import forward
+    from pyresample_spark.operators.crs import _FAMILIES, _family, forward
 
-    crs = "+proj=stere +lat_0=52.0 +lon_0=10.0 +ellps=bessel"
+    assert set(SQL_FAMILY_SAMPLES) == {
+        fam for fam, row in _FAMILIES.items() if row.sql is not None}
     df = spark.createDataFrame(
-        [(i, lo, la) for i, (lo, la) in enumerate(_PTS)],
-        "cell_id long, lon double, lat double",
+        _PTS + [(lon, lat) for lon in (-7.3, 3.1, 15.2, 21.4)
+                for lat in (41.3, 49.9, 60.7, 70.2)],
+        "lon double, lat double",
     )
-    fx, fy = forward_sql(crs)("lon", "lat")
-    cx, cy = forward(crs)("lon", "lat")
-    rows = df.select(
-        (F.expr(fx) - cx).alias("dx"), (F.expr(fy) - cy).alias("dy")
-    ).collect()
-    for r in rows:
-        assert r.dx == 0.0 and r.dy == 0.0
+    for fam, base in SQL_FAMILY_SAMPLES.items():
+        assert _family(base) == fam, base
+        for crs in (base, base + " +x_0=1234.5 +y_0=-77 +units=km +pm=paris"):
+            fx, fy = forward_sql(crs)("lon", "lat")
+            cx, cy = forward(crs)("lon", "lat")
+            bad = df.select(
+                F.expr(fx).alias("fx"), F.expr(fy).alias("fy"),
+                cx.alias("cx"), cy.alias("cy"),
+            ).filter("NOT (fx <=> cx) OR NOT (fy <=> cy)").collect()
+            assert not bad, (crs, bad[:3])
 
 
 def test_regrid_datum_plan_is_bounded(spark):

@@ -598,63 +598,99 @@ def test_stere_oblique_roundtrip_and_dispatch(spark):
     assert abs(r.x) < 1e-6 and abs(r.y) < 1e-6
 
 
+def _sym(h):
+    return (-h, h), (-h, h)
+
+
+# one sample CRS per row of operators/crs.py _FAMILIES, with the (x, y)
+# window its scalar/Column inverse pair is checked on
+FAMILY_SAMPLES = {
+    "longlat": ("+proj=longlat", (-170.0, 170.0), (-80.0, 80.0)),
+    "eqc": ("+proj=eqc", *_sym(3e6)),
+    "stere": ("+proj=stere +lat_0=90 +lat_ts=70", *_sym(2e6)),
+    "stere_oblique": ("+proj=stere +lat_0=52 +lon_0=10 +k_0=0.9999",
+                      *_sym(2e6)),
+    "stere_ell": ("+proj=stere +lat_0=52 +lon_0=5.38 +k=0.9999079 "
+                  "+ellps=bessel", *_sym(2e6)),
+    "stere_ell_polar": ("+proj=stere +lat_0=90 +lat_ts=70 +ellps=WGS84",
+                        *_sym(2e6)),
+    "aeqd": ("+proj=aeqd +lat_0=40 +lon_0=-100", *_sym(3e6)),
+    "gnom": ("+proj=gnom +lat_0=40 +lon_0=-100", *_sym(3e6)),
+    "ortho": ("+proj=ortho +lat_0=45 +lon_0=10", *_sym(3e6)),
+    "laea": ("+proj=laea +lat_0=-90", *_sym(2e6)),
+    "laea_ell_polar": ("+proj=laea +lat_0=90 +ellps=WGS84", *_sym(4e6)),
+    "laea_ell_oblique": ("+proj=laea +lat_0=52 +lon_0=10 +ellps=GRS80",
+                         *_sym(2e6)),
+    "merc": ("+proj=merc +lat_ts=20", *_sym(4e6)),
+    "merc_ell": ("+proj=merc +lat_ts=20 +ellps=WGS84", *_sym(4e6)),
+    "lcc": ("+proj=lcc +lat_0=35 +lat_1=33 +lat_2=45 +lon_0=-95",
+            *_sym(2e6)),
+    "lcc_ell": ("+proj=lcc +lat_0=46.5 +lat_1=49 +lat_2=44 +lon_0=3 "
+                "+ellps=GRS80", *_sym(1e6)),
+    "cea": ("+proj=cea +lat_ts=30", *_sym(4e6)),
+    "cea_ell": ("+proj=cea +lat_ts=30 +ellps=WGS84", *_sym(4e6)),
+    "sinu": ("+proj=sinu +lon_0=0", *_sym(4e6)),
+    "moll": ("+proj=moll +lon_0=0", *_sym(6e6)),
+    "robin": ("+proj=robin +lon_0=0", *_sym(6e6)),
+    "aea": ("+proj=aea +lat_1=29.5 +lat_2=45.5 +lat_0=23 +lon_0=-96",
+            *_sym(2e6)),
+    "eqdc": ("+proj=eqdc +lat_1=20 +lat_2=60 +lat_0=40 +lon_0=-96",
+             *_sym(2e6)),
+    "tmerc": ("+proj=tmerc +lon_0=9 +k=0.9996", *_sym(2e6)),
+    "tmerc_ell": ("+proj=tmerc +lat_0=49 +lon_0=-2 +k=0.9996012717 "
+                  "+ellps=airy", *_sym(3e5)),
+    "krovak": ("+proj=krovak", (-9e5, -5e5), (-1.3e6, -9e5)),
+    "omerc": ("+proj=omerc +lat_0=25 +lonc=10 +alpha=40", *_sym(2e6)),
+    "geos": ("+proj=geos +h=35785831 +lon_0=0", *_sym(4e6)),
+    # wide enough to reach off-disc corners (NULL / None)
+    "geos_ell": ("+proj=geos +h=35785831 +lon_0=0 +ellps=WGS84",
+                 *_sym(6e6)),
+}
+
+
 def test_inverse_scalar_matches_column_inverse_all_families(spark):
     """The driver-side scalar inverse (plan-time geometry: boundaries,
     overlap tests) and the executor-side column inverse are two
     implementations of the same math — they must agree to ~1e-9° for
-    every analytic family, on-domain and (as NULL/None) off-domain."""
-    from pyspark.sql import functions as F
+    every row of the family table, on-domain and (as NULL/None)
+    off-domain."""
+    from pyresample_spark.operators.crs import (
+        _FAMILIES,
+        _family,
+        inverse,
+        inverse_scalar,
+    )
 
-    from pyresample_spark.operators.crs import inverse, inverse_scalar
-
-    cases = {
-        "+proj=eqc": (-3e6, 3e6),
-        "+proj=stere +lat_0=90 +lat_ts=70": (-2e6, 2e6),
-        "+proj=stere +lat_0=52 +lon_0=10 +k_0=0.9999": (-2e6, 2e6),
-        "+proj=laea +lat_0=-90": (-2e6, 2e6),
-        "+proj=merc +lat_ts=20": (-4e6, 4e6),
-        "+proj=lcc +lat_0=35 +lat_1=33 +lat_2=45 +lon_0=-95": (-2e6, 2e6),
-        "+proj=geos +h=35785831 +lon_0=0": (-4e6, 4e6),
-        "+proj=tmerc +lon_0=9 +k=0.9996": (-2e6, 2e6),
-        "+proj=utm +zone=33": (-3e5, 3e5),
-        "+proj=sinu +lon_0=0": (-4e6, 4e6),
-        "+proj=cea +lat_ts=30": (-4e6, 4e6),
-        "+proj=ortho +lat_0=45 +lon_0=10": (-3e6, 3e6),
-        "+proj=aea +lat_1=29.5 +lat_2=45.5 +lat_0=23 +lon_0=-96": (-2e6, 2e6),
-        "+proj=eqdc +lat_1=20 +lat_2=60 +lat_0=40 +lon_0=-96": (-2e6, 2e6),
-        "+proj=moll +lon_0=0": (-6e6, 6e6),
-        "+proj=robin +lon_0=0": (-6e6, 6e6),
-    }
+    assert set(FAMILY_SAMPLES) == set(_FAMILIES)
     pts = [(dx, dy) for dx in (-1.0, -0.37, 0.0, 0.41, 1.0)
            for dy in (-1.0, -0.53, 0.0, 0.29, 1.0)]
-    for crs, (lo, hi) in cases.items():
-        xy = [(lo + (dx + 1) / 2 * (hi - lo), lo + (dy + 1) / 2 * (hi - lo))
-              for dx, dy in pts]
+
+    def xyz(lon, lat):
+        lo, la = math.radians(lon), math.radians(lat)
+        return (math.cos(la) * math.cos(lo),
+                math.cos(la) * math.sin(lo), math.sin(la))
+
+    for fam, (crs, (xlo, xhi), (ylo, yhi)) in FAMILY_SAMPLES.items():
+        assert _family(crs) == fam, crs
+        xy = [(xlo + (dx + 1) / 2 * (xhi - xlo),
+               ylo + (dy + 1) / 2 * (yhi - ylo)) for dx, dy in pts]
         df = spark.createDataFrame(xy, "x double, y double")
         lon_c, lat_c = inverse(crs)("x", "y")
         got = df.select(
             "x", "y", lon_c.alias("lon"), lat_c.alias("lat")
         ).collect()
         scalar = inverse_scalar(crs)
-
-        def xyz(lon, lat):
-            import math
-
-            lo, la = math.radians(lon), math.radians(lat)
-            return (math.cos(la) * math.cos(lo),
-                    math.cos(la) * math.sin(lo), math.sin(la))
-
         for r in got:
             sv = scalar(r.x, r.y)
             if r.lon is None or r.lat is None:
-                assert sv is None, (crs, r.x, r.y, sv)
+                assert sv is None, (fam, r.x, r.y, sv)
                 continue
-            assert sv is not None, (crs, r.x, r.y)
+            assert sv is not None, (fam, r.x, r.y)
             # compare unit-sphere positions: at the exact pole the
             # longitude is undefined and implementations may differ
             a, b = xyz(sv[0], sv[1]), xyz(r.lon, r.lat)
             d = sum((u - v) ** 2 for u, v in zip(a, b)) ** 0.5
-            assert d < 1e-9, (crs, r.x, r.y, sv, (r.lon, r.lat), d)
+            assert d < 1e-9, (fam, r.x, r.y, sv, (r.lon, r.lat), d)
 
 
 def test_area_yaml_preserves_ctrack_flag():

@@ -16,6 +16,17 @@ stays one row per target, so the comparison isolates the probe-side
 explode factor (27 cells vs 2 own-cells) and the grid-0 ownership
 filter shift2 applies after its join (each pair kept once).
 
+Every (operator, scheme, n) cell runs under both cell-join topologies,
+and each output line names its own:
+- ``broadcast``: the session default. The small parquet source is
+  broadcast and the range-generated target grid is already partitioned
+  on tgt_id, so no exchange runs and shuffle_write reads 0.
+- ``shuffle``: ``spark.sql.autoBroadcastJoinThreshold=-1``, which
+  operators/knn.py broadcast_bound maps to "no broadcast", so both sides
+  hash-partition on the cell key. This is the trade-off the shift2 tier
+  exists for (fewer probe rows on the wire). The conf is restored after
+  each cell.
+
 Run: python tools/scale_probe_knn_gauss.py [N ...]  (default 1 4 16 64)
 """
 
@@ -24,6 +35,7 @@ from __future__ import annotations
 import os
 import sys
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,6 +43,22 @@ from pyspark.sql import functions as F
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 UI_PORT = int(os.environ.get("SPARK_GRAFT_UI_PORT", "4048"))
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+TOPOLOGIES = ("broadcast", "shuffle")
+
+
+@contextmanager
+def topology(spark, name: str):
+    """Run the block under one cell-join topology: ``broadcast`` keeps
+    the session's threshold, ``shuffle`` disables broadcasting; the
+    session's threshold is restored on exit."""
+    old = spark.conf.get(THRESHOLD)
+    if name == "shuffle":
+        spark.conf.set(THRESHOLD, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(THRESHOLD, old)
 
 
 def amplified_src(spark, n: int):
@@ -87,28 +115,32 @@ def main():
 
     for label, build in (("gauss_fold", gauss_build), ("knn_join", knn_build)):
         for scheme in ("c27", "shift2"):
-            # warm: JIT + codegen on the 1x shape, untimed
-            build(spark, 1, scheme).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            for topo in TOPOLOGIES:
+                with topology(spark, topo):
+                    # warm: JIT + codegen on the 1x shape, untimed
+                    build(spark, 1, scheme).write.format("noop").mode(
+                        "overwrite"
+                    ).save()
             for n in ns:
-                gid = f"knn_gauss:{label}:{scheme}:{n}"
-                sc.setJobGroup(gid, label)
-                df = build(spark, n, scheme)
-                t0 = time.time()
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                stages = [st for st in rest.group(gid)["stages"]
-                          if st["status"] == "COMPLETE"]
-                tot = stage_totals(stages)
-                print(
-                    f"{label}/{scheme} n={n}: wall={dt:.2f}s "
-                    f"stages={len(stages)} "
-                    f"shuffle_write={tot['shuffle_write_records']:,} rec "
-                    f"/ {tot['shuffle_write_mb']:.1f} MB "
-                    f"load1={os.getloadavg()[0]:.1f}",
-                    flush=True,
-                )
+                for topo in TOPOLOGIES:
+                    gid = f"knn_gauss:{label}:{scheme}:{topo}:{n}"
+                    sc.setJobGroup(gid, label)
+                    with topology(spark, topo):
+                        df = build(spark, n, scheme)
+                        t0 = time.time()
+                        df.write.format("noop").mode("overwrite").save()
+                        dt = time.time() - t0
+                    stages = [st for st in rest.group(gid)["stages"]
+                              if st["status"] == "COMPLETE"]
+                    tot = stage_totals(stages)
+                    print(
+                        f"{label}/{scheme} {topo} n={n}: wall={dt:.2f}s "
+                        f"stages={len(stages)} "
+                        f"shuffle_write={tot['shuffle_write_records']:,} rec "
+                        f"/ {tot['shuffle_write_mb']:.1f} MB "
+                        f"load1={os.getloadavg()[0]:.1f}",
+                        flush=True,
+                    )
 
 
 if __name__ == "__main__":
